@@ -14,11 +14,10 @@ Each TYPE_DECL gets one BINDING row per (method name, signature) it answers:
   void(Integer) / void(Number) / void(Object)).
 
 Scale shape: the binding relation is |methods| + |closure⋈methods| rows of
-narrow strings; the inheritance closure is the same iterated self-join the
-dynamic call linker already materializes (DynamicCallLinker.scala:37-42), so
-at 10^12-file scale this pass is two broadcast-ish joins over deduplicated
-dimensions — no scan of the big node table beyond the pushed-down
-kind-filters.
+narrow strings; the inheritance closure is the one the dynamic call linker
+also consumes (DynamicCallLinker.scala:37-42), so at 10^12-file scale this
+pass is two broadcast-ish joins over deduplicated dimensions — no scan of
+the big node table beyond the pushed-down kind-filters.
 """
 
 from __future__ import annotations
@@ -34,9 +33,9 @@ def _arity(sig_col):
         F.size(F.split(inner, ",")))
 
 
-def binding_relation(nodes: DataFrame,
-                     closure: DataFrame | None = None) -> DataFrame:
-    """-> (td_fn, bname, bsig, target_fn) — the logical vtable."""
+def binding_relation(nodes: DataFrame, closure: DataFrame) -> DataFrame:
+    """-> (td_fn, bname, bsig, target_fn) — the logical vtable; ``closure``
+    is ``callgraph.inheritance_closure`` over the same nodes."""
     own = (nodes.filter((F.col("kind") == M.METHOD)
                         & (F.col("ast_parent_type") == M.TYPE_DECL)
                         & (F.col("ast_parent_full_name") != ""))
@@ -58,19 +57,6 @@ def binding_relation(nodes: DataFrame,
     base = (own.withColumn("prio", F.lit(0))
             .unionByName(ext.withColumn("prio", F.lit(1))))
 
-    if closure is None:
-        from joern_spark.operators.callgraph import inheritance_closure
-        # the iterative closure loop is driver-eager; skip it entirely when
-        # the corpus has no inheritance (same early-exit the dynamic call
-        # linker uses, DynamicCallLinker.scala:56-59)
-        has_inh = not (nodes.filter((F.col("kind") == M.TYPE_DECL)
-                                    & F.col("inherits_from").isNotNull())
-                       .limit(1).isEmpty())
-        if has_inh:
-            closure = inheritance_closure(nodes)
-        else:
-            closure = nodes.sparkSession.createDataFrame(
-                [], "desc string, anc string")
     # ancestor bindings flow down; constructors do not inherit
     anc = (closure.select(F.col("desc").alias("td_fn"),
                           F.col("anc").alias("anc_fn"))
@@ -95,19 +81,16 @@ def binding_relation(nodes: DataFrame,
                           F.struct("prio", "target_fn")).alias("target_fn")))
 
 
-def binding_nodes_and_edges(nodes: DataFrame,
-                            closure: DataFrame | None = None,
-                            rel: DataFrame | None = None
+def binding_nodes_and_edges(nodes: DataFrame, rel: DataFrame
                             ) -> tuple[DataFrame, DataFrame]:
-    """Materialize the vtable as BINDING nodes + BINDS/REF edges.
+    """Materialize the vtable ``rel`` (``binding_relation``) as BINDING nodes
+    + BINDS/REF edges.
 
     Node id hashes (td_fn, name, sig) — globally stable, no shuffle beyond
     the relation's own joins. Edges: TYPE_DECL -BINDS-> BINDING and
     BINDING -REF-> METHOD (by fullname, deduplicated dimension join).
     Parse-time BINDING rows already carry their own node/edges; they are
     excluded here by an anti-join on the id."""
-    if rel is None:
-        rel = binding_relation(nodes, closure)
     bid = F.xxhash64(F.lit("BINDING"), F.col("td_fn"), F.col("bname"),
                      F.col("bsig"))
 

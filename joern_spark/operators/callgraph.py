@@ -12,15 +12,16 @@
   (c) otherwise AQE skew-join splitting handles the hot keys
       (spark.sql.adaptive.skewJoin.enabled, set in session.py).
 * DynamicCallLinker (DynamicCallLinker.scala:29-221) — SAFEDISPATCH-style:
-  candidates = subclasses*(receiver static type) × lookup(name); inheritance
-  transitive closure computed by an iterative self-join to fixpoint (depth-
-  bounded driver loop with localCheckpoint to cut lineage).
+  candidates = subclasses*(receiver static type) × lookup(name); the
+  inheritance transitive closure is a depth-bounded semi-naive fixed point
+  run inside one pandas task over the (small) INHERITS_FROM base relation.
 * NaiveCallLinker  (NaiveCallLinker.scala:14-27)   — remaining unlinked calls
   joined to methods by bare name.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from joern_spark import model as M
@@ -69,32 +70,40 @@ def method_ref_edges(nodes: DataFrame, dim: DataFrame | None = None) -> DataFram
     return j.select(*_edge(F.col("id"), F.col("m_id"), M.REF))
 
 
-def inheritance_closure(nodes: DataFrame, max_depth: int = 20) -> DataFrame:
-    """(ancestor_fn, descendant_fn) transitive closure of INHERITS_FROM —
-    the reference's subclass cache (DynamicCallLinker.scala:37-42,94-111) as
-    an iterative self-join with per-iteration checkpointing."""
-    base = (nodes.filter((F.col("kind") == M.TYPE_DECL) & F.col("inherits_from").isNotNull())
-            .select(F.col("full_name").alias("desc"), F.explode("inherits_from").alias("anc"))
-            .distinct())
-    closure = base.localCheckpoint(eager=True)
-    frontier = closure
+def _closure_task(pdf: pd.DataFrame, max_depth: int) -> pd.DataFrame:
+    """Semi-naive transitive closure of the distinct (desc, anc) pairs in
+    ``pdf``: each round extends only the pairs found in the round before,
+    for at most ``max_depth`` rounds."""
+    base = set(zip(pdf["desc"], pdf["anc"]))
+    parents: dict[str, list[str]] = {}
+    for desc, anc in base:
+        parents.setdefault(desc, []).append(anc)
+    closure, frontier = set(base), base
     for _ in range(max_depth):
-        step = (frontier.alias("f")
-                .join(base.alias("b"), F.col("f.anc") == F.col("b.desc"))
-                .select(F.col("f.desc").alias("desc"), F.col("b.anc").alias("anc"))
-                .distinct())
-        new = step.join(closure, ["desc", "anc"], "left_anti").localCheckpoint(eager=True)
-        if new.isEmpty():
+        frontier = {(desc, up) for desc, anc in frontier
+                    for up in parents.get(anc, ())} - closure
+        if not frontier:
             break
-        closure = closure.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    return closure
+        closure |= frontier
+    return pd.DataFrame(list(closure), columns=["desc", "anc"], dtype=object)
+
+
+def inheritance_closure(nodes: DataFrame, max_depth: int = 20) -> DataFrame:
+    """(desc, anc) transitive closure of INHERITS_FROM — the reference's
+    subclass cache (DynamicCallLinker.scala:37-42,94-111). The base relation
+    is one row per declared supertype edge, so the whole fixed point runs as
+    a single pandas task (grouped on a constant); no input yields an empty
+    relation."""
+    base = (nodes.filter((F.col("kind") == M.TYPE_DECL) & F.col("inherits_from").isNotNull())
+            .select(F.lit(0).alias("one"), F.col("full_name").alias("desc"),
+                    F.explode("inherits_from").alias("anc")))
+    return base.groupBy("one").applyInPandas(
+        lambda pdf: _closure_task(pdf, max_depth), "desc string, anc string")
 
 
 def dynamic_call_edges(nodes: DataFrame, call_sites: DataFrame,
-                       closure: DataFrame | None = None,
-                       dim: DataFrame | None = None,
-                       bindings: DataFrame | None = None) -> DataFrame:
+                       closure: DataFrame, bindings: DataFrame,
+                       dim: DataFrame | None = None) -> DataFrame:
     """CALL edges for DYNAMIC_DISPATCH: resolve `T.name` against the BINDING
     vtable of T and of every transitive subtype of T (the reference's
     ``validM`` lookup keyed on the binding table, DynamicCallLinker.scala:
@@ -121,11 +130,6 @@ def dynamic_call_edges(nodes: DataFrame, call_sites: DataFrame,
              .withColumn("call_sig", call_sig)
              .withColumn("recv_type", F.expr(r"regexp_replace(base, '\\.[^.]+$', '')"))
              .withColumn("call_name", F.element_at(F.split("base", r"\."), -1)))
-    if closure is None:
-        closure = inheritance_closure(nodes)
-    if bindings is None:
-        from joern_spark.operators.bindings import binding_relation
-        bindings = binding_relation(nodes, closure)
     closure = closure.select(F.col("anc").alias("recv_type"), F.col("desc").alias("impl_type"))
     # candidate receiver types: the static type itself + all transitive subtypes
     self_row = calls.select("recv_type").distinct().withColumn("impl_type", F.col("recv_type"))
@@ -186,13 +190,14 @@ def type_hint_call_edges(call_sites: DataFrame, rewrites: DataFrame,
     return j.select(*_edge(F.col("id"), F.col("m_id"), M.CALL_EDGE))
 
 
-def run_callgraph(nodes: DataFrame, call_sites: DataFrame | None = None,
+def run_callgraph(nodes: DataFrame, closure: DataFrame, bindings: DataFrame,
+                  call_sites: DataFrame | None = None,
                   dim: DataFrame | None = None,
-                  rewrites: DataFrame | None = None,
-                  closure: DataFrame | None = None,
-                  bindings: DataFrame | None = None) -> DataFrame:
-    """``nodes`` = full node relation (incl. stubs); ``call_sites`` the small
-    persisted CALL dimension; ``dim`` the full deduplicated method dimension.
+                  rewrites: DataFrame | None = None) -> DataFrame:
+    """``nodes`` = full node relation (incl. stubs); ``closure`` and
+    ``bindings`` the inheritance closure and binding relation over it;
+    ``call_sites`` the small persisted CALL dimension; ``dim`` the full
+    deduplicated method dimension.
     Probes and anti-joins run against the dimensions only — the big table is
     scanned once per genuinely row-producing linker."""
     if call_sites is None:
@@ -202,13 +207,12 @@ def run_callgraph(nodes: DataFrame, call_sites: DataFrame | None = None,
         dim = method_dimension(nodes).persist()
     static = static_call_edges(call_sites, dim)
     # Early exit mirroring the reference (DynamicCallLinker.scala:56-59):
-    # the iterative inheritance-closure loop only runs when dynamic-dispatch
-    # call sites actually exist — one cheap probe on the call dimension.
+    # dynamic linking only runs when dynamic-dispatch call sites actually
+    # exist — one cheap probe on the call dimension.
     has_dynamic = not call_sites.filter(
         F.col("dispatch_type") == M.DYNAMIC_DISPATCH).isEmpty()
     linked = (static.unionByName(
-        dynamic_call_edges(nodes, call_sites, closure=closure, dim=dim,
-                           bindings=bindings))
+        dynamic_call_edges(nodes, call_sites, closure, bindings, dim=dim))
               if has_dynamic else static)
     # naive linking consumes `linked` twice (anti-join + final union); lazy
     # persist dedupes most of the recompute without an extra warm-up job

@@ -7,114 +7,35 @@ sites pointing at external stubs named with sentinel conventions
 (`<unresolvedNamespace>.foo:<unresolvedSignature>(2)`, Defines.scala:11-22).
 Distributed, we go one step further (this is the north rule's entity-linking
 stage): unresolved stub symbols are *candidate-aliased* to compatible
-internal definitions, the alias-pair graph is collapsed with a
-large-star/small-star connected-components loop, and the per-component
-canonical id (an internal definition when one exists) is applied back to the
-CALL edges.
+internal definitions of the same bare name, the alias pairs are collapsed
+into components, and the per-component canonical id (the lexicographically
+first internal definition) is applied back to the CALL edges.
 
-Skew handling:
-* Candidate pairs join stubs↔internals on the bare method name. Method names
-  are Zipfian (`get`, `main`, `init`…); a global name-equi-join would square
-  the hot keys. Names above ``HOT_NAME_FREQ`` are therefore *excluded from
-  linking*: at corpus scale a name defined in >100 distinct places carries no
-  linkage signal (any pairing would be a guess), and excluding them is what
-  keeps the join skew-free. The hot-name set itself is tiny → the cold-name
-  filter ships as a broadcast — the distributed analogue of the reference's
-  in-memory methodMap.
-* Applying the canonical map to the edge relation is an N:1 join against a
-  small mapping → broadcast; at dictionary sizes beyond broadcast reach the
-  salted-join helper (joern_spark.functions.salted_join) spreads residual
-  hot keys.
+Locality: every candidate pair joins a stub and an internal definition of the
+same bare name, so no alias component crosses a name. The whole fixed point
+therefore runs as one ``groupBy(m_name).applyInPandas`` task per name — a
+union-find inside the task, no driver loop of per-round Spark jobs (resolve
+per block, as SparkER does, not by global iteration).
 
-Connected components: alternating large-star / small-star (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14) — each iteration is
-two groupBy/join rounds over the pair list, converges in O(log n) rounds,
-checkpointed per round to cut lineage.
+Skew: method names are Zipfian (`get`, `main`, `init`…). Names above
+``HOT_NAME_FREQ`` internal definitions are *excluded from linking* before the
+group is formed: at corpus scale a name defined in >100 distinct places
+carries no linkage signal (any pairing would be a guess), and excluding them
+bounds every group at ``HOT_NAME_FREQ`` internals. Applying the canonical map
+to the edge relation is an N:1 join against a small mapping whose physical
+strategy AQE decides.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Window, functions as F
 
 from joern_spark import model as M
 
 HOT_NAME_FREQ = 100
 
-
-# --------------------------------------------------------------------------- #
-# Connected components — large-star / small-star.
-# --------------------------------------------------------------------------- #
-
-def connected_components(pairs: DataFrame, max_iter: int = 15) -> DataFrame:
-    """``pairs(u, v)`` undirected long-id edges → ``(node, root)`` with root =
-    min id of the node's component. Isolated nodes are absent (callers union
-    an identity map when needed)."""
-    def _swap(df):
-        return df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-
-    def _large_star(df):
-        # symmetrize, then hang every larger neighbor of u off the minimum
-        # of Γ(u) ∪ {u}
-        both = df.union(_swap(df)).distinct()
-        mins = (both.groupBy("u").agg(F.min("v").alias("mn"))
-                .withColumn("mn", F.least("mn", F.col("u"))))
-        return (both.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-                .distinct())
-
-    def _small_star(df):
-        # orient high→low, then hang every low neighbor (and u) off the
-        # minimum of the low neighborhood
-        d = (df.select(F.greatest("u", "v").alias("u"),
-                       F.least("u", "v").alias("v"))
-             .filter(F.col("u") != F.col("v"))
-             .distinct())
-        mins = d.groupBy("u").agg(F.min("v").alias("mn"))
-        return (d.join(mins, "u")
-                .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-                .union(mins.select("u", F.col("mn").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct())
-
-    def _sig(df):
-        # order-insensitive set signature in ONE job: (count, xor of row
-        # hashes). Both iterates are distinct sets, so equal signatures ⇔
-        # equal sets up to a 64-bit hash collision — vs the previous two
-        # exceptAll jobs per iteration, this halves driver round-trips in
-        # the loop (the CC tail is fixed-latency-dominated at sandbox sizes).
-        r = df.agg(F.count("*").alias("c"),
-                   F.expr("bit_xor(xxhash64(u, v))").alias("h")).collect()[0]
-        return (r["c"], r["h"])
-
-    e = (pairs.select("u", "v").filter(F.col("u") != F.col("v"))
-         .distinct().localCheckpoint(eager=True))
-    sig = _sig(e)
-    converged = False
-    for _ in range(max_iter):
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        new_sig = _sig(new_e)
-        e = new_e
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        # a partially merged component map would silently yield wrong roots
-        # downstream (canonicalization would rewrite edges through an
-        # inconsistent mapping) — fail loudly instead.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations; "
-            "raise max_iter (component diameter exceeds 2^max_iter)")
-
-    # at the fixpoint the edge list is a star: (node, root) with root < node
-    return e.groupBy("u").agg(F.min("v").alias("root")).select(
-        F.col("u").alias("node"), "root")
-
-
-# --------------------------------------------------------------------------- #
-# Candidate alias pairs over the method dimension.
-# --------------------------------------------------------------------------- #
 
 def _stub_arity(col):
     """Arity encoded in `<unresolvedSignature>(n)` fullnames, else null
@@ -123,90 +44,88 @@ def _stub_arity(col):
     return F.when(ex != "", ex.cast("int"))
 
 
-def candidate_alias_pairs(dim: DataFrame,
-                          hot_name_freq: int = HOT_NAME_FREQ) -> DataFrame:
-    """(u, v) symbol-id pairs linking unresolved external stubs to compatible
-    internal definitions. ``dim`` = the full method dimension
-    (m_fn, m_id, m_name, is_external, m_parent, m_sig).
+def _canonical_in_name(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One bare name's alias components. A stub pairs with every internal
+    whose arity matches its recorded arity (any internal when the stub
+    records none, or when the internal has no signature); union-find over
+    the internals a stub bridges, with the root kept at the smallest
+    (m_fn, m_id) so it is the component's canonical symbol.
 
-    Rules (all exact-name):
-      * stub fullname carries `<unresolvedNamespace>` / `<unresolvedSignature>`
-        → pair with any internal method of the same name whose declared arity
-        matches the stub's recorded arity (when present);
-      * bare-name stubs (C-style, fullname == name) → internal same-name.
-    Hot names (freq > hot_name_freq among internals) are excluded from
-    global pairing — at corpus scale they are library symbols with a
-    broadcast-dictionary fast path, not linkage candidates.
-    """
-    stubs = (dim.filter(F.col("is_external")
-                        & ~F.col("m_name").startswith("<operator>")
-                        & (F.col("m_name") != ""))
-             .filter(F.col("m_fn").contains(M.UNRESOLVED_NAMESPACE)
-                     | F.col("m_fn").contains(M.UNRESOLVED_SIGNATURE)
-                     | (F.col("m_fn") == F.col("m_name")))
-             .select(F.col("m_id").alias("u"), F.col("m_name").alias("name"),
-                     _stub_arity(F.col("m_fn")).alias("stub_arity")))
-    internals = (dim.filter(~F.col("is_external") & (F.col("m_name") != ""))
-                 .select(F.col("m_id").alias("v"), F.col("m_name").alias("name"),
-                         F.col("m_sig").alias("sig")))
+    Rows for stubs only. A shared stub can bridge two same-name internal
+    definitions into one component; a row for an internal member would let
+    canonicalize_call_edges move a correctly static-linked CALL edge onto
+    another definition, and the reference never re-points a resolved
+    internal target (StaticCallLinker.scala:23-28)."""
+    ints = pdf[~pdf["is_stub"]].sort_values(["m_fn", "m_id"])
+    stubs = pdf[pdf["is_stub"]]
+    sig_arity = ints["sig_arity"].to_numpy()
+    no_sig = ints["no_sig"].to_numpy()
+    parent = list(range(len(ints)))
 
-    freq = internals.groupBy("name").agg(F.count("*").alias("nfreq"))
-    cold = freq.filter(F.col("nfreq") <= hot_name_freq).select("name")
-    # cold-name dictionary is ∝ |distinct names| — method-scale, so the join
-    # strategy is AQE-decided rather than force-broadcast
-    # (static_call_edges precedent in operators/callgraph.py).
-    internals = internals.join(cold, "name")
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
 
-    sig_inner = F.regexp_extract("sig", r"\((.*)\)", 1)
+    linked = []  # (stub id, first internal it pairs with)
+    for stub_id, arity in zip(stubs["m_id"], stubs["stub_arity"]):
+        hits = np.flatnonzero(np.isnan(arity) | no_sig | (sig_arity == arity))
+        if not hits.size:
+            continue
+        root = find(hits[0])
+        for h in hits[1:]:
+            lo, hi = sorted((find(h), root))
+            parent[hi] = root = lo
+        linked.append((stub_id, hits[0]))
+    roots = [find(h) for _, h in linked]
+    out = pd.DataFrame({"m_id": np.array([s for s, _ in linked], dtype=np.int64),
+                        "canon_id": ints["m_id"].to_numpy()[roots],
+                        "canon_fn": ints["m_fn"].to_numpy()[roots]})
+    return out[out["m_id"] != out["canon_id"]]
+
+
+def canonical_symbol_map(dim: DataFrame) -> DataFrame:
+    """(m_id → canon_id, canon_fn) over the method dimension ``dim``
+    (m_fn, m_id, m_name, is_external, m_parent, m_sig): per alias component,
+    the canonical symbol is the lexicographically-first internal definition.
+    Symbols outside any component map to themselves (identity rows are
+    omitted — consumers left-join and coalesce).
+
+    Candidates (all exact-name):
+      * stubs: external, not `<operator>`, with a fullname carrying
+        `<unresolvedNamespace>` / `<unresolvedSignature>` or equal to the
+        bare name (C-style);
+      * internals: every non-external definition.
+    Only names with at least one stub and 1..``HOT_NAME_FREQ`` internals
+    reach the per-name task."""
+    name = F.col("m_name")
+    is_stub = (F.col("is_external") & ~name.startswith("<operator>")
+               & (name != "")
+               & (F.col("m_fn").contains(M.UNRESOLVED_NAMESPACE)
+                  | F.col("m_fn").contains(M.UNRESOLVED_SIGNATURE)
+                  | (F.col("m_fn") == name)))
+    is_internal = ~F.col("is_external") & (name != "")
+    sig_inner = F.regexp_extract("m_sig", r"\((.*)\)", 1)
     sig_arity = F.when(sig_inner == "", F.lit(0)).otherwise(
         F.size(F.split(sig_inner, ",")))
-    arity_ok = (F.col("stub_arity").isNull()
-                | (F.col("stub_arity") == sig_arity)
-                | (F.col("sig") == ""))
-    return (stubs.join(internals, "name")
-            .filter(arity_ok)
-            .select("u", "v"))
-
-
-def canonical_symbol_map(dim: DataFrame,
-                         pairs: DataFrame | None = None) -> DataFrame:
-    """(m_id → canon_id, canon_fn): per alias component, the canonical symbol
-    is the lexicographically-first internal definition (falling back to the
-    smallest id). Symbols outside any component map to themselves (identity
-    rows are omitted — consumers left-join and coalesce)."""
-    pairs = pairs if pairs is not None else candidate_alias_pairs(dim)
-    pairs = pairs.persist()
-    if pairs.isEmpty():
-        # nothing to link (e.g. a corpus with no unresolved stubs) — skip the
-        # iterative CC loop entirely, mirroring the reference's early exit
-        # when no dynamic call sites exist (DynamicCallLinker.scala:56-59)
-        return pairs.sparkSession.createDataFrame(
-            [], "m_id long, canon_id long, canon_fn string")
-    cc = connected_components(pairs)
-
-    members = cc.union(
-        cc.select(F.col("root").alias("node"), F.col("root").alias("root"))
-    ).distinct()
-    with_meta = members.join(
-        dim.select(F.col("m_id").alias("node"), "m_fn", "is_external"), "node")
-    canon = (with_meta.groupBy("root")
-             .agg(F.min(F.when(~F.col("is_external"),
-                               F.struct("m_fn", F.col("node").alias("m_id"))))
-                  .alias("internal"),
-                  F.min(F.struct("m_fn", F.col("node").alias("m_id"))).alias("any"))
-             .select("root",
-                     F.coalesce(F.col("internal.m_id"), F.col("any.m_id")).alias("canon_id"),
-                     F.coalesce(F.col("internal.m_fn"), F.col("any.m_fn")).alias("canon_fn")))
-    # Only external stubs are ever re-pointed. A shared unresolved stub can
-    # bridge two same-name internal definitions into one CC component; emitting
-    # mapping rows for the internal members would let canonicalize_call_edges
-    # rewrite correctly static-linked CALL edges from one internal method onto
-    # another. The reference never repoints a resolved internal target
-    # (StaticCallLinker.scala:23-28 links only by exact fullname), so the map
-    # covers stub ids only.
-    return (with_meta.filter(F.col("is_external")).join(canon, "root")
-            .filter(F.col("node") != F.col("canon_id"))
-            .select(F.col("node").alias("m_id"), "canon_id", "canon_fn"))
+    per_name = Window.partitionBy("m_name")
+    # null flags / arities (null names or signatures) become values that
+    # never pair, as the null comparisons did in a SQL join filter
+    cand = (dim.select("m_fn", "m_id", "m_name",
+                       F.coalesce(is_stub, F.lit(False)).alias("is_stub"),
+                       F.coalesce(is_internal, F.lit(False)).alias("is_internal"),
+                       _stub_arity(F.col("m_fn")).alias("stub_arity"),
+                       F.coalesce(sig_arity, F.lit(-1)).alias("sig_arity"),
+                       F.coalesce(F.col("m_sig") == "", F.lit(False)).alias("no_sig"))
+            .filter(F.col("is_stub") | F.col("is_internal"))
+            .withColumn("n_int", F.count(F.when(F.col("is_internal"), 1)).over(per_name))
+            .withColumn("has_stub", F.max("is_stub").over(per_name))
+            .filter(F.col("has_stub") & F.col("n_int").between(1, HOT_NAME_FREQ)))
+    return (cand.select("m_name", "m_fn", "m_id", "is_stub", "stub_arity",
+                        "sig_arity", "no_sig")
+            .groupBy("m_name").applyInPandas(_canonical_in_name,
+                                           "m_id long, canon_id long, canon_fn string"))
 
 
 def canonicalize_call_edges(edges: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -88,10 +88,11 @@ def _resume(spark: SparkSession, out_dir: str, stage: str, fingerprint: str) -> 
 
 def _canonicalize(dim_full: DataFrame, call_edges: DataFrame):
     """Stage 3b — entity linking / canonicalization (north rule): unresolved
-    stub symbols alias-paired to compatible internal definitions, collapsed
-    via large-star/small-star connected components; CALL edges rewritten
-    through the canonical map. One eager checkpoint materializes the (tiny)
-    map for both the rewrite broadcast and the sink's canonical table."""
+    stub symbols alias-paired to compatible internal definitions of the same
+    bare name, collapsed by one union-find task per name; CALL edges
+    rewritten through the canonical map. One eager checkpoint materializes
+    the (tiny) map for both the rewrite join and the sink's canonical
+    table."""
     from joern_spark.operators.linking import (canonical_symbol_map,
                                                canonicalize_call_edges)
     canonical = canonical_symbol_map(dim_full).localCheckpoint(eager=True)
@@ -125,7 +126,7 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
         os.makedirs(out_dir, exist_ok=True)
         fp = fp or source_fingerprint(source)
         # full resume: all stage checkpoints match the input fingerprint →
-        # no plan construction at all (the iterative closure loop is eager)
+        # no plan construction at all (the closure checkpoint is eager)
         done_nodes = _resume(spark, out_dir, "nodes", fp)
         done_all = _resume(spark, out_dir, "all_nodes", fp)
         done_edges = _resume(spark, out_dir, "edges", fp)
@@ -215,21 +216,16 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     # (BindingTableAdapterImpls.scala; needs the stubs' TYPE_DECLs too, so it
     # runs over the unioned node relation). The inheritance closure and the
     # binding relation feed BOTH this stage and the dynamic call linker —
-    # computed once, persisted (dimension-sized).
+    # computed once, checkpointed (dimension-sized).
     from joern_spark.operators.bindings import (binding_nodes_and_edges,
                                                 binding_relation)
-    from joern_spark.operators.callgraph import inheritance_closure
-    has_inh = not (all_nodes.filter((F.col("kind") == M.TYPE_DECL)
-                                    & F.col("inherits_from").isNotNull())
-                   .limit(1).isEmpty())
-    closure = (inheritance_closure(all_nodes) if has_inh
-               else spark.createDataFrame([], "desc string, anc string"))
+    closure = CG.inheritance_closure(all_nodes).localCheckpoint(eager=True)
     # eager localCheckpoint, not lazy persist: the relation is consumed by
     # stage 2b AND the dynamic call linker, and its plan references the full
     # node relation several times — cutting it to a leaf keeps the final
     # edges plan's analysis cost (Catalyst DeduplicateRelations) bounded
     bind_rel = binding_relation(all_nodes, closure).localCheckpoint(eager=True)
-    bind_nodes, bind_edges = binding_nodes_and_edges(all_nodes, rel=bind_rel)
+    bind_nodes, bind_edges = binding_nodes_and_edges(all_nodes, bind_rel)
     all_nodes = all_nodes.unionByName(bind_nodes)
 
     # ---- stage 3: edges ------------------------------------------------------
@@ -237,9 +233,9 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     canonical = None
     call_edges = None
     if run_callgraph:
-        linked = CG.run_callgraph(all_nodes, call_sites=call_sites,
-                                  dim=dim_full, rewrites=rewrites,
-                                  closure=closure, bindings=bind_rel)
+        linked = CG.run_callgraph(all_nodes, closure, bind_rel,
+                                  call_sites=call_sites, dim=dim_full,
+                                  rewrites=rewrites)
         # CALL edges stay a separate relation until after canonicalization;
         # everything else (the bulk of the volume) is independent of the
         # entity-linking stage and can materialize concurrently with it.

@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g. Local mode runs the executors
+    inside the driver JVM, and G1 grows the heap toward its maximum before it
+    collects hard, so a maximum near or above host memory gets the JVM
+    OOM-killed instead of garbage-collected."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "48g"
+    return f"{min(48 * 1024, max(1024, total // 2**21))}m"
+
+
 def get_spark(master: str | None = None, app: str = "joern_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -28,7 +40,8 @@ def get_spark(master: str | None = None, app: str = "joern_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                                   default_driver_memory()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.maxPlanStringLength", "100000")
         .config("spark.sql.files.maxPartitionBytes", "128m")

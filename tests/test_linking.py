@@ -15,16 +15,106 @@ def spark():
     yield sp
 
 
-def test_connected_components_stars(spark):
-    from joern_spark.operators.linking import connected_components
-    # two components: {1,2,3,9} chained, {20,21}
-    pairs = spark.createDataFrame(
-        [(2, 1), (3, 2), (9, 3), (21, 20)], "u long, v long")
-    cc = {r["node"]: r["root"]
-          for r in connected_components(pairs).collect()}
-    assert cc[2] == 1 and cc[3] == 1 and cc[9] == 1
-    assert cc[21] == 20
-    assert 1 not in cc or cc.get(1, 1) == 1
+_DIM_SCHEMA = ("m_fn string, m_id long, m_name string, is_external boolean, "
+               "m_parent string, m_sig string")
+
+
+def _dim_rows():
+    def internal(fn, mid, name, sig):
+        return (fn, mid, name, False, "", sig)
+
+    def stub(fn, mid, name):
+        return (fn, mid, name, True, "", "")
+
+    rows = [
+        # no-arity C-style stub bridges two internals; the arity-1 stub pairs
+        # with b.helper only but lands in the same component
+        internal("b.helper:int(int)", 10, "helper", "int(int)"),
+        internal("a.helper:int(int,int)", 11, "helper", "int(int,int)"),
+        stub("helper", 1, "helper"),
+        stub("<unresolvedNamespace>.helper:<unresolvedSignature>(1)", 2, "helper"),
+        # arity mismatch: no pair
+        internal("x.calc:int(int)", 20, "calc", "int(int)"),
+        stub("<unresolvedNamespace>.calc:<unresolvedSignature>(3)", 21, "calc"),
+        # an internal without a signature matches any stub arity
+        internal("r.run", 30, "run", ""),
+        stub("<unresolvedNamespace>.run:<unresolvedSignature>(2)", 31, "run"),
+        # a resolved external (neither unresolved form nor bare) never pairs
+        internal("x.bar:void()", 32, "bar", "void()"),
+        stub("java.lang.Foo.bar:void()", 33, "bar"),
+        # operator and empty names never pair
+        internal("ops.<operator>.assignment", 41, "<operator>.assignment", ""),
+        stub("<operator>.assignment", 40, "<operator>.assignment"),
+        internal("anon", 51, "", ""),
+        stub("", 50, ""),
+        stub("get", 999, "get"),
+        stub("put", 998, "put"),
+    ]
+    # 101 internals make `get` hot (no rows); 100 keep `put` linkable
+    rows += [internal(f"c{i:03d}.get:int()", 1000 + i, "get", "int()")
+             for i in range(101)]
+    rows += [internal(f"c{i:03d}.put:int()", 2000 + i, "put", "int()")
+             for i in range(100)]
+    return rows
+
+
+def test_canonical_symbol_map_rules(spark):
+    from joern_spark.operators.linking import canonical_symbol_map
+    dim = spark.createDataFrame(_dim_rows(), _DIM_SCHEMA)
+    mp = canonical_symbol_map(dim)
+    assert mp.schema.simpleString() == (
+        "struct<m_id:bigint,canon_id:bigint,canon_fn:string>")
+    got = sorted(tuple(r) for r in mp.collect())
+    assert got == [(1, 11, "a.helper:int(int,int)"),
+                   (2, 11, "a.helper:int(int,int)"),
+                   (31, 30, "r.run"),
+                   (998, 2000, "c000.put:int()")]
+
+
+def test_canonical_symbol_map_empty(spark):
+    from joern_spark.operators.linking import canonical_symbol_map
+    dim = spark.createDataFrame([], _DIM_SCHEMA)
+    assert canonical_symbol_map(dim).count() == 0
+
+
+def _type_decls(spark, edges):
+    """TYPE_DECL rows (full_name, inherits_from), plus rows the closure must
+    ignore: a TYPE_DECL without supertypes and a non-TYPE_DECL."""
+    rows = [(M.TYPE_DECL, fn, parents) for fn, parents in edges]
+    rows += [(M.TYPE_DECL, "Lone", None), (M.METHOD, "m", ["Ignored"])]
+    return spark.createDataFrame(
+        rows, "kind string, full_name string, inherits_from array<string>")
+
+
+def test_inheritance_closure_shapes(spark):
+    from joern_spark.operators.callgraph import inheritance_closure
+    nodes = _type_decls(spark, [
+        ("D", ["B", "C"]), ("B", ["A"]), ("C", ["A"]),        # diamond
+        ("X", ["Y"]), ("Y", ["X"]),                          # cycle
+        ("L1", ["L2"]), ("L2", ["L3"]), ("L3", ["L4"]), ("L4", ["L5"]),
+    ])
+    got = sorted(tuple(r) for r in inheritance_closure(nodes).collect())
+    assert got == sorted([
+        ("D", "B"), ("D", "C"), ("B", "A"), ("C", "A"), ("D", "A"),
+        ("X", "Y"), ("Y", "X"), ("X", "X"), ("Y", "Y"),
+        ("L1", "L2"), ("L1", "L3"), ("L1", "L4"), ("L1", "L5"),
+        ("L2", "L3"), ("L2", "L4"), ("L2", "L5"),
+        ("L3", "L4"), ("L3", "L5"), ("L4", "L5"),
+    ])
+    # the round bound: one extension round reaches two edges up the chain
+    chain = _type_decls(spark, [("L1", ["L2"]), ("L2", ["L3"]),
+                                ("L3", ["L4"]), ("L4", ["L5"])])
+    got = sorted(tuple(r) for r in inheritance_closure(chain, max_depth=1)
+                 .collect())
+    assert got == [("L1", "L2"), ("L1", "L3"), ("L2", "L3"), ("L2", "L4"),
+                   ("L3", "L4"), ("L3", "L5"), ("L4", "L5")]
+
+
+def test_inheritance_closure_empty(spark):
+    from joern_spark.operators.callgraph import inheritance_closure
+    closure = inheritance_closure(_type_decls(spark, []))
+    assert closure.schema.simpleString() == "struct<desc:string,anc:string>"
+    assert closure.count() == 0
 
 
 def test_canonical_aliases_match_oracle(spark):

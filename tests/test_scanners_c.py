@@ -24,6 +24,20 @@ def spark():
                     shuffle_partitions=8)
 
 
+# module-scoped CPGs below; every other test builds its own
+_SHARED_CPGS = {"dangerous", "metrics", "cred_drop", "uaf"}
+
+
+@pytest.fixture(autouse=True)
+def _release_own_cpg(request, spark):
+    """A test that builds its own CPG keeps it (and ``build_cpg``'s persisted
+    intermediates) cached only while it runs. Left in the cache manager, each
+    build's plans slow the planning of every later query in the module."""
+    yield
+    if not _SHARED_CPGS & set(request.fixturenames):
+        spark.catalog.clearCache()
+
+
 def _cpg_for(spark, code: str, path: str):
     from joern_spark.plans.pipeline import build_cpg
     src = spark.createDataFrame(
