@@ -212,14 +212,12 @@ def q_cpg_sha_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cpg_canonical_aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-linking output: unresolved stub symbols → canonical internal
-    definition fullname (joern_spark.operators.linking; north-rule stage)."""
-    from joern_spark.operators.callgraph import method_dimension
-    from joern_spark.operators.linking import canonical_symbol_map
-    n = _cpg(spark)["nodes"]
-    dim = method_dimension(n)
-    mp = canonical_symbol_map(dim)
-    alias_fn = dim.select("m_id", F.col("m_fn").alias("alias_full_name"))
-    return (mp.join(alias_fn, "m_id")
+    definition fullname — the build's canonical map joined to its METHOD
+    nodes (joern_spark.operators.linking; north-rule stage)."""
+    out = _cpg(spark)
+    alias_fn = out["nodes"].filter(F.col("kind") == "METHOD").select(
+        F.col("id").alias("m_id"), F.col("full_name").alias("alias_full_name"))
+    return (out["canonical"].join(alias_fn, "m_id")
             .select(_s("alias_full_name").alias("alias_full_name"),
                     _s("canon_fn").alias("canon_full_name"))
             .filter(F.col("alias_full_name") != F.col("canon_full_name"))

@@ -1,26 +1,32 @@
-"""Base linking layer — reference passes #2-#12 (SURVEY.md §2A), re-expressed
-as DataFrame ops.
+"""Base linking layer — reference passes #2-#12 (SURVEY.md §2A).
 
-Scale design note: node ids are content-derived (xxhash64 over stable keys),
-so every edge whose *target identity* is a pure function of a fullname becomes
-a PROJECTION instead of a join:
+Two kinds of pass live here.
 
-* EVAL_TYPE   → type id  = xxhash64('TYPE', type_full_name)
-* INHERITS_FROM / ALIAS_OF → same
+Row-scale passes stay DataFrame ops (``run_base``). Node ids are
+content-derived (xxhash64 over stable keys), so every edge whose *target
+identity* is a pure function of row columns becomes a PROJECTION instead of
+a join:
+
+* INHERITS_FROM / ALIAS_OF → type id = xxhash64('TYPE', type_full_name)
 * SOURCE_FILE → file id  = xxhash64('FILE', repo, path, commit)
 * AST link to the per-file <global> NAMESPACE_BLOCK → computable id
 
-The reference executes all of these as batched hash-map lookups inside one
-JVM (LinkingUtil.scala:35-119, batches of 100). Distributed, the projection
-form eliminates the shuffle entirely. Joins remain only where *existence*
-matters (TYPE→TYPE_DECL REF, anti-join stub creation, call linking).
+Symbol-table passes — the method and type-decl stubs, the TYPE→TYPE_DECL
+REF edges and the AST/DECLARES links to a parent named by fullname — are
+pandas rules over one link group's rows, run inside
+``linking.link_task``, as the reference runs them as hash-map lookups
+inside one JVM (LinkingUtil.scala:35-119). Stub ids are hashed JVM-side
+into the task's input rows.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from joern_spark import model as M
+from joern_spark.operators import callgraph as CG
+from joern_spark.operators.typerecovery import js_inherits_parents
 
 NODE_COLS = [f.name for f in M.RAW_NODE_SCHEMA.fields] + M.NODE_ID_COLS
 
@@ -76,12 +82,12 @@ def nsb_id():
 # Pass 2 — TypeNodePass (x2cpg/.../frontend/TypeNodePass.scala:39-59)
 # --------------------------------------------------------------------------- #
 
-def used_type_fullnames(nodes: DataFrame) -> DataFrame:
-    """All referenced type fullnames in ONE scan of the node table (the
-    reference collects the same set via its TypeNodePass accumulator,
+def used_type_fullnames(nodes: DataFrame, has_js: bool) -> DataFrame:
+    """All referenced type fullnames (``fn``) in ONE scan of the node table
+    (the reference collects the same set via its TypeNodePass accumulator,
     TypeNodePass.scala:39-59). Four union branches would scan + shuffle the
     big table four times; a per-row candidate array + explode keeps it to one
-    scan feeding one distinct."""
+    scan feeding one distinct. ``has_js``: the input holds JavaScript rows."""
     cand = F.concat(
         F.array(
             F.col("type_full_name"),
@@ -90,19 +96,17 @@ def used_type_fullnames(nodes: DataFrame) -> DataFrame:
         ),
         F.coalesce(F.col("inherits_from"), F.array()),
     )
-    from joern_spark.operators.typerecovery import js_inherits_parents
-    return (nodes.select(F.explode(cand).alias("fn"))
-            # resolved/synthesized JS parent types (XInheritanceFullNamePass
-            # createTypeStub) join the universe so INHERITS_FROM edges have
-            # TYPE targets
-            .unionByName(js_inherits_parents(nodes)
-                         .select(F.col("parent_fn").alias("fn")))
-            .filter((F.col("fn") != "") & F.col("fn").isNotNull())
-            .distinct())
+    fns = nodes.select(F.explode(cand).alias("fn"))
+    if has_js:
+        # resolved/synthesized JS parent types (XInheritanceFullNamePass
+        # createTypeStub) join the universe so INHERITS_FROM edges have
+        # TYPE targets
+        fns = fns.unionByName(js_inherits_parents(nodes)
+                              .select(F.col("parent_fn").alias("fn")))
+    return fns.filter((F.col("fn") != "") & F.col("fn").isNotNull()).distinct()
 
 
-def type_nodes(nodes: DataFrame, fns: DataFrame | None = None) -> DataFrame:
-    fns = fns if fns is not None else used_type_fullnames(nodes)
+def type_nodes(fns: DataFrame) -> DataFrame:
     return _mk_nodes(
         fns,
         id=type_id(F.col("fn")),
@@ -117,12 +121,6 @@ def type_nodes(nodes: DataFrame, fns: DataFrame | None = None) -> DataFrame:
 EVAL_TYPE_KINDS = [M.METHOD_PARAMETER_IN, M.METHOD_PARAMETER_OUT, M.METHOD_RETURN,
                    M.MEMBER, M.LITERAL, M.CALL, M.LOCAL, M.IDENTIFIER, M.BLOCK,
                    M.METHOD_REF, M.TYPE_REF, M.UNKNOWN]
-
-
-def eval_type_edges(nodes: DataFrame) -> DataFrame:
-    n = nodes.filter(F.col("kind").isin(EVAL_TYPE_KINDS)
-                     & (F.col("type_full_name") != "") & F.col("type_full_name").isNotNull())
-    return n.select(*_edge(F.col("id"), type_id(F.col("type_full_name")), M.EVAL_TYPE))
 
 
 # --------------------------------------------------------------------------- #
@@ -156,7 +154,7 @@ def namespace_block_nodes(files: DataFrame) -> DataFrame:
 
 def source_file_edges(files: DataFrame) -> DataFrame:
     """NSB → FILE only: decl → FILE edges are emitted by the fused
-    projection pass (operators.parse.ast_edges)."""
+    projection pass (operators.parse.derived_edges)."""
     return files.select(*_edge(nsb_id(), file_id(), M.SOURCE_FILE))
 
 
@@ -245,95 +243,94 @@ def capture_edges(nodes: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------- #
-# Pass 5 — TypeDeclStubCreator (left-anti join, TypeDeclStubCreator.scala:24-34)
+# Pass 5 — TypeDeclStubCreator (TypeDeclStubCreator.scala:24-34) and pass 7 —
+# TypeRefPass (TypeRefPass.scala:16-29), as pandas rules. A link group's rows
+# carry ``pos``, their position in the parse output; where several rows hold
+# one fullname, a rule resolves it to the row with the smallest ``pos``.
 # --------------------------------------------------------------------------- #
 
-def type_decl_stubs(nodes: DataFrame, fns: DataFrame | None = None) -> DataFrame:
-    fns = fns if fns is not None else used_type_fullnames(nodes)
-    decls = nodes.filter(F.col("kind") == M.TYPE_DECL).select(
-        F.col("full_name").alias("fn")).distinct()
-    missing = fns.join(decls, "fn", "left_anti")
+def first_by_full_name(rows: pd.DataFrame) -> pd.DataFrame:
+    """(full_name, id) of the first row (smallest ``pos``) per fullname."""
+    return (rows.sort_values("pos", kind="stable")
+            .drop_duplicates("full_name")[["full_name", "id"]])
+
+
+def type_decl_dimension(nodes: pd.DataFrame, fns: pd.DataFrame) -> pd.DataFrame:
+    """(fn, decl_id, stub) for every TYPE_DECL: the first real decl of a
+    fullname, else an external stub (``stub``) for a referenced fullname no
+    TYPE_DECL row declares. ``fns`` (full_name, stub_id) are the referenced
+    type fullnames with their stubs' ids."""
+    real = first_by_full_name(nodes[nodes["kind"] == M.TYPE_DECL])
+    stubs = fns[~fns["full_name"].isin(real["full_name"])]
+    return pd.concat([real.set_axis(["fn", "decl_id"], axis=1).assign(stub=False),
+                      stubs[["full_name", "stub_id"]].set_axis(["fn", "decl_id"], axis=1)
+                      .assign(stub=True)], ignore_index=True)
+
+
+def type_decl_stub_rows(stubs: DataFrame) -> DataFrame:
+    """External TYPE_DECL nodes for the stub rows (fn, decl_id) of
+    ``type_decl_dimension``."""
     return _mk_nodes(
-        missing, id=F.xxhash64(F.lit("TYPE_DECL_STUB"), F.col("fn")),
-        kind=F.lit(M.TYPE_DECL),
+        stubs, id=F.col("decl_id"), kind=F.lit(M.TYPE_DECL),
         name=F.element_at(F.split(F.col("fn"), r"\."), -1),
         full_name=F.col("fn"), is_external=F.lit(True),
     )
 
 
-def type_ref_edges(fns: DataFrame, type_decl_dim: DataFrame) -> DataFrame:
-    """REF: TYPE → TYPE_DECL by fullname (TypeRefPass.scala:16-29). TYPE node
-    ids are pure functions of the fullname, so this is a join of two SMALL
-    dimensions (distinct fullnames × distinct decls) — the big node table is
-    never touched."""
-    types = fns.select(type_id(F.col("fn")).alias("src"), F.col("fn"))
-    return (types.join(type_decl_dim, "fn")
-            .select("src", F.col("decl_id").alias("dst"),
-                    F.lit(M.REF).alias("label"),
-                    F.lit(None).cast("string").alias("variable")))
-
-
-def type_decl_dimension(nodes: DataFrame, fns: DataFrame) -> DataFrame:
-    """(fn, decl_id) for every TYPE_DECL — real decls win over stubs, which
-    by construction exist exactly for fns with no real decl."""
-    real = (nodes.filter(F.col("kind") == M.TYPE_DECL)
-            .select(F.col("full_name").alias("fn"), F.col("id").alias("decl_id"))
-            .dropDuplicates(["fn"]))
-    stubs = (fns.join(real.select("fn"), "fn", "left_anti")
-             .select("fn", F.xxhash64(F.lit("TYPE_DECL_STUB"), F.col("fn")).alias("decl_id")))
-    return real.unionByName(stubs)
-
-
 # --------------------------------------------------------------------------- #
 # Pass 6 — MethodStubCreator (MethodStubCreator.scala:26-91): one external
-# METHOD stub (+params via explode(sequence), RET) per called-but-undefined
-# methodFullName; arg counts reconciled via min/max aggregation.
+# METHOD stub (+params, RET) per called-but-undefined methodFullName; arg
+# counts reconciled via min/max aggregation.
 # --------------------------------------------------------------------------- #
 
-def method_stub_nodes(call_sites: DataFrame, methods_dim: DataFrame) -> DataFrame:
-    """``call_sites`` is the small persisted CALL dimension (id, name,
-    signature, method_full_name, dispatch_type, nargs) — the parser recorded
-    nargs per call, so arg-count reconciliation is a groupBy over call sites
-    only (the reference's min/max reconciliation, MethodStubCreator.scala:59-66)."""
-    calls = call_sites.filter((F.col("method_full_name") != "")
-                              & (F.col("method_full_name") != M.UNKNOWN_FULL_NAME))
-    methods = methods_dim.select(F.col("m_fn").alias("method_full_name"))
+def method_stub_nodes(calls: pd.DataFrame, methods_dim: pd.DataFrame) -> pd.DataFrame:
+    """Stub dimension rows (``callgraph.DIM_COLS`` plus ``max_args``), one
+    per called fullname no METHOD defines. ``calls`` are CALL rows (name,
+    signature, method_full_name, nargs, stub_id): the parser recorded nargs
+    per call, so the reference's arg-count reconciliation
+    (MethodStubCreator.scala:59-66) is the largest count over the call
+    sites; name and signature are the first call site's."""
+    mfn = calls["method_full_name"]
+    c = calls[mfn.notna() & (mfn != "") & (mfn != M.UNKNOWN_FULL_NAME)
+              & ~mfn.isin(methods_dim["m_fn"])]
+    max_args = (c["nargs"].fillna(0).clip(lower=0).groupby(c["method_full_name"])
+                .max().astype("int32").rename("max_args"))
+    first = (c.sort_values("pos", kind="stable").drop_duplicates("method_full_name")
+             [["method_full_name", "stub_id", "name", "signature"]]
+             .set_axis(["m_fn", "m_id", "m_name", "m_sig"], axis=1))
+    return first.merge(max_args, left_on="m_fn", right_index=True).assign(
+        is_external=True, m_parent="")
 
-    # consumed by three row-generators (stubs, params, rets) — materialize
-    # once instead of re-running the anti-join + agg per consumer
-    unresolved = (calls.join(methods, "method_full_name", "left_anti")
-                  .groupBy("method_full_name")
-                  .agg(F.first("name").alias("name"),
-                       F.first("signature").alias("signature"),
-                       F.max(F.greatest("nargs", F.lit(0))).alias("max_args"))
-                  .persist())
 
-    stub_id = F.xxhash64(F.lit("METHOD_STUB"), F.col("method_full_name"))
-    stubs = _mk_nodes(
-        unresolved, id=stub_id, kind=F.lit(M.METHOD), name=F.col("name"),
-        full_name=F.col("method_full_name"), signature=F.col("signature"),
-        code=F.col("name"), is_external=F.lit(True),
+def method_stub_rows(stubs: DataFrame) -> DataFrame:
+    """METHOD, METHOD_PARAMETER_IN (one per argument position, p1..pN) and
+    METHOD_RETURN nodes for the stub rows (m_fn, m_id, m_name, m_sig,
+    max_args) ``method_stub_nodes`` found."""
+    stub = _mk_nodes(
+        stubs, id=F.col("m_id"), kind=F.lit(M.METHOD), name=F.col("m_name"),
+        full_name=F.col("m_fn"), signature=F.col("m_sig"),
+        code=F.col("m_name"), is_external=F.lit(True),
     )
-    params_src = unresolved.filter(F.col("max_args") >= 1).select(
-        "method_full_name", F.explode(F.sequence(F.lit(1), F.col("max_args"))).alias("pi"))
+    params_src = stubs.filter(F.col("max_args") >= 1).select(
+        "m_fn", "m_id", F.explode(F.sequence(F.lit(1), F.col("max_args"))).alias("pi"))
     params = _mk_nodes(
         params_src,
-        id=F.xxhash64(F.lit("METHOD_STUB_P"), F.col("method_full_name"), F.col("pi")),
+        id=F.xxhash64(F.lit("METHOD_STUB_P"), F.col("m_fn"), F.col("pi")),
         kind=F.lit(M.METHOD_PARAMETER_IN),
         name=F.concat(F.lit("p"), F.col("pi")),
         code=F.concat(F.lit("p"), F.col("pi")),
         order=F.col("pi"), param_index=F.col("pi"),
         evaluation_strategy=F.lit(M.BY_VALUE), is_external=F.lit(True),
-        parent_id=F.xxhash64(F.lit("METHOD_STUB"), F.col("method_full_name")),
+        parent_id=F.col("m_id"),
     )
     rets = _mk_nodes(
-        unresolved,
-        id=F.xxhash64(F.lit("METHOD_STUB_R"), F.col("method_full_name")),
+        stubs,
+        id=F.xxhash64(F.lit("METHOD_STUB_R"), F.col("m_fn")),
         kind=F.lit(M.METHOD_RETURN), code=F.lit("RET"),
         evaluation_strategy=F.lit(M.BY_VALUE), is_external=F.lit(True),
-        parent_id=stub_id,
+        parent_id=F.col("m_id"),
     )
-    return stubs.unionByName(params).unionByName(rets)
+    return stub.unionByName(params).unionByName(rets)
 
 
 # --------------------------------------------------------------------------- #
@@ -354,44 +351,40 @@ def parameter_out_nodes(nodes: DataFrame) -> DataFrame:
     )
 
 
-def parameter_link_edges(nodes: DataFrame) -> DataFrame:
-    pins = nodes.filter(F.col("kind") == M.METHOD_PARAMETER_IN)
-    return pins.select(*_edge(F.col("id"), F.xxhash64(F.lit("POUT"), F.col("id")),
-                              M.PARAMETER_LINK))
-
-
 # --------------------------------------------------------------------------- #
 # Pass 9 — AstLinkerPass (AstLinkerPass.scala:12-61) + DECLARES extraction.
 # --------------------------------------------------------------------------- #
 
-def ast_link_and_declares_edges(nodes: DataFrame, type_decl_dim: DataFrame) -> DataFrame:
-    pending = nodes.filter((F.col("ast_parent_full_name") != "")
-                           & F.col("kind").isin(M.METHOD, M.TYPE_DECL, M.MEMBER))
+def global_block_ast_edges(nodes: DataFrame) -> DataFrame:
+    """Parent = the per-file <global> NAMESPACE_BLOCK: computable id, so a
+    projection."""
+    return (nodes.filter((F.col("ast_parent_full_name") != "")
+                         & (F.col("ast_parent_type") == M.NAMESPACE_BLOCK)
+                         & F.col("kind").isin(M.METHOD, M.TYPE_DECL, M.MEMBER))
+            .select(*_edge(nsb_id(), F.col("id"), M.AST)))
 
-    # parent = per-file <global> NAMESPACE_BLOCK: computable id → projection
-    to_nsb = (pending.filter(F.col("ast_parent_type") == M.NAMESPACE_BLOCK)
-              .select(*_edge(nsb_id(), F.col("id"), M.AST)))
 
-    # parent = TYPE_DECL / METHOD by fullname: join against the decl
-    # dimensions (real methods + real/stub type decls — both small)
-    method_parents = (nodes.filter(F.col("kind") == M.METHOD)
-                      .select(F.col("id").alias("pid"),
-                              F.lit(M.METHOD).alias("pkind"),
-                              F.col("full_name").alias("pfn"))
-                      .dropDuplicates(["pfn"]))
-    typedecl_parents = type_decl_dim.select(
-        F.col("decl_id").alias("pid"), F.lit(M.TYPE_DECL).alias("pkind"),
-        F.col("fn").alias("pfn"))
-    decl_parents = method_parents.unionByName(typedecl_parents)
-    to_decl = (pending.filter(F.col("ast_parent_type") != M.NAMESPACE_BLOCK)
-               .join(decl_parents,
-                     (F.col("ast_parent_full_name") == F.col("pfn"))
-                     & (F.col("ast_parent_type") == F.col("pkind")))
-               )
-    ast = to_decl.select(*_edge(F.col("pid"), F.col("id"), M.AST))
-    declares = (to_decl.filter(F.col("pkind") == M.TYPE_DECL)
-                .select(*_edge(F.col("pid"), F.col("id"), M.DECLARES)))
-    return to_nsb.unionByName(ast).unionByName(declares)
+def ast_link_and_declares_edges(nodes: pd.DataFrame, decl_dim: pd.DataFrame
+                                ) -> pd.DataFrame:
+    """AST (and, under a TYPE_DECL, DECLARES) edges to a METHOD or TYPE_DECL
+    parent named by fullname: ``nodes`` are the link group's METHOD,
+    TYPE_DECL and MEMBER rows, ``decl_dim`` is ``type_decl_dimension``
+    (real and stub decls). A fullname held by several METHOD rows resolves
+    to the first of them."""
+    ptype, pfn = nodes["ast_parent_type"], nodes["ast_parent_full_name"]
+    pending = nodes[nodes["kind"].isin([M.METHOD, M.TYPE_DECL, M.MEMBER])
+                    & pfn.notna() & (pfn != "") & ptype.notna()
+                    & (ptype != M.NAMESPACE_BLOCK)]
+    methods = (first_by_full_name(nodes[nodes["kind"] == M.METHOD])
+               .set_axis(["pfn", "pid"], axis=1).assign(pkind=M.METHOD))
+    decls = decl_dim[["fn", "decl_id"]].set_axis(["pfn", "pid"], axis=1).assign(
+        pkind=M.TYPE_DECL)
+    j = pending[["id", "ast_parent_type", "ast_parent_full_name"]].merge(
+        pd.concat([methods, decls]), left_on=["ast_parent_full_name", "ast_parent_type"],
+        right_on=["pfn", "pkind"])
+    return pd.concat([CG.edges(j, "pid", "id", M.AST),
+                      CG.edges(j[j["pkind"] == M.TYPE_DECL], "pid", "id", M.DECLARES)],
+                     ignore_index=True)
 
 
 # --------------------------------------------------------------------------- #
@@ -429,16 +422,15 @@ def field_access_ref_edges(nodes: DataFrame) -> DataFrame:
 # Pass 16/17 — TypeHierarchyPass / AliasLinkerPass: projections.
 # --------------------------------------------------------------------------- #
 
-def inherits_edges(nodes: DataFrame) -> DataFrame:
+def inherits_edges(nodes: DataFrame, has_js: bool) -> DataFrame:
     d = nodes.filter((F.col("kind") == M.TYPE_DECL) & F.col("inherits_from").isNotNull())
     # JavaScript parents resolve through the XInheritanceFullNamePass twin
     # (import/name lookup); other frontends emit resolved names at parse
-    from joern_spark.operators.typerecovery import js_inherits_parents
-    e = (d.filter(F.col("lang") != "javascript")
-         .select(F.col("id").alias("src"),
-                 F.explode("inherits_from").alias("parent_fn"))
-         .unionByName(js_inherits_parents(nodes)
-                      .withColumnRenamed("id", "src")))
+    if has_js:
+        d = d.filter(F.col("lang") != "javascript")
+    e = d.select(F.col("id").alias("src"), F.explode("inherits_from").alias("parent_fn"))
+    if has_js:
+        e = e.unionByName(js_inherits_parents(nodes).withColumnRenamed("id", "src"))
     return e.select(*_edge(F.col("src"), type_id(F.col("parent_fn")), M.INHERITS_FROM))
 
 
@@ -447,35 +439,25 @@ def alias_edges(nodes: DataFrame) -> DataFrame:
     return d.select(*_edge(F.col("id"), type_id(F.col("alias_type_full_name")), M.ALIAS_OF))
 
 
-def run_base(nodes: DataFrame, fns: DataFrame, call_sites: DataFrame,
-             methods_dim: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """All base-layer passes → (extra_nodes, extra_edges).
-
-    ``fns`` / ``call_sites`` / ``methods_dim`` are the small persisted
-    dimensions the pipeline extracted from the parse output in single pruned
-    scans; every pass here is a projection or a small-dimension join — the
-    big node table is touched only by filters Parquet can push down."""
+def run_base(nodes: DataFrame, has_js: bool) -> tuple[DataFrame, DataFrame]:
+    """The row-scale base passes over the parse output -> (extra_nodes,
+    extra_edges). Every pass is a projection or a join of rows the parser
+    resolved file-locally; the symbol-table passes run in the link task.
+    EVAL_TYPE / decl-SOURCE_FILE / PARAMETER_LINK edges are emitted by the
+    fused projection pass in ``operators.parse.derived_edges``."""
     files = file_dimension(nodes)
-    decl_dim = type_decl_dimension(nodes, fns)
     extra_nodes = (
-        type_nodes(nodes, fns)
-        .unionByName(file_nodes(files))
+        file_nodes(files)
         .unionByName(namespace_block_nodes(files))
         .unionByName(meta_data_nodes(files))
         .unionByName(namespace_nodes(nodes, files))
-        .unionByName(type_decl_stubs(nodes, fns))
-        .unionByName(method_stub_nodes(call_sites, methods_dim))
         .unionByName(parameter_out_nodes(nodes))
-    ).coalesce(nodes.sparkSession.sparkContext.defaultParallelism).persist()
-    # EVAL_TYPE / decl-SOURCE_FILE / PARAMETER_LINK are emitted by the fused
-    # projection pass in operators.parse.ast_edges (single scan); the
-    # remaining base edges genuinely need joins or the stub dimensions.
+    )
     extra_edges = (
         source_file_edges(files)
         .unionByName(namespace_ref_edges(nodes, files))
-        .unionByName(type_ref_edges(fns, decl_dim))
-        .unionByName(ast_link_and_declares_edges(nodes, decl_dim))
-        .unionByName(inherits_edges(nodes))
+        .unionByName(global_block_ast_edges(nodes))
+        .unionByName(inherits_edges(nodes, has_js))
         .unionByName(alias_edges(nodes))
         .unionByName(field_access_ref_edges(nodes))
         .unionByName(capture_edges(nodes))

@@ -135,75 +135,21 @@ def with_ids(raw: DataFrame) -> DataFrame:
     )
 
 
-def ast_edges(nodes: DataFrame) -> DataFrame:
-    """All projection-derived edges in ONE scan of the parse output: AST +
-    typed shortcut + ARGUMENT + REF + CONTAINS + EVAL_TYPE + SOURCE_FILE +
-    PARAMETER_LINK. Each row emits its candidate edges into an array that is
-    exploded and null-filtered — a single narrow stage instead of eight
-    union branches re-scanning the cache (no join, no shuffle: the parser
-    resolved everything file-locally, and EVAL_TYPE/SOURCE_FILE targets are
-    pure id-hash functions of row columns).
+def derived_edges(nodes: DataFrame) -> DataFrame:
+    """Every edge the parse rows determine on their own, in ONE scan of the
+    parse parquet: the projection-derived edges (AST + typed shortcut +
+    ARGUMENT + REF + CONTAINS + EVAL_TYPE + SOURCE_FILE + PARAMETER_LINK —
+    no join, no shuffle: the parser resolved everything file-locally, and
+    EVAL_TYPE/SOURCE_FILE targets are pure id-hash functions of row columns)
+    plus the METHOD rows' fused intraprocedural edges (``intra_edges``).
 
     Reference equivalents: Ast.withChild/argEdges (Ast.scala:85-121),
     VariableScopeManager REF links (:334-358), ContainsEdgePass.scala:15-48
     (projection via parser-carried method_idx), TypeEvalPass.scala:9-42,
     FileCreationPass.scala:41-55, MethodDecoratorPass.scala:50.
-    """
-    from joern_spark.operators.base import EVAL_TYPE_KINDS, file_id, type_id
 
-    n = nodes.filter(F.col("parse_error") == "")
-    null_s = F.lit(None).cast("string")
-
-    def edge(cond, src, dst, label, variable=None):
-        e = F.struct(src.cast("long").alias("src"), dst.cast("long").alias("dst"),
-                     (label if not isinstance(label, str) else F.lit(label)).alias("label"),
-                     (variable if variable is not None else null_s).alias("variable"))
-        return F.when(cond, e)
-
-    role_map = F.create_map(*[F.lit(x) for kv in M.ROLE_EDGE_LABELS.items() for x in kv])
-    candidates = F.array(
-        # BINDING children attach via BINDS (vtable entry), not AST
-        # (BindingTableAdapterImpls.scala: typeDecl -BINDS-> binding)
-        edge(F.col("parent_id").isNotNull() & (F.col("kind") != M.BINDING),
-             F.col("parent_id"), F.col("id"), M.AST),
-        edge(F.col("parent_id").isNotNull() & (F.col("kind") == M.BINDING),
-             F.col("parent_id"), F.col("id"), M.BINDS),
-        edge((F.col("role") != "") & F.col("parent_id").isNotNull(),
-             F.col("parent_id"), F.col("id"), role_map[F.col("role")]),
-        # ARGUMENT comes only from CALL/RETURN parents: the parser assigns
-        # arg_index only under call-like parents (CallAstBuilder.scala:25-55)
-        edge((F.col("arg_index") >= 0) & F.col("parent_id").isNotNull(),
-             F.col("parent_id"), F.col("id"), M.ARGUMENT,
-             F.col("arg_index").cast("string")),
-        edge(F.col("ref_id").isNotNull(), F.col("id"), F.col("ref_id"), M.REF),
-        edge(F.col("method_id").isNotNull()
-             & (~F.col("kind").isin(M.METHOD, M.METHOD_PARAMETER_IN,
-                                    M.METHOD_PARAMETER_OUT, M.METHOD_RETURN,
-                                    M.LOCAL, M.MODIFIER, M.TYPE_DECL, M.MEMBER)),
-             F.col("method_id"), F.col("id"), M.CONTAINS),
-        edge(F.col("kind").isin(EVAL_TYPE_KINDS)
-             & (F.col("type_full_name") != "") & F.col("type_full_name").isNotNull(),
-             F.col("id"), type_id(F.col("type_full_name")), M.EVAL_TYPE),
-        edge(F.col("kind").isin(M.METHOD, M.TYPE_DECL) & (F.col("path") != ""),
-             F.col("id"), file_id(), M.SOURCE_FILE),
-        edge(F.col("kind") == M.METHOD_PARAMETER_IN,
-             F.col("id"), F.xxhash64(F.lit("POUT"), F.col("id")), M.PARAMETER_LINK),
-    )
-    return (n.select(F.explode(candidates).alias("e"))
-            .filter(F.col("e").isNotNull())
-            .select("e.src", "e.dst", "e.label", "e.variable"))
-
-
-def derived_edges(nodes: DataFrame) -> DataFrame:
-    """ast_edges ∪ intra_edges in ONE scan of the parse parquet.
-
-    The two relations read overlapping columns (repo/path/commit/kind plus
-    the per-row projection fields vs the METHOD rows' fused ie_* arrays); at
-    the 100M+-edge materialization the second pass over the node table is
-    pure wasted read bandwidth — the single non-scaling resource on a
-    single-box stand-in, and the write tail the scaling target is bound by.
-    Here the per-row candidate structs and the transformed ie_* zip land in
-    one concat'd array behind one generator, so the node parquet is decoded
+    The per-row candidate structs and the transformed ie_* zip land in one
+    concat'd array behind one generator, so the node parquet is decoded
     exactly once and the whole derivation stays in one codegen stage.
     """
     from joern_spark.operators.base import EVAL_TYPE_KINDS, file_id, type_id

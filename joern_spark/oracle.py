@@ -678,7 +678,7 @@ def expected_declared_only() -> list[tuple[str, str, str]]:
     q_cpg_declared_only: internal body-less METHODs (prototypes / abstract
     declarations) whose fullname never gets a bodied definition, plus
     TYPE_DECL stubs (used type fullnames without a parsed TYPE_DECL,
-    mirroring used_type_fullnames + type_decl_stubs)."""
+    mirroring used_type_fullnames + type_decl_dimension)."""
     bodied: set[str] = set()
     protos: dict[str, str] = {}
     used_types: set[str] = set()

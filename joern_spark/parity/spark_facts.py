@@ -437,13 +437,17 @@ _FACT_OUT = ("lang string, kase string, relation string, "
              "subj string, obj string")
 
 
+def _arity(sig_col):
+    """``callgraph.signature_arity`` as a column expression."""
+    inner = F.regexp_extract(sig_col, r"\((.*)\)", 1)
+    return F.when(inner == "", F.lit(0)).otherwise(F.size(F.split(inner, ",")))
+
+
 def _binding_facts(base: DataFrame) -> DataFrame:
     """Case-scoped vtable facts — the same joins as
     ``operators.bindings.binding_relation`` with ``kase`` in every key (the
     fixture corpus reuses class fullnames like `Foo` across cases, so the
     real pass's global fullname keys would cross-contaminate here)."""
-    from joern_spark.operators.bindings import _arity
-
     own_m = (base.filter((F.col("kind") == M.METHOD)
                          & (F.col("ast_parent_type") == M.TYPE_DECL)
                          & (F.col("ast_parent_full_name") != ""))

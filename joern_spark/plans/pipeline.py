@@ -3,8 +3,9 @@ and idempotent resume.
 
 Stage order mirrors the reference overlay order (X2Cpg.scala:374-388 →
 DefaultOverlays.scala:18-25): parse (AST + fused intraprocedural passes) →
-base linking → call graph. Every stage is a pure DataFrame→DataFrame
-function; a checkpointed stage writes partitioned parquet plus a
+the link tail (stubs, bindings, call graph, canonicalization; one grouped
+pandas task) → the row-scale base passes and edges. Every stage is a pure
+DataFrame→DataFrame function; a checkpointed stage writes partitioned parquet plus a
 ``_manifest.json`` (stage name, row count, input fingerprint, wall time) and
 a re-run with the same fingerprint short-circuits to a read — the analogue of
 the reference's frontend↔console file handoff (CpgGenerator.scala:28-48),
@@ -21,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from joern_spark import model as M
 from joern_spark.operators import base as B
-from joern_spark.operators import callgraph as CG
+from joern_spark.operators import linking as L
+from joern_spark.operators import typerecovery as TR
 from joern_spark.operators.parse import derived_edges, parse_source, with_ids
 
 
@@ -86,19 +88,6 @@ def _resume(spark: SparkSession, out_dir: str, stage: str, fingerprint: str) -> 
     return None
 
 
-def _canonicalize(dim_full: DataFrame, call_edges: DataFrame):
-    """Stage 3b — entity linking / canonicalization (north rule): unresolved
-    stub symbols alias-paired to compatible internal definitions of the same
-    bare name, collapsed by one union-find task per name; CALL edges
-    rewritten through the canonical map. One eager checkpoint materializes
-    the (tiny) map for both the rewrite join and the sink's canonical
-    table."""
-    from joern_spark.operators.linking import (canonical_symbol_map,
-                                               canonicalize_call_edges)
-    canonical = canonical_symbol_map(dim_full).localCheckpoint(eager=True)
-    return canonical, canonicalize_call_edges(call_edges, canonical)
-
-
 def source_fingerprint(source: DataFrame) -> str:
     """Order-insensitive fingerprint of the input table: xor of row hashes.
     The per-row invariant (sha256 of content) rolls up into the stage
@@ -111,9 +100,10 @@ def source_fingerprint(source: DataFrame) -> str:
 
 
 def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None,
-              fuse_intraprocedural: bool = True, run_callgraph: bool = True,
+              fuse_intraprocedural: bool = True,
               fingerprint: str | None = None) -> dict[str, DataFrame]:
-    """source(repo,path,commit,lang,content) → {nodes, edges, errors}."""
+    """source(repo,path,commit,lang,content) → {nodes, edges, errors,
+    canonical, timings}."""
     # The edges stage is a wide union of operator branches; its rendered
     # explain string runs to hundreds of MB, and AQE re-renders it on every
     # plan update (AdaptiveSparkPlanExec.onUpdatePlan) — on a default-heap
@@ -126,7 +116,7 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
         os.makedirs(out_dir, exist_ok=True)
         fp = fp or source_fingerprint(source)
         # full resume: all stage checkpoints match the input fingerprint →
-        # no plan construction at all (the closure checkpoint is eager)
+        # no plan construction at all
         done_nodes = _resume(spark, out_dir, "nodes", fp)
         done_all = _resume(spark, out_dir, "all_nodes", fp)
         done_edges = _resume(spark, out_dir, "edges", fp)
@@ -140,8 +130,8 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
 
     # ---- stage 1: parse (+ fused per-method passes) -------------------------
     # The parse output is ALWAYS checkpointed to parquet, even for ad-hoc
-    # (out_dir=None) runs: a dozen downstream branches (base passes, edge
-    # derivation, four call linkers, final counts) each scan it, and a cached
+    # (out_dir=None) runs: the link task's input, the row-scale base passes,
+    # the edge derivation and the node union each scan it, and a cached
     # in-memory copy of the wide rows (ie_* arrays) both risks eviction →
     # silent Python re-parse and defeats column pruning. A parquet stage
     # boundary gives every consumer a pruned columnar scan — the same reason
@@ -174,129 +164,47 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     errors = nodes.filter(F.col("parse_error") != "")
     ok = nodes.filter(F.col("parse_error") == "")
 
-    # ---- shared dimensions (one pruned scan each, persisted) ----------------
-    # Every base pass and call linker works off these small relations; the
-    # big node table is only re-read by the genuinely row-producing edge
-    # derivations (ast_edges / intra_edges), each a single pruned scan.
-    fns = B.used_type_fullnames(ok).persist()
-    call_sites = ok.filter(F.col("kind") == M.CALL).select(
-        "id", "name", "signature", "method_full_name", "dispatch_type", "nargs")
-    # XTypeRecovery lite: recovered JS methodFullNames flow into the call
-    # dimension BEFORE stub creation and linking, so require()-bound member
-    # calls get stubs + CALL edges (XTypeHintCallLinker analogue). The
-    # limit-1 probe skips the whole pass on JS-free corpora (parquet
-    # row-group lang stats make it a near-metadata read there).
-    from joern_spark.operators.typerecovery import apply_rewrites, js_mfn_rewrites
-    rewrites = None
-    if not ok.filter(F.col("lang") == "javascript").limit(1).isEmpty():
-        rewrites = js_mfn_rewrites(ok).persist()
-        call_sites = apply_rewrites(call_sites, rewrites)
-    call_sites = call_sites.persist()
-    methods_real = CG.method_dimension(ok).persist()
+    # ---- stage 2: the link tail, one grouped pandas task ---------------------
+    # XTypeRecovery lite: recovered JS methodFullNames reach the link task,
+    # so require()-bound member calls get stubs + CALL edges (XTypeHintCallLinker
+    # analogue). The limit-1 probe skips type recovery and the JS inheritance
+    # resolution on JS-free input (parquet row-group lang stats make it a
+    # near-metadata read there).
+    has_js = not ok.filter(F.col("lang") == "javascript").limit(1).isEmpty()
+    rewrites = TR.js_mfn_rewrites(ok) if has_js else None
+    # One eager checkpoint runs the task; its (dimension-sized) output is a
+    # leaf that every consumer below reads: stubs, TYPE and BINDING nodes,
+    # link edges with canonical CALL targets, and the canonical map.
+    link = L.link_tail(ok, B.used_type_fullnames(ok, has_js),
+                       rewrites).localCheckpoint(eager=True)
+    canonical = L.canonical_map(link)
 
-    # ---- stage 2: base linking ----------------------------------------------
-    extra_nodes, base_edges = B.run_base(ok, fns, call_sites, methods_real)
-    # (no eager materialization: every extra job pays fixed scheduling
-    # latency that does not scale with cores; concurrent first-computations
-    # of the small persisted dims inside one action cost less than a
-    # sequential warm-up job each)
-    all_nodes = ok.unionByName(extra_nodes)
-
-    # full method dimension = real definitions + the external stubs run_base
-    # just created (stub fullnames are disjoint from real ones by the
-    # anti-join construction, so no re-dedup is needed)
-    stub_dim = (extra_nodes.filter(F.col("kind") == M.METHOD)
-                .select(F.col("full_name").alias("m_fn"), F.col("id").alias("m_id"),
-                        F.col("name").alias("m_name"), F.col("is_external"),
-                        F.col("ast_parent_full_name").alias("m_parent"),
-                        F.col("signature").alias("m_sig")))
-    dim_full = methods_real.unionByName(stub_dim)
-
-    # ---- stage 2b: BINDS/BINDING vtable tables -------------------------------
-    # (BindingTableAdapterImpls.scala; needs the stubs' TYPE_DECLs too, so it
-    # runs over the unioned node relation). The inheritance closure and the
-    # binding relation feed BOTH this stage and the dynamic call linker —
-    # computed once, checkpointed (dimension-sized).
-    from joern_spark.operators.bindings import (binding_nodes_and_edges,
-                                                binding_relation)
-    closure = CG.inheritance_closure(all_nodes).localCheckpoint(eager=True)
-    # eager localCheckpoint, not lazy persist: the relation is consumed by
-    # stage 2b AND the dynamic call linker, and its plan references the full
-    # node relation several times — cutting it to a leaf keeps the final
-    # edges plan's analysis cost (Catalyst DeduplicateRelations) bounded
-    bind_rel = binding_relation(all_nodes, closure).localCheckpoint(eager=True)
-    bind_nodes, bind_edges = binding_nodes_and_edges(all_nodes, bind_rel)
-    all_nodes = all_nodes.unionByName(bind_nodes)
-
-    # ---- stage 3: edges ------------------------------------------------------
-    edges = derived_edges(ok).unionByName(base_edges).unionByName(bind_edges)
-    canonical = None
-    call_edges = None
-    if run_callgraph:
-        linked = CG.run_callgraph(all_nodes, closure, bind_rel,
-                                  call_sites=call_sites, dim=dim_full,
-                                  rewrites=rewrites)
-        # CALL edges stay a separate relation until after canonicalization;
-        # everything else (the bulk of the volume) is independent of the
-        # entity-linking stage and can materialize concurrently with it.
-        call_edges = linked.filter(F.col("label") == M.CALL_EDGE)
-        edges = edges.unionByName(
-            linked.filter(F.col("label") != M.CALL_EDGE))
+    # ---- stage 3: row-scale base passes and edges ----------------------------
+    extra_nodes, base_edges = B.run_base(ok, has_js)
+    all_nodes = ok.unionByName(extra_nodes).unionByName(L.link_nodes(link))
+    edges = (derived_edges(ok).unionByName(base_edges)
+             .unionByName(L.link_edges(link)))
 
     if out_dir:
-        all_nodes_out = _resume(spark, out_dir, "all_nodes", fp)
-        edges_out = _resume(spark, out_dir, "edges", fp)
-        if all_nodes_out is None:
-            all_nodes_out = _write_stage(all_nodes, out_dir, "all_nodes", fp, partition_by=["lang"])
-        if edges_out is None:
-            if run_callgraph:
-                canonical, call_edges = _canonicalize(dim_full, call_edges)
-                canonical = _write_stage(canonical, out_dir, "canonical", fp)
-                edges = edges.unionByName(call_edges)
-            edges_out = _write_stage(edges, out_dir, "edges", fp, partition_by=["label"])
-        elif run_callgraph:
-            # edges resumed: reload (or, for pre-existing checkpoints that
-            # lack the stage, recompute — dimension-only, cheap) so the
-            # canonical table survives a checkpointed resume
-            canonical = _resume(spark, out_dir, "canonical", fp)
-            if canonical is None:
-                canonical, _ = _canonicalize(dim_full, call_edges)
-                canonical = _write_stage(canonical, out_dir, "canonical", fp)
-        all_nodes, edges = all_nodes_out, edges_out
+        def stage(name: str, df: DataFrame, part: list[str] | None) -> DataFrame:
+            done = _resume(spark, out_dir, name, fp)
+            return done if done is not None else _write_stage(
+                df, out_dir, name, fp, partition_by=part)
+
+        all_nodes = stage("all_nodes", all_nodes, ["lang"])
+        edges = stage("edges", edges, ["label"])
+        canonical = stage("canonical", canonical, None)
     else:
         # callers typically run several queries over the result — materialize
         # the final edge relation as parquet on tmpfs rather than a
         # deserialized in-memory cache: caching tens of millions of edge
         # objects is GC-bound and does not scale with cores, while a columnar
         # write parallelizes and every later query gets a pruned scan.
-        # The non-CALL bulk (AST/CFG/CONTAINS/... — ~95% of edge volume)
-        # writes on a worker thread WHILE the entity-linking stage builds the
-        # canonical map on the main thread: two independent DAG branches that
-        # would otherwise serialize driver-side. all_nodes = parquet parse
-        # output ∪ small cached extras — cheap to recompute, not re-written.
-        import threading
-        epath_rest = os.path.join(out_dir_adhoc, "edges_rest")
-        epath_call = os.path.join(out_dir_adhoc, "edges_call")
-        write_err: list[BaseException] = []
-
-        def _write_rest():
-            try:
-                edges.write.mode("overwrite").parquet(epath_rest)
-            except BaseException as ex:  # surfaced after join()
-                write_err.append(ex)
-
-        th = threading.Thread(target=_write_rest, name="edges_rest_writer")
-        th.start()
-        try:
-            if run_callgraph:
-                canonical, call_edges = _canonicalize(dim_full, call_edges)
-                call_edges.write.mode("overwrite").parquet(epath_call)
-        finally:
-            th.join()
-        if write_err:
-            raise write_err[0]
-        paths = [epath_rest] + ([epath_call] if run_callgraph else [])
-        edges = spark.read.parquet(*paths)
+        # all_nodes = parquet parse output ∪ small link-output projections —
+        # cheap to recompute, not re-written.
+        path = os.path.join(out_dir_adhoc, "edges")
+        edges.write.mode("overwrite").parquet(path)
+        edges = spark.read.parquet(path)
 
     timings["link_materialize_sec"] = round(time.time() - t_link, 3)
     return {"nodes": all_nodes, "edges": edges, "errors": errors,

@@ -44,7 +44,7 @@ def stream_cpg(spark: SparkSession, src_dir: str, out_dir: str,
                trigger_once: bool = False):
     """Incrementally parse arriving source files into appended nodes/edges
     parquet tables. Returns the StreamingQuery."""
-    from joern_spark.operators.parse import ast_edges, intra_edges, parse_source, with_ids
+    from joern_spark.operators.parse import derived_edges, parse_source, with_ids
 
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
     stream = read_source_stream(spark, src_dir)
@@ -59,7 +59,7 @@ def stream_cpg(spark: SparkSession, src_dir: str, out_dir: str,
         nodes.write.mode("overwrite").parquet(nodes_path)
         staged = batch_df.sparkSession.read.parquet(nodes_path)
         ok = staged.filter(F.col("parse_error") == "")
-        edges = ast_edges(ok).unionByName(intra_edges(ok))
+        edges = derived_edges(ok)
         edges.write.mode("overwrite").parquet(
             os.path.join(out_dir, "edges", f"batch={batch_id}"))
 

@@ -20,11 +20,11 @@ def pytest_configure(config):
 
 @pytest.fixture(autouse=True, scope="module")
 def _release_cached_plans():
-    """``build_cpg`` persists its intermediates, and the session's cache
-    manager keeps each one's analyzed plan (hundreds of MB per build) until
-    it is unpersisted. Every test module runs in the same driver JVM, so drop
-    them once a module's own fixtures are gone; otherwise the heap fills
-    build by build across the suite."""
+    """Tests ``.cache()`` build outputs, and the session's cache manager
+    keeps each one's analyzed plan (hundreds of MB per build) until it is
+    unpersisted. Every test module runs in the same driver JVM, so drop them
+    once a module's own fixtures are gone; otherwise the heap fills build by
+    build across the suite."""
     yield
     from pyspark.sql import SparkSession
     try:

@@ -13,6 +13,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,21 +112,20 @@ def test_method_decorator_param_out_mirror(spark):
         assert r["evaluation_strategy"] == M.BY_SHARING
 
 
-def test_naive_call_linker_links_whole_name_group(spark):
+def test_naive_call_linker_links_whole_name_group():
     from joern_spark.operators.callgraph import naive_call_edges
 
-    call_sites = spark.createDataFrame(
+    call_sites = pd.DataFrame(
         [(100, "frob"), (101, "already_linked"), (102, "no_such")],
-        "id long, name string")
-    linked = spark.createDataFrame(
-        [(101, 7, M.CALL_EDGE, None)],
-        "src long, dst long, label string, variable string")
-    dim = spark.createDataFrame(
+        columns=["id", "name"])
+    linked = pd.DataFrame([(101, 7, M.CALL_EDGE, None)],
+                          columns=["src", "dst", "label", "variable"])
+    dim = pd.DataFrame(
         [("frob", 1, False), ("frob", 2, False), ("frob", 3, True),
          ("already_linked", 7, False)],
-        "m_name string, m_id long, is_external boolean")
-    got = {(r["src"], r["dst"])
-           for r in naive_call_edges(call_sites, linked, dim).collect()}
+        columns=["m_name", "m_id", "is_external"])
+    got = set(naive_call_edges(call_sites, linked, dim)[["src", "dst"]]
+              .itertuples(index=False, name=None))
     # site 100 links to BOTH internal frob definitions, never the external
     # stub; the already-linked site gets nothing (anti-join); unknown name
     # gets nothing

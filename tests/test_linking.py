@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,8 +16,7 @@ def spark():
     yield sp
 
 
-_DIM_SCHEMA = ("m_fn string, m_id long, m_name string, is_external boolean, "
-               "m_parent string, m_sig string")
+_DIM_COLS = ["m_fn", "m_id", "m_name", "is_external", "m_parent", "m_sig"]
 
 
 def _dim_rows():
@@ -58,42 +58,40 @@ def _dim_rows():
     return rows
 
 
-def test_canonical_symbol_map_rules(spark):
+def test_canonical_symbol_map_rules():
     from joern_spark.operators.linking import canonical_symbol_map
-    dim = spark.createDataFrame(_dim_rows(), _DIM_SCHEMA)
+    dim = pd.DataFrame(_dim_rows(), columns=_DIM_COLS)
     mp = canonical_symbol_map(dim)
-    assert mp.schema.simpleString() == (
-        "struct<m_id:bigint,canon_id:bigint,canon_fn:string>")
-    got = sorted(tuple(r) for r in mp.collect())
+    assert list(mp.columns) == ["m_id", "canon_id", "canon_fn"]
+    got = sorted(mp.itertuples(index=False, name=None))
     assert got == [(1, 11, "a.helper:int(int,int)"),
                    (2, 11, "a.helper:int(int,int)"),
                    (31, 30, "r.run"),
                    (998, 2000, "c000.put:int()")]
 
 
-def test_canonical_symbol_map_empty(spark):
+def test_canonical_symbol_map_empty():
     from joern_spark.operators.linking import canonical_symbol_map
-    dim = spark.createDataFrame([], _DIM_SCHEMA)
-    assert canonical_symbol_map(dim).count() == 0
+    dim = pd.DataFrame([], columns=_DIM_COLS)
+    assert len(canonical_symbol_map(dim)) == 0
 
 
-def _type_decls(spark, edges):
+def _type_decls(edges):
     """TYPE_DECL rows (full_name, inherits_from), plus rows the closure must
     ignore: a TYPE_DECL without supertypes and a non-TYPE_DECL."""
     rows = [(M.TYPE_DECL, fn, parents) for fn, parents in edges]
     rows += [(M.TYPE_DECL, "Lone", None), (M.METHOD, "m", ["Ignored"])]
-    return spark.createDataFrame(
-        rows, "kind string, full_name string, inherits_from array<string>")
+    return pd.DataFrame(rows, columns=["kind", "full_name", "inherits_from"])
 
 
-def test_inheritance_closure_shapes(spark):
+def test_inheritance_closure_shapes():
     from joern_spark.operators.callgraph import inheritance_closure
-    nodes = _type_decls(spark, [
+    nodes = _type_decls([
         ("D", ["B", "C"]), ("B", ["A"]), ("C", ["A"]),        # diamond
         ("X", ["Y"]), ("Y", ["X"]),                          # cycle
         ("L1", ["L2"]), ("L2", ["L3"]), ("L3", ["L4"]), ("L4", ["L5"]),
     ])
-    got = sorted(tuple(r) for r in inheritance_closure(nodes).collect())
+    got = sorted(inheritance_closure(nodes).itertuples(index=False, name=None))
     assert got == sorted([
         ("D", "B"), ("D", "C"), ("B", "A"), ("C", "A"), ("D", "A"),
         ("X", "Y"), ("Y", "X"), ("X", "X"), ("Y", "Y"),
@@ -102,34 +100,31 @@ def test_inheritance_closure_shapes(spark):
         ("L3", "L4"), ("L3", "L5"), ("L4", "L5"),
     ])
     # the round bound: one extension round reaches two edges up the chain
-    chain = _type_decls(spark, [("L1", ["L2"]), ("L2", ["L3"]),
-                                ("L3", ["L4"]), ("L4", ["L5"])])
-    got = sorted(tuple(r) for r in inheritance_closure(chain, max_depth=1)
-                 .collect())
+    chain = _type_decls([("L1", ["L2"]), ("L2", ["L3"]),
+                         ("L3", ["L4"]), ("L4", ["L5"])])
+    got = sorted(inheritance_closure(chain, max_depth=1)
+                 .itertuples(index=False, name=None))
     assert got == [("L1", "L2"), ("L1", "L3"), ("L2", "L3"), ("L2", "L4"),
                    ("L3", "L4"), ("L3", "L5"), ("L4", "L5")]
 
 
-def test_inheritance_closure_empty(spark):
+def test_inheritance_closure_empty():
     from joern_spark.operators.callgraph import inheritance_closure
-    closure = inheritance_closure(_type_decls(spark, []))
-    assert closure.schema.simpleString() == "struct<desc:string,anc:string>"
-    assert closure.count() == 0
+    closure = inheritance_closure(_type_decls([]))
+    assert list(closure.columns) == ["desc", "anc"]
+    assert len(closure) == 0
 
 
 def test_canonical_aliases_match_oracle(spark):
     from joern_spark import oracle as O
     from joern_spark.corpus import fixture_source
-    from joern_spark.operators.callgraph import method_dimension
-    from joern_spark.operators.linking import canonical_symbol_map
     from joern_spark.plans.pipeline import build_cpg
 
     out = build_cpg(spark, fixture_source(spark))
-    dim = method_dimension(out["nodes"])
-    mp = canonical_symbol_map(dim)
-    alias_fn = dim.select("m_id", F.col("m_fn").alias("alias"))
+    methods = out["nodes"].filter(F.col("kind") == M.METHOD).select(
+        F.col("id").alias("m_id"), F.col("full_name").alias("alias"))
     got = {(r["alias"], r["canon_fn"])
-           for r in mp.join(alias_fn, "m_id")
+           for r in out["canonical"].join(methods, "m_id")
            .filter(F.col("alias") != F.col("canon_fn"))
            .select("alias", "canon_fn").distinct().collect()}
     want = set(O.expected_canonical_aliases())
@@ -168,3 +163,113 @@ def test_salted_join_matches_plain_join(spark):
     got = salted_join(big, dim, "k", n_salts=4).select("payload", "val")
     want = big.join(dim, "k").select("payload", "val")
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+_LINK_COLS = ["kind", "id", "name", "full_name", "signature", "method_full_name",
+              "dispatch_type", "nargs", "is_external", "ast_parent_type",
+              "ast_parent_full_name", "inherits_from", "stub_id"]
+
+
+def _link_rows():
+    """One link group's input rows, as ``linking.link_input`` tags them
+    (without ``pos``, the parse-output position)."""
+    from joern_spark.operators.linking import TYPE_NAME_ROW
+
+    def row(kind, id_, name="", full_name="", signature="", mfn="",
+            dispatch="", nargs=-1, external=False, ptype="", parent="",
+            inherits=None, stub_id=0):
+        return (kind, id_, name, full_name, signature, mfn, dispatch, nargs,
+                external, ptype, parent, inherits, stub_id)
+
+    def method(id_, fn, name, sig, parent=""):
+        return row(M.METHOD, id_, name, fn, sig,
+                   ptype=M.TYPE_DECL if parent else "", parent=parent)
+
+    def call(id_, name, mfn, dispatch, nargs, stub_id=0):
+        return row(M.CALL, id_, name, mfn=mfn, dispatch=dispatch,
+                   nargs=nargs, stub_id=stub_id)
+
+    return [
+        row(M.TYPE_DECL, 100, "A", "A"),
+        row(M.TYPE_DECL, 101, "B", "B", inherits=["A"]),  # inherits A.f
+        row(M.TYPE_DECL, 102, "C", "C", inherits=["A"]),  # overrides f
+        method(1, "A.f:void()", "f", "void()", parent="A"),
+        method(3, "C.f:void()", "f", "void()", parent="C"),
+        method(6, "U.helper:int(int)", "helper", "int(int)"),
+        method(7, "X.frob:void()", "frob", "void()"),
+        method(8, "Y.frob:void()", "frob", "void()"),
+        method(20, "H.tripler:int(int)", "tripler", "int(int)"),
+        # static link
+        call(10, "helper", "U.helper:int(int)", M.STATIC_DISPATCH, 1),
+        # dynamic dispatch on A.f reaches A, B (inherited binding) and C
+        call(11, "f", "A.f:void()", M.DYNAMIC_DISPATCH, 0),
+        # no fullname: naive linking to every internal `frob`
+        call(12, "frob", "", M.STATIC_DISPATCH, 0),
+        row(M.METHOD_REF, 13, mfn="U.helper:int(int)"),
+        # one external stub; its params come from the largest arg count
+        call(14, "ext", "lib.ext:void(int,int)", M.STATIC_DISPATCH, 2, 9001),
+        call(15, "ext", "lib.ext:void(int,int)", M.STATIC_DISPATCH, 3, 9001),
+        # an unresolved stub whose CALL edge moves to the canonical target
+        call(16, "tripler", "<unresolvedNamespace>.tripler:<unresolvedSignature>(1)",
+             M.STATIC_DISPATCH, 1, 9002),
+        # referenced type names with their TYPE ids and TYPE_DECL-stub ids
+        row(TYPE_NAME_ROW, 501, full_name="A", stub_id=601),
+        row(TYPE_NAME_ROW, 504, full_name="int", stub_id=604),
+    ]
+
+
+def test_link_task_rules():
+    from joern_spark.operators.linking import CANONICAL_ROW, EDGE_ROW, link_task
+
+    rows = _link_rows()
+    out = link_task(pd.DataFrame(rows, columns=_LINK_COLS).assign(pos=range(len(rows))))
+
+    def rows(tag, *cols):
+        part = out[out["row"] == tag][list(cols)].astype(object)
+        return sorted(tuple(None if pd.isna(v) else v for v in r)
+                      for r in part.itertuples(index=False, name=None))
+
+    assert rows(EDGE_ROW, "src", "dst", "label") == sorted([
+        (10, 6, M.CALL_EDGE),                          # static
+        (11, 1, M.CALL_EDGE), (11, 1, M.CALL_EDGE),    # A.f via A and via B
+        (11, 3, M.CALL_EDGE),                          # C's override
+        (12, 7, M.CALL_EDGE), (12, 8, M.CALL_EDGE),    # naive name group
+        (13, 6, M.REF),                                # METHOD_REF
+        (14, 9001, M.CALL_EDGE), (15, 9001, M.CALL_EDGE),
+        (16, 20, M.CALL_EDGE),                         # canonical target
+        (100, 1, M.AST), (100, 1, M.DECLARES),
+        (102, 3, M.AST), (102, 3, M.DECLARES),
+    ])
+    # stubs: (id, fullname, name, signature, params)
+    assert rows(M.METHOD, "src", "fn", "name", "sig", "n") == [
+        (9001, "lib.ext:void(int,int)", "ext", "", 3),
+        (9002, "<unresolvedNamespace>.tripler:<unresolvedSignature>(1)",
+         "tripler", "", 1)]
+    assert rows(M.TYPE_DECL, "src", "fn") == [(604, "int")]
+    # TYPE node -REF-> its TYPE_DECL, real or stub
+    assert rows(M.TYPE, "src", "dst", "fn") == [(501, 100, "A"), (504, 604, "int")]
+    # vtable rows: (type decl, name, signature, target, decl id, method id)
+    assert rows(M.BINDING, "td", "name", "sig", "fn", "src", "dst") == [
+        ("A", "f", "void()", "A.f:void()", 100, 1),
+        ("B", "f", "void()", "A.f:void()", 101, 1),
+        ("C", "f", "void()", "C.f:void()", 102, 3)]
+    assert rows(CANONICAL_ROW, "src", "dst", "fn") == [(9002, 20, "H.tripler:int(int)")]
+
+
+def test_build_leaves_no_cached_plans(spark, tmp_path):
+    """A build keeps nothing in the session's cache manager: a long-lived
+    session that builds many graphs must not hold each build's plans."""
+    from joern_spark.plans.pipeline import build_cpg
+    from joern_spark.sources import write_graph_tables
+
+    src = spark.createDataFrame(
+        [("fixtures/cache", "src/a.c", "c" * 40, "c",
+          "int helper(int x) { return x + 1; }\nint main() { return helper(2); }"),
+         ("fixtures/cache", "src/B.java", "c" * 40, "java",
+          "class A { void f() {} }\nclass B extends A { void g() { f(); } }"),
+         ("fixtures/cache", "src/m.js", "c" * 40, "javascript",
+          "const m = require('m');\nm.run(1);")],
+        "repo string, path string, commit string, lang string, content string")
+    spark.catalog.clearCache()
+    write_graph_tables(build_cpg(spark, src), str(tmp_path / "cpg"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -30,9 +30,9 @@ _SHARED_CPGS = {"dangerous", "metrics", "cred_drop", "uaf"}
 
 @pytest.fixture(autouse=True)
 def _release_own_cpg(request, spark):
-    """A test that builds its own CPG keeps it (and ``build_cpg``'s persisted
-    intermediates) cached only while it runs. Left in the cache manager, each
-    build's plans slow the planning of every later query in the module."""
+    """A test that builds its own CPG keeps it cached only while it runs.
+    Left in the cache manager, each build's plans slow the planning of every
+    later query in the module."""
     yield
     if not _SHARED_CPGS & set(request.fixturenames):
         spark.catalog.clearCache()

@@ -19,7 +19,7 @@ def spark():
 
 def test_stream_cpg_matches_batch(spark, tmp_path_factory):
     from joern_spark.corpus import fixture_source
-    from joern_spark.operators.parse import ast_edges, intra_edges, parse_source, with_ids
+    from joern_spark.operators.parse import derived_edges, parse_source, with_ids
     from joern_spark.streaming import stream_cpg
 
     d = tmp_path_factory.mktemp("stream")
@@ -36,7 +36,7 @@ def test_stream_cpg_matches_batch(spark, tmp_path_factory):
 
     batch_nodes = with_ids(parse_source(fixture_source(spark)))
     ok = batch_nodes.filter(F.col("parse_error") == "")
-    want_edges = ast_edges(ok).unionByName(intra_edges(ok))
+    want_edges = derived_edges(ok)
     assert got_nodes.count() == batch_nodes.count()
     assert got_edges.count() == want_edges.count()
 

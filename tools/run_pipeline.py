@@ -40,7 +40,6 @@ def main() -> None:
     ap.add_argument("--langs", default=None, help="comma list, e.g. c,cpp,java")
     ap.add_argument("--repartition", type=int, default=None,
                     help="(repo,lang) repartition width for the parse stage")
-    ap.add_argument("--no-callgraph", action="store_true")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -57,8 +56,7 @@ def main() -> None:
     n_files = src.count()
 
     t0 = time.time()
-    out = build_cpg(spark, src, out_dir=args.checkpoint,
-                    run_callgraph=not args.no_callgraph)
+    out = build_cpg(spark, src, out_dir=args.checkpoint)
     write_graph_tables(out, args.output)
     wall = time.time() - t0
     print(json.dumps({"files": n_files, "wall_sec": round(wall, 2),
