@@ -1,17 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Two query families:
-
-* ``cpg_*`` — the code-property-graph pipeline (the north star). Input is the
-  deterministic fixture corpus (BASELINE.json input_hint: the engine's input
-  is a source-code table, synthesized at small scale — see FIXTURES.md §1);
-  the oracle is a pure-Python single-node re-implementation
-  (joern_spark/oracle.py) rendered as DuckDB VALUES SQL, so the driver
-  validates the distributed plan (hash ids, joins, groupBys, shuffles)
-  against a trusted sequential run.
-* data-pipeline queries (dedup / text analysis / ANN / rollups) — run on the
-  sf_dir documents/embeddings/events parquet with genuine DuckDB SQL oracles
-  (same md5-based hashing on both engines → bit-exact comparison).
+Every query is a ``cpg_*`` query over the code-property-graph pipeline (the
+north star). Input is the deterministic fixture corpus (BASELINE.json
+input_hint: the engine's input is a source-code table, synthesized at small
+scale — see FIXTURES.md §1); the oracle is a pure-Python single-node
+re-implementation (joern_spark/oracle.py) rendered as DuckDB VALUES SQL, so
+the driver validates the distributed plan (hash ids, joins, groupBys,
+shuffles) against a trusted sequential run.
 
 The CPG is built ONCE per session and cached; each query is then a small
 join/projection over the cached nodes/edges relations.
@@ -493,7 +488,8 @@ def q_cpg_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tp", "fp", "fn", "precision_bp", "recall_bp")
 
 
-def _cpg_oracles() -> dict[str, str]:
+def oracle_sql() -> dict[str, str]:
+    """Driver contract: one DuckDB SQL oracle per ``queries()`` name."""
     from joern_spark import oracle as O
     return {
         "cpg_methods": O.values_sql(
@@ -656,17 +652,4 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from joern_spark.datapipe import DATA_QUERIES
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = dict(CPG_QUERIES)
-    for name, (fn, _sql) in DATA_QUERIES.items():
-        out[name] = fn
-    return out
-
-
-def oracle_sql() -> dict[str, str]:
-    from joern_spark.datapipe import DATA_QUERIES
-    out = _cpg_oracles()
-    for name, (_fn, sql) in DATA_QUERIES.items():
-        if sql is not None:
-            out[name] = sql
-    return out
+    return dict(CPG_QUERIES)

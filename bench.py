@@ -1,15 +1,16 @@
 """Benchmark harness. Prints ONE JSON line:
 
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "files_per_sec": ...}
+   "queries": {name: sec, ...}, "files_per_sec": ...}
 
 Headline: end-to-end CPG triple extraction (parse -> base link -> call graph
 -> intraprocedural CFG/DDG) over a JVM-generated synthetic C corpus
 (deliberately skewed: mega-repo + hot external symbols, FIXTURES.md §8),
-plus the training-data operators at $SPARK_GRAFT_SF_DIR.
+plus two traversal queries over the built graph. The gated CPG build
+benchmark is ``cpgbench/run.py`` (BENCH.md); this script is a quick
+throughput probe.
 
 Env knobs:
-  SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS     local[N] cores (default all)
   BENCH_FILES          synthetic corpus size (default 4000)
 """
@@ -30,11 +31,8 @@ def main():
     from joern_spark.corpus import bench_source
     from joern_spark.plans.pipeline import build_cpg
     from joern_spark.session import get_spark
-    from joern_spark.datapipe import DATA_QUERIES
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_files = int(os.environ.get("BENCH_FILES", "4000"))
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1
 
     spark = get_spark(app="joern_spark_bench")
     timings: dict[str, float] = {}
@@ -42,8 +40,7 @@ def main():
 
     # Host CPU drifts ~3x with load (BENCH.md): a single sample per query
     # makes round-over-round deltas pure noise (VERDICT r2/r3). Every query
-    # -- including the CPG-side ones -- is sampled SAMPLES times in
-    # alternating order (so a slow-host window hits all queries, not one);
+    # is sampled SAMPLES times in alternating order (so a slow-host window hits all queries, not one);
     # best-of is reported per query plus the raw samples, and
     # steady_state_total (= sum of best-ofs) is the round-comparable figure.
     samples = int(os.environ.get("BENCH_QUERY_SAMPLES", "3"))
@@ -52,14 +49,7 @@ def main():
     # ---- headline: CPG construction throughput --------------------------- #
     build_times: list[float] = []
     stage_samples: dict[str, list[float]] = {}
-    out = None
-    for i in range(build_samples):
-        if out is not None:
-            for df in (out["nodes"], out["edges"]):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+    for _ in range(build_samples):
         t0 = time.time()
         src = bench_source(spark, n_files)
         out = build_cpg(spark, src)
@@ -108,42 +98,26 @@ def main():
     cpg_queries = {"cpg_top_callees": _q_top_callees,
                    "cpg_cfg_stats": _q_cfg_stats}
 
-    data_queries = {} if os.environ.get("BENCH_CPG_ONLY") else DATA_QUERIES
-    all_samples: dict[str, list[float]] = {
-        name: [] for name in list(cpg_queries) + list(data_queries)}
+    all_samples: dict[str, list[float]] = {name: [] for name in cpg_queries}
     for _ in range(samples):
         for name, q in cpg_queries.items():
             t0 = time.time()
             q()
             all_samples[name].append(round(time.time() - t0, 3))
-        for name, (fn, _sql) in data_queries.items():
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            all_samples[name].append(round(time.time() - t0, 3))
     for name, ts in all_samples.items():
         timings[name] = min(ts)
     all_samples["cpg_build"] = build_times
 
-    for df in (nodes, edges):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
     total = round(time.time() - t_all, 3)
-    steady = round(sum(timings[k] for k in timings
-                       if k in all_samples or k in ("cpg_build",)), 3)
+    steady = round(sum(timings[k] for k in all_samples), 3)
     print(json.dumps({
-        "metric": ("cpg_build_total" if os.environ.get("BENCH_CPG_ONLY")
-                   else "cpg_build_and_pipeline_total"),
+        "metric": "cpg_build_total",
         "value": steady,
         "unit": "sec",
         "wall_total": total,
         "steady_state_total": steady,
         "queries": timings,
         "query_samples": all_samples,
-        "sf": sf,
         "bench_files": n_files,
         "cpg_nodes": n_nodes,
         "cpg_edges": n_edges,

@@ -7,11 +7,11 @@ axis: each Arrow batch of (repo, path, commit, lang, content) rows is parsed
 in-process; per-file failures degrade to a single ``parse_error`` row instead
 of failing the task (at 10^12-file scale some files WILL be pathological).
 
-When ``fuse_intraprocedural`` is on (default), the CFG / dominator / CDG /
-reaching-def kernels run inside the same stage on the just-built AST — the
-per-method passes of the reference (CfgCreationPass, CfgDominatorPass,
-CdgPass, ReachingDefPass) collapse into the parse stage with ZERO extra
-shuffle, because method locality ⊂ file locality.
+The CFG / dominator / CDG / reaching-def kernels run inside the same stage
+on the just-built AST — the per-method passes of the reference
+(CfgCreationPass, CfgDominatorPass, CdgPass, ReachingDefPass) collapse into
+the parse stage with ZERO extra shuffle, because method locality ⊂ file
+locality.
 """
 
 from __future__ import annotations
@@ -54,9 +54,10 @@ def _parse_one(repo: str, path: str, commit: str, lang: str, content: str,
 
 
 def _fuse_intra_edges(rows: list[dict]) -> None:
-    """Run the per-method control-flow kernels and attach edge arrays to the
-    METHOD rows (reaching-def is a separate stage for now)."""
+    """Run the per-method control-flow and reaching-def kernels and attach
+    their edge arrays to the METHOD rows."""
     from joern_spark.operators.controlflow import cfg_for_method, dominator_edges
+    from joern_spark.operators.dataflow import reaching_def_edges
 
     by_method: dict[int, list[dict]] = {}
     methods = []
@@ -84,16 +85,12 @@ def _fuse_intra_edges(rows: list[dict]) -> None:
             for pairs, code in ((dom, dom_code), (pdom, pdom_code), (cdg, cdg_code)):
                 for s, d in pairs:
                     srcs.append(s); dsts.append(d); labels.append(code); variables.append(None)
-        try:
-            from joern_spark.operators.dataflow import reaching_def_edges
-            for s, d, v in reaching_def_edges(mrows, m, cfg):
-                srcs.append(s); dsts.append(d); labels.append(rdef_code); variables.append(v)
-        except ImportError:
-            pass
+        for s, d, v in reaching_def_edges(mrows, m, cfg):
+            srcs.append(s); dsts.append(d); labels.append(rdef_code); variables.append(v)
         m["ie_src"], m["ie_dst"], m["ie_label"], m["ie_var"] = srcs, dsts, labels, variables
 
 
-def parse_source(source: DataFrame, fuse_intraprocedural: bool = True) -> DataFrame:
+def parse_source(source: DataFrame) -> DataFrame:
     """source(repo,path,commit,lang,content) → raw node rows.
 
     The sha256 lineage column is computed JVM-side (F.sha2) and carried
@@ -107,7 +104,7 @@ def parse_source(source: DataFrame, fuse_intraprocedural: bool = True) -> DataFr
             out: list[dict] = []
             for t in pdf.itertuples(index=False):
                 out.extend(_parse_one(t.repo, t.path, t.commit, t.lang,
-                                      t.content, t.sha256, fuse_intraprocedural))
+                                      t.content, t.sha256, True))
             if out:
                 yield pd.DataFrame(out, columns=RAW_COLS)
 

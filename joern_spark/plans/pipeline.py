@@ -100,7 +100,6 @@ def source_fingerprint(source: DataFrame) -> str:
 
 
 def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None,
-              fuse_intraprocedural: bool = True,
               fingerprint: str | None = None) -> dict[str, DataFrame]:
     """source(repo,path,commit,lang,content) → {nodes, edges, errors,
     canonical, timings}."""
@@ -137,6 +136,12 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     # boundary gives every consumer a pruned columnar scan — the same reason
     # the reference hands off cpg.bin between frontend and console
     # (CpgGenerator.scala:28-48).
+    # Both modes write it unpartitioned, so the link task's first-row picks
+    # (``pos``) see the same row order and both build the same graph. A
+    # partitionBy("lang") write would sort the wide parse rows per task
+    # (~40% more parse+write time on the bench corpus); lang-filtered
+    # consumers skip via parquet row-group stats instead (each row group is
+    # single-language in practice) plus the explicit has_js gate below.
     nodes = None
     if out_dir:
         nodes = _resume(spark, out_dir, "nodes", fp)
@@ -145,16 +150,10 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     timings: dict[str, float] = {}
     t_parse = time.time()
     if nodes is None:
-        raw = parse_source(source, fuse_intraprocedural=fuse_intraprocedural)
-        nodes = with_ids(raw)
+        nodes = with_ids(parse_source(source))
         if out_dir:
-            nodes = _write_stage(nodes, out_dir, "nodes", fp, partition_by=["lang"])
+            nodes = _write_stage(nodes, out_dir, "nodes", fp)
         else:
-            # NO partitionBy here: dynamic partition writes sort the wide
-            # parse rows per task, inflating the parse+write stage ~40% on
-            # the bench corpus; lang-filtered consumers instead skip via
-            # parquet row-group stats (each row group is single-language in
-            # practice) plus the explicit has_js gate below
             path = os.path.join(out_dir_adhoc, "nodes")
             nodes.write.mode("overwrite").parquet(path)
             nodes = spark.read.parquet(path)

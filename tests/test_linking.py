@@ -155,14 +155,40 @@ def test_canonical_call_edge_rewrite(spark):
     assert all("Helpers.tripler" in t["callee"] for t in targets)
 
 
-def test_salted_join_matches_plain_join(spark):
-    from joern_spark.functions import salted_join
-    big = spark.range(0, 1000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("payload"))
-    dim = spark.createDataFrame([(i, f"v{i}") for i in range(7)], "k long, val string")
-    got = salted_join(big, dim, "k", n_salts=4).select("payload", "val")
-    want = big.join(dim, "k").select("payload", "val")
-    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+def test_adhoc_and_checkpointed_builds_agree(spark, tmp_path):
+    """Where one fullname is declared in several files, the link task picks
+    the first row in parse-output order. Both build modes write the parse
+    stage in one layout, so they pick the same rows and build the same
+    graph. The input spreads two copies of ``p.Foo`` over two source
+    partitions next to files of other sizes and languages, so a per-lang
+    partitioned parse stage would reorder them."""
+    import collections
+
+    from joern_spark.plans.pipeline import build_cpg
+
+    foo = ("package p;\npublic class Foo {\n  int x;\n"
+           "  public int bar(int a) { return a + x; }\n"
+           "  public String toString() { return \"Foo\"; }\n}\n")
+    big_c = "\n".join(f"int f{i}(int a) {{ int t = a * {i}; if (t > {i}) "
+                      f"{{ t = t - 1; }} return t; }}" for i in range(60))
+    user = ("package app;\nimport p.Foo;\npublic class User {\n"
+            + "\n".join(f"  int u{i}(Foo f) {{ return f.bar({i}); }}"
+                        for i in range(15)) + "\n}\n")
+    rows = [("r1", "p/Foo.java", "a" * 40, "java", foo),
+            ("r1", "src/big.c", "a" * 40, "c", big_c),
+            ("r2", "p/Foo.java", "b" * 40, "java", foo),
+            ("r2", "app/User.java", "b" * 40, "java", user)]
+    src = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2),
+        "repo string, path string, commit string, lang string, content string")
+
+    def edges(out):
+        return collections.Counter(tuple(r) for r in out["edges"].select(
+            "src", "dst", "label", "variable").collect())
+
+    adhoc = edges(build_cpg(spark, src))
+    assert any(label == M.BINDS for _, _, label, _ in adhoc)
+    assert adhoc == edges(build_cpg(spark, src, out_dir=str(tmp_path / "cpg")))
 
 
 _LINK_COLS = ["kind", "id", "name", "full_name", "signature", "method_full_name",
