@@ -8,8 +8,8 @@ re-implementation (joern_spark/oracle.py) rendered as DuckDB VALUES SQL, so
 the driver validates the distributed plan (hash ids, joins, groupBys,
 shuffles) against a trusted sequential run.
 
-The CPG is built ONCE per session and cached; each query is then a small
-join/projection over the cached nodes/edges relations.
+The CPG is built ONCE per session and written as graph tables; each query
+is then a small join/projection over the tables read back.
 """
 
 from __future__ import annotations
@@ -21,28 +21,23 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 _CPG_CACHE: dict[int, dict] = {}
 
 
-def _code_fingerprint() -> str:
-    """Hash of the engine source — stale parquet checkpoints from older code
-    must not satisfy a newer run."""
-    import glob
-    import hashlib
-    h = hashlib.sha256()
-    for p in sorted(glob.glob("/root/repo/joern_spark/**/*.py", recursive=True)):
-        with open(p, "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:16]
+def _graph(spark: SparkSession, src: DataFrame) -> dict:
+    """An ad-hoc build of ``src``, written as graph tables into a temporary
+    directory that is cached next to the frames read back from it."""
+    import tempfile
+
+    from joern_spark.plans.pipeline import build_cpg
+    from joern_spark.sources import read_graph_tables, write_graph_tables
+    tables = tempfile.TemporaryDirectory(prefix="joern_spark_tables_")
+    write_graph_tables(build_cpg(spark, src), tables.name)
+    return {**read_graph_tables(spark, tables.name), "tables": tables}
 
 
 def _cpg(spark: SparkSession) -> dict:
     key = id(spark)
     if key not in _CPG_CACHE:
         from joern_spark.corpus import fixture_source
-        from joern_spark.plans.pipeline import build_cpg, source_fingerprint
-        src = fixture_source(spark)
-        fp = f"{source_fingerprint(src)}:{_code_fingerprint()}"
-        out = build_cpg(spark, src, out_dir="/tmp/joern_spark_cpg/fixtures",
-                        fingerprint=fp)
-        _CPG_CACHE[key] = out
+        _CPG_CACHE[key] = _graph(spark, fixture_source(spark))
     return _CPG_CACHE[key]
 
 
@@ -55,16 +50,11 @@ def _scan_cpg(spark: SparkSession) -> dict:
     corpus so its oracles stay untouched."""
     key = id(spark)
     if key not in _SCAN_CPG_CACHE:
-        from joern_spark.plans.pipeline import build_cpg, source_fingerprint
         from joern_spark.scanners_c import suite_source_rows
-        src = spark.createDataFrame(
+        _SCAN_CPG_CACHE[key] = _graph(spark, spark.createDataFrame(
             suite_source_rows(),
             "repo string, path string, commit string, lang string, "
-            "content string")
-        fp = f"{source_fingerprint(src)}:{_code_fingerprint()}"
-        _SCAN_CPG_CACHE[key] = build_cpg(
-            spark, src, out_dir="/tmp/joern_spark_cpg/scanfix",
-            fingerprint=fp)
+            "content string"))
     return _SCAN_CPG_CACHE[key]
 
 

@@ -1,15 +1,20 @@
-"""Staged CPG pipeline with parquet checkpoints, per-stage lineage manifests
-and idempotent resume.
+"""CPG pipeline: one parquet checkpoint for the parse stage, lazy relations
+after it.
 
 Stage order mirrors the reference overlay order (X2Cpg.scala:374-388 →
 DefaultOverlays.scala:18-25): parse (AST + fused intraprocedural passes) →
 the link tail (stubs, bindings, call graph, canonicalization; one grouped
 pandas task) → the row-scale base passes and edges. Every stage is a pure
-DataFrame→DataFrame function; a checkpointed stage writes partitioned parquet plus a
-``_manifest.json`` (stage name, row count, input fingerprint, wall time) and
-a re-run with the same fingerprint short-circuits to a read — the analogue of
-the reference's frontend↔console file handoff (CpgGenerator.scala:28-48),
-which is exactly a resume boundary.
+DataFrame→DataFrame function.
+
+A build materializes twice: the parse output, written here, and the graph
+tables, written by ``sources.write_graph_tables`` from the lazy relations
+``build_cpg`` returns. The parse stage writes unpartitioned parquet plus a
+``_manifest.json`` (input fingerprint, row count, whether any JavaScript
+parsed, wall time); a checkpointed re-run (``out_dir``) with the same
+fingerprint reads it back instead of re-parsing — the analogue of the
+reference's frontend↔console file handoff (CpgGenerator.scala:28-48),
+which is exactly a resume boundary. Everything after it is recomputed.
 """
 
 from __future__ import annotations
@@ -27,71 +32,55 @@ from joern_spark.operators import typerecovery as TR
 from joern_spark.operators.parse import derived_edges, parse_source, with_ids
 
 
-def _manifest_path(out_dir: str, stage: str) -> str:
-    return os.path.join(out_dir, stage, "_manifest.json")
-
-
-# Ad-hoc (out_dir=None) builds checkpoint to a RAM-backed scratch dir; every
-# dir created in this process is removed at interpreter exit so repeated
-# builds (test suites, bench loops) don't accumulate tmpfs usage across runs.
-_ADHOC_DIRS: list[str] = []
-
-
 def _adhoc_scratch_dir() -> str:
+    """A fresh directory for an ad-hoc build's parse stage, removed at
+    interpreter exit."""
     import atexit
     import shutil
     import tempfile
 
-    base = None
-    if os.path.isdir("/dev/shm"):
-        st = os.statvfs("/dev/shm")
-        # fall back to disk when tmpfs is nearly full (graph parquet for a
-        # large corpus would OOM the RAM disk)
-        if st.f_bavail * st.f_frsize > 4 << 30:
-            base = "/dev/shm"
-    d = tempfile.mkdtemp(prefix="joern_spark_parse_", dir=base)
-    if not _ADHOC_DIRS:
-        atexit.register(lambda: [shutil.rmtree(p, ignore_errors=True)
-                                 for p in _ADHOC_DIRS])
-    _ADHOC_DIRS.append(d)
+    d = tempfile.mkdtemp(prefix="joern_spark_parse_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
 
-def _write_stage(df: DataFrame, out_dir: str, stage: str, fingerprint: str,
-                 partition_by: list[str] | None = None) -> DataFrame:
+def _write_stage(df: DataFrame, stage_dir: str,
+                 fingerprint: str | None) -> tuple[DataFrame, dict]:
     from pyspark.sql import Observation
-    path = os.path.join(out_dir, stage)
+    path = os.path.join(stage_dir, "nodes")
     t0 = time.time()
-    # manifest row count rides the write job via observe() — no second
-    # count job over the freshly written parquet
-    obs = Observation(f"rows_{stage}")
-    w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    rows = obs.get["rows"]
-    spark = df.sparkSession
-    out = spark.read.parquet(path)
-    with open(_manifest_path(out_dir, stage), "w") as f:
-        json.dump({"stage": stage, "fingerprint": fingerprint, "rows": rows,
-                   "wall_sec": round(time.time() - t0, 3)}, f)
-    return out
+    # the manifest's facts ride the write job via observe() — no second job
+    # over the freshly written parquet
+    obs = Observation("parse_stage")
+    ok_js = (F.col("lang") == "javascript") & (F.col("parse_error") == "")
+    (df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                F.max(ok_js.cast("int")).alias("js"))
+     .write.mode("overwrite").parquet(path))
+    manifest = {"stage": "nodes", "fingerprint": fingerprint,
+                "rows": obs.get["rows"], "has_js": obs.get["js"] == 1,
+                "wall_sec": round(time.time() - t0, 3)}
+    with open(os.path.join(path, "_manifest.json"), "w") as f:
+        json.dump(manifest, f)
+    return df.sparkSession.read.parquet(path), manifest
 
 
-def _resume(spark: SparkSession, out_dir: str, stage: str, fingerprint: str) -> DataFrame | None:
-    mp = _manifest_path(out_dir, stage)
+def _resume(spark: SparkSession, stage_dir: str,
+            fingerprint: str | None) -> tuple[DataFrame, dict] | None:
+    path = os.path.join(stage_dir, "nodes")
+    mp = os.path.join(path, "_manifest.json")
     if os.path.exists(mp):
         with open(mp) as f:
             m = json.load(f)
-        if m.get("fingerprint") == fingerprint:
-            return spark.read.parquet(os.path.join(out_dir, stage))
+        # a manifest without has_js cannot gate type recovery: re-parse
+        if m.get("fingerprint") == fingerprint and "has_js" in m:
+            return spark.read.parquet(path), m
     return None
 
 
 def source_fingerprint(source: DataFrame) -> str:
     """Order-insensitive fingerprint of the input table: xor of row hashes.
     The per-row invariant (sha256 of content) rolls up into the stage
-    manifests, giving end-to-end lineage vs the input."""
+    manifest, giving end-to-end lineage vs the input."""
     h = (source.select(F.xxhash64("repo", "path", "commit", "lang",
                                   F.sha2("content", 256)).alias("h"))
          .agg(F.expr("bit_xor(h)").alias("s"), F.count("*").alias("c"))
@@ -99,64 +88,43 @@ def source_fingerprint(source: DataFrame) -> str:
     return f"{h['s']}:{h['c']}"
 
 
-def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None,
-              fingerprint: str | None = None) -> dict[str, DataFrame]:
+def build_cpg(spark: SparkSession, source: DataFrame,
+              out_dir: str | None = None) -> dict[str, DataFrame]:
     """source(repo,path,commit,lang,content) → {nodes, edges, errors,
-    canonical, timings}."""
-    # The edges stage is a wide union of operator branches; its rendered
+    canonical, timings}.
+
+    ``out_dir`` keeps the parse stage for resume; without it the stage goes
+    to a scratch directory. ``nodes``, ``edges`` and ``canonical`` are lazy
+    plans over that stage and the link task's checkpoint: write them once
+    with ``sources.write_graph_tables`` and query what ``read_graph_tables``
+    returns."""
+    # The edges relation is a wide union of operator branches; its rendered
     # explain string runs to hundreds of MB, and AQE re-renders it on every
     # plan update (AdaptiveSparkPlanExec.onUpdatePlan) — on a default-heap
     # driver that alone OOMs. Cap the plan string on whatever session the
     # caller hands us (runtime-settable SQL conf; explain output truncates
     # with a notice instead of materializing the full tree).
     spark.conf.set("spark.sql.maxPlanStringLength", "100000")
-    fp = fingerprint
-    if out_dir:
-        os.makedirs(out_dir, exist_ok=True)
-        fp = fp or source_fingerprint(source)
-        # full resume: all stage checkpoints match the input fingerprint →
-        # no plan construction at all
-        done_nodes = _resume(spark, out_dir, "nodes", fp)
-        done_all = _resume(spark, out_dir, "all_nodes", fp)
-        done_edges = _resume(spark, out_dir, "edges", fp)
-        if done_nodes is not None and done_all is not None and done_edges is not None:
-            # the canonical map persists as its own fingerprinted stage, so a
-            # clean resume restores the entity-linking output too (a resumed
-            # build followed by write_graph_tables must not lose it)
-            return {"nodes": done_all, "edges": done_edges,
-                    "errors": done_nodes.filter(F.col("parse_error") != ""),
-                    "canonical": _resume(spark, out_dir, "canonical", fp)}
 
     # ---- stage 1: parse (+ fused per-method passes) -------------------------
-    # The parse output is ALWAYS checkpointed to parquet, even for ad-hoc
-    # (out_dir=None) runs: the link task's input, the row-scale base passes,
-    # the edge derivation and the node union each scan it, and a cached
-    # in-memory copy of the wide rows (ie_* arrays) both risks eviction →
-    # silent Python re-parse and defeats column pruning. A parquet stage
-    # boundary gives every consumer a pruned columnar scan — the same reason
-    # the reference hands off cpg.bin between frontend and console
-    # (CpgGenerator.scala:28-48).
-    # Both modes write it unpartitioned, so the link task's first-row picks
-    # (``pos``) see the same row order and both build the same graph. A
+    # The parse output is always written to parquet: the link task's input,
+    # the row-scale base passes, the edge derivation and the node union each
+    # scan it, and a cached in-memory copy of the wide rows (ie_* arrays)
+    # both risks eviction → silent Python re-parse and defeats column
+    # pruning. It is written unpartitioned, so the link task's first-row
+    # picks (``pos``) see one row order, kept or scratch. A
     # partitionBy("lang") write would sort the wide parse rows per task
     # (~40% more parse+write time on the bench corpus); lang-filtered
     # consumers skip via parquet row-group stats instead (each row group is
-    # single-language in practice) plus the explicit has_js gate below.
-    nodes = None
-    if out_dir:
-        nodes = _resume(spark, out_dir, "nodes", fp)
-    else:
-        out_dir_adhoc = _adhoc_scratch_dir()
+    # single-language in practice) plus the manifest's has_js gate below.
+    # only a kept stage can be resumed, so only it pays the fingerprint job
+    stage_dir = out_dir or _adhoc_scratch_dir()
+    fp = source_fingerprint(source) if out_dir else None
     timings: dict[str, float] = {}
     t_parse = time.time()
-    if nodes is None:
-        nodes = with_ids(parse_source(source))
-        if out_dir:
-            nodes = _write_stage(nodes, out_dir, "nodes", fp)
-        else:
-            path = os.path.join(out_dir_adhoc, "nodes")
-            nodes.write.mode("overwrite").parquet(path)
-            nodes = spark.read.parquet(path)
+    nodes, manifest = (_resume(spark, stage_dir, fp)
+                       or _write_stage(with_ids(parse_source(source)),
+                                       stage_dir, fp))
     timings["parse_extract_sec"] = round(time.time() - t_parse, 3)
     t_link = time.time()
 
@@ -166,17 +134,15 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     # ---- stage 2: the link tail, one grouped pandas task ---------------------
     # XTypeRecovery lite: recovered JS methodFullNames reach the link task,
     # so require()-bound member calls get stubs + CALL edges (XTypeHintCallLinker
-    # analogue). The limit-1 probe skips type recovery and the JS inheritance
-    # resolution on JS-free input (parquet row-group lang stats make it a
-    # near-metadata read there).
-    has_js = not ok.filter(F.col("lang") == "javascript").limit(1).isEmpty()
+    # analogue). JS-free input skips type recovery and the JS inheritance
+    # resolution.
+    has_js = manifest["has_js"]
     rewrites = TR.js_mfn_rewrites(ok) if has_js else None
     # One eager checkpoint runs the task; its (dimension-sized) output is a
     # leaf that every consumer below reads: stubs, TYPE and BINDING nodes,
     # link edges with canonical CALL targets, and the canonical map.
     link = L.link_tail(ok, B.used_type_fullnames(ok, has_js),
                        rewrites).localCheckpoint(eager=True)
-    canonical = L.canonical_map(link)
 
     # ---- stage 3: row-scale base passes and edges ----------------------------
     extra_nodes, base_edges = B.run_base(ok, has_js)
@@ -184,30 +150,9 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     edges = (derived_edges(ok).unionByName(base_edges)
              .unionByName(L.link_edges(link)))
 
-    if out_dir:
-        def stage(name: str, df: DataFrame, part: list[str] | None) -> DataFrame:
-            done = _resume(spark, out_dir, name, fp)
-            return done if done is not None else _write_stage(
-                df, out_dir, name, fp, partition_by=part)
-
-        all_nodes = stage("all_nodes", all_nodes, ["lang"])
-        edges = stage("edges", edges, ["label"])
-        canonical = stage("canonical", canonical, None)
-    else:
-        # callers typically run several queries over the result — materialize
-        # the final edge relation as parquet on tmpfs rather than a
-        # deserialized in-memory cache: caching tens of millions of edge
-        # objects is GC-bound and does not scale with cores, while a columnar
-        # write parallelizes and every later query gets a pruned scan.
-        # all_nodes = parquet parse output ∪ small link-output projections —
-        # cheap to recompute, not re-written.
-        path = os.path.join(out_dir_adhoc, "edges")
-        edges.write.mode("overwrite").parquet(path)
-        edges = spark.read.parquet(path)
-
     timings["link_materialize_sec"] = round(time.time() - t_link, 3)
     return {"nodes": all_nodes, "edges": edges, "errors": errors,
-            "canonical": canonical, "timings": timings}
+            "canonical": L.canonical_map(link), "timings": timings}
 
 
 # --------------------------------------------------------------------------- #

@@ -50,50 +50,36 @@ def read_source_table(spark: SparkSession, location: str,
     return df
 
 
-def write_graph_tables(out: dict[str, DataFrame], location: str,
-                       mode: str = "overwrite") -> None:
-    """Materialize {nodes, edges, canonical} + metrics as partitioned tables.
+def write_graph_tables(out: dict[str, DataFrame], location: str) -> None:
+    """Materialize a build's {nodes, edges, canonical, errors} + metrics as
+    tables — the one write of its final relations (``build_cpg`` returns
+    them as lazy plans).
 
     Nodes partition on lang (the unit of downstream per-language analysis)
     and sort within files by (repo, full_name) — the parquet stand-in for
     Iceberg's bucketed sort order on method fullname: fullname-keyed lookups
-    touch few row groups via min/max stats."""
+    touch few row groups via min/max stats. Edges partition on label."""
     from joern_spark.plans.pipeline import partition_metrics
 
-    nodes, edges = out["nodes"], out["edges"]
-    (nodes.sortWithinPartitions("repo", "full_name")
-     .write.mode(mode).format(TABLE_FORMAT)
-     .partitionBy("lang").save(os.path.join(location, "nodes")))
-    (edges.write.mode(mode).format(TABLE_FORMAT)
-     .partitionBy("label").save(os.path.join(location, "edges")))
-    if out.get("canonical") is not None:
-        (out["canonical"].write.mode(mode).format(TABLE_FORMAT)
-         .save(os.path.join(location, "canonical")))
+    def save(df: DataFrame, table: str, *partition_by: str) -> None:
+        w = df.write.mode("overwrite").format(TABLE_FORMAT)
+        (w.partitionBy(*partition_by) if partition_by else w).save(
+            os.path.join(location, table))
+
+    nodes, errors = out["nodes"], out["errors"]
+    save(nodes.sortWithinPartitions("repo", "full_name"), "nodes", "lang")
+    save(out["edges"], "edges", "label")
+    save(out["canonical"], "canonical")
     # Failed parses are the expected case at scale (parse.py docstring):
     # build_cpg splits them out of `nodes`, so they must (a) be persisted as
     # their own table and (b) feed the lineage metrics — otherwise the
     # documented sha_rollup/n_files equality with source_sha_rollup silently
     # breaks as soon as one file fails to parse, and failed files vanish.
-    metrics_input = nodes.filter(F.col("node_idx") >= 0)
-    errors = out.get("errors")
-    if errors is not None:
-        (errors.write.mode(mode).format(TABLE_FORMAT)
-         .save(os.path.join(location, "errors")))
-        metrics_input = metrics_input.unionByName(
-            errors.filter(F.col("node_idx") >= 0))
-    (partition_metrics(metrics_input)
-     .write.mode(mode).format(TABLE_FORMAT)
-     .save(os.path.join(location, "metrics")))
+    save(errors, "errors")
+    save(partition_metrics(nodes.filter(F.col("node_idx") >= 0).unionByName(
+        errors.filter(F.col("node_idx") >= 0))), "metrics")
 
 
 def read_graph_tables(spark: SparkSession, location: str) -> dict[str, DataFrame]:
-    out = {
-        "nodes": spark.read.format(TABLE_FORMAT).load(os.path.join(location, "nodes")),
-        "edges": spark.read.format(TABLE_FORMAT).load(os.path.join(location, "edges")),
-        "metrics": spark.read.format(TABLE_FORMAT).load(os.path.join(location, "metrics")),
-    }
-    for extra in ("canonical", "errors"):
-        p = os.path.join(location, extra)
-        if os.path.isdir(p):
-            out[extra] = spark.read.format(TABLE_FORMAT).load(p)
-    return out
+    return {t: spark.read.format(TABLE_FORMAT).load(os.path.join(location, t))
+            for t in ("nodes", "edges", "canonical", "errors", "metrics")}

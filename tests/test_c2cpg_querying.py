@@ -55,9 +55,9 @@ int foo(int y) {
 
 @pytest.fixture(scope="module")
 def cpg():
-    from joern_spark.plans.pipeline import build_cpg
     from joern_spark.query import Cpg
     from joern_spark.session import get_spark
+    from tests.graph import built_graph
 
     spark = get_spark(master="local[4]", app="c2cpg_querying",
                       shuffle_partitions=8)
@@ -66,7 +66,7 @@ def cpg():
          for p, content in [("starter.c", STARTER_C), ("ddg.c", DDG_C),
                             ("locals.c", LOCALS_C), ("ast.c", AST_C)]],
         "repo string, path string, commit string, lang string, content string")
-    out = build_cpg(spark, src, out_dir=None)
+    out = built_graph(spark, src)
     return Cpg(out["nodes"], out["edges"])
 
 

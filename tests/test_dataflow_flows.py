@@ -18,9 +18,9 @@ def spark():
 @pytest.fixture(scope="module")
 def cpg(spark):
     from joern_spark.corpus import fixture_source
-    from joern_spark.plans.pipeline import build_cpg
     from joern_spark.query import Cpg
-    out = build_cpg(spark, fixture_source(spark))
+    from tests.graph import built_graph
+    out = built_graph(spark, fixture_source(spark))
     return Cpg(out["nodes"], out["edges"])
 
 

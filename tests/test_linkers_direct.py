@@ -49,10 +49,10 @@ def _src(spark, rows):
 
 def test_alias_linker_typedef_and_using(spark):
     from joern_spark.operators.base import type_id
-    from joern_spark.plans.pipeline import build_cpg
+    from tests.graph import built_graph
 
-    out = build_cpg(spark, _src(spark, [("src/alias.c", "c", ALIAS_C),
-                                        ("src/alias.cpp", "cpp", ALIAS_CPP)]))
+    out = built_graph(spark, _src(spark, [("src/alias.c", "c", ALIAS_C),
+                                          ("src/alias.cpp", "cpp", ALIAS_CPP)]))
     n, e = out["nodes"], out["edges"]
     aliases = (e.filter(F.col("label") == M.ALIAS_OF)
                .join(n.select(F.col("id").alias("src"),
@@ -85,9 +85,9 @@ int plain(int v) { return v + 1; }
 
 
 def test_method_decorator_param_out_mirror(spark):
-    from joern_spark.plans.pipeline import build_cpg
+    from tests.graph import built_graph
 
-    out = build_cpg(spark, _src(spark, [("src/params.c", "c", PARAMS_C)]))
+    out = built_graph(spark, _src(spark, [("src/params.c", "c", PARAMS_C)]))
     n, e = out["nodes"], out["edges"]
     # scope to parsed params (stub methods' synthesized p1/p2 params get
     # their clones from the stub pass itself, not the fused projection)

@@ -118,9 +118,9 @@ def test_inheritance_closure_empty():
 def test_canonical_aliases_match_oracle(spark):
     from joern_spark import oracle as O
     from joern_spark.corpus import fixture_source
-    from joern_spark.plans.pipeline import build_cpg
+    from tests.graph import built_graph
 
-    out = build_cpg(spark, fixture_source(spark))
+    out = built_graph(spark, fixture_source(spark))
     methods = out["nodes"].filter(F.col("kind") == M.METHOD).select(
         F.col("id").alias("m_id"), F.col("full_name").alias("alias"))
     got = {(r["alias"], r["canon_fn"])
@@ -137,9 +137,9 @@ def test_canonical_call_edge_rewrite(spark):
     """The CALL edge from UseHelper.run lands on the internal Helpers.tripler
     after canonicalization."""
     from joern_spark.corpus import fixture_source
-    from joern_spark.plans.pipeline import build_cpg
+    from tests.graph import built_graph
 
-    out = build_cpg(spark, fixture_source(spark))
+    out = built_graph(spark, fixture_source(spark))
     n, e = out["nodes"], out["edges"]
     caller = n.filter(F.col("full_name").contains("UseHelper.run")).select(
         F.col("id").alias("cid"))

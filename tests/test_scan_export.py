@@ -20,8 +20,8 @@ def spark():
 @pytest.fixture(scope="module")
 def cpg(spark):
     from joern_spark.corpus import fixture_source
-    from joern_spark.plans.pipeline import build_cpg
-    return build_cpg(spark, fixture_source(spark))
+    from tests.graph import built_graph
+    return built_graph(spark, fixture_source(spark))
 
 
 def test_findings_match_oracle(spark, cpg):

@@ -10,7 +10,6 @@ query's evidence must land in exactly the expected enclosing-function set
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from joern_spark import model as M
 from joern_spark.scanners_c import (
@@ -39,17 +38,16 @@ def _release_own_cpg(request, spark):
 
 
 def _cpg_for(spark, code: str, path: str):
-    from joern_spark.plans.pipeline import build_cpg
+    from tests.graph import built_graph
     src = spark.createDataFrame(
         [("fixtures/querydb", path, "c" * 40, "c", code)],
         "repo string, path string, commit string, lang string, content string")
-    out = build_cpg(spark, src)
+    out = built_graph(spark, src)
     n = out["nodes"].cache()
     e = out["edges"].cache()
     # the whole translation unit must parse (CDT recovers on the examples'
     # quirks — missing semicolons before `}` etc.; so must we)
-    bad = n.filter(F.col("parse_error") != "").count()
-    assert bad == 0, f"parse errors in {path}"
+    assert out["errors"].count() == 0, f"parse errors in {path}"
     return n, e
 
 
@@ -243,15 +241,15 @@ def test_run_bundles_schema(spark):
 # --- combined driver suite (cpg_scan_c) --------------------------------------- #
 
 def test_suite_findings_match_reference(spark):
-    from joern_spark.plans.pipeline import build_cpg
     from joern_spark.scanners_c import (
         suite_expected_rows, suite_findings, suite_source_rows)
+    from tests.graph import built_graph
     src = spark.createDataFrame(
         suite_source_rows(),
         "repo string, path string, commit string, lang string, content string")
-    out = build_cpg(spark, src)
+    out = built_graph(spark, src)
+    assert out["errors"].count() == 0
     n = out["nodes"].cache()
-    assert n.filter(F.col("parse_error") != "").count() == 0
     got = {(r["bundle"], r["query_name"], r["method_name"])
            for r in suite_findings(n, out["edges"]).collect()}
     assert got == set(suite_expected_rows())

@@ -84,11 +84,11 @@ def spark():
 
 
 def _build(spark, path, content):
-    from joern_spark.plans.pipeline import build_cpg
+    from tests.graph import built_graph
     src = spark.createDataFrame(
         [("fixtures/slicing", path, "f" * 40, "javascript", content)],
         "repo string, path string, commit string, lang string, content string")
-    return build_cpg(spark, src)
+    return built_graph(spark, src)
 
 
 @pytest.fixture(scope="module")

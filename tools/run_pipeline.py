@@ -1,6 +1,6 @@
-"""spark-submit entrypoint for the CPG construction pipeline.
-
-Cluster usage (north rule execution contract):
+"""spark-submit entrypoint for the CPG construction pipeline: reads a source
+table, builds the graph and writes it as graph tables, then prints one JSON
+line (files, wall seconds, files/sec). Cluster usage:
 
     python tools/make_pyfiles.py                       # builds dist/joern_spark.zip
     spark-submit \
@@ -15,12 +15,16 @@ Cluster usage (north rule execution contract):
       --output s3://bucket/cpg \
       --repartition $((N * 8))
 
-Run twice at N and 4N executors on the same --input for the scaling-
-efficiency evidence; the job prints one JSON metrics line (files, wall
-seconds, files/sec) for that comparison. Local sandbox equivalent:
+Local:
 
-    spark-submit --master 'local[8]' --py-files dist/joern_spark.zip \
-        tools/run_pipeline.py --input /dev/shm/src --output /dev/shm/cpg
+    spark-submit --master 'local[4]' --py-files dist/joern_spark.zip \
+        tools/run_pipeline.py --input /tmp/src --output /tmp/cpg
+
+With ``--checkpoint DIR`` the parse stage is kept in DIR, and a re-run over
+the same input reads it back instead of re-parsing; the link tail and the
+graph tables are rebuilt on every run. The files/sec figure is a single-run
+throughput probe, not a gated benchmark (BENCH.md; ``cpgbench/run.py`` is
+the gated one).
 """
 
 from __future__ import annotations
@@ -36,7 +40,8 @@ def main() -> None:
     ap.add_argument("--input", required=True, help="source table location")
     ap.add_argument("--output", required=True, help="graph tables location")
     ap.add_argument("--checkpoint", default=None,
-                    help="stage-checkpoint dir for idempotent resume")
+                    help="directory that keeps the parse stage, so a re-run "
+                         "over the same input skips parsing")
     ap.add_argument("--langs", default=None, help="comma list, e.g. c,cpp,java")
     ap.add_argument("--repartition", type=int, default=None,
                     help="(repo,lang) repartition width for the parse stage")
