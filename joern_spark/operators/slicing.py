@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from joern_spark import model as M
+from joern_spark.query import edge_adj, reach_pairs
 
 
 def usage_slices(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -118,44 +119,25 @@ def dataflow_slices(nodes: DataFrame, edges: DataFrame,
     for every call, its arguments seed a backward walk over REACHING_DEF
     (``sinks.repeat(_.ddgIn)(_.maxDepth(config.sliceDepth).emit)``,
     sliceDepth default 20 — slicing/package.scala:81); per-call slices are
-    then set-merged (``reduceOption``), so the merged node set equals the
-    depth-bounded backward REACHING_DEF closure of the seed set — which is
-    what the iterative frontier join below computes directly.
+    then set-merged (``reduceOption``), so the merged node set is the seed
+    set plus its depth-bounded backward REACHING_DEF closure — one
+    ``query.reach_pairs`` walk over all seeds at once.
 
     Returns flattened SliceNode rows (DataFlowSlicing.cfgNodeToSliceNode):
     (method_full_name, node_kind, name, code, type_full_name) with the
     reference's special cases — METHOD keeps its name, RETURN becomes
     "RET", METHOD_REF's name is its methodFullName, TYPE_REF's its
     typeFullName.
-
-    Scale shape: REACHING_DEF is intra-method, so every frontier join is a
-    method-local equi-join on node id; the visited set is checkpointed per
-    hop (flat lineage) and the loop exits early at fixpoint — depth 20 is
-    a bound, not a fixed cost. Nothing in the loop is proportional to the
-    corpus, only to the active frontier.
     """
-    rdef = (edges.filter(F.col("label") == M.REACHING_DEF)
-            .select("src", "dst").localCheckpoint(eager=True))
-
     # sinks: every argument of every call (DataFlowSlicing.scala:46
     # `c.argument` — ARGUMENT children incl. the index-0 receiver)
     call_ids = nodes.filter(F.col("kind") == M.CALL).select(
         F.col("id").alias("parent_id"))
-    visited = (nodes.filter(F.col("arg_index") >= 0)
-               .join(call_ids, "parent_id")
-               .select(F.col("id").alias("nid"))
-               .distinct().localCheckpoint(eager=True))
-
-    frontier = visited
-    for _ in range(slice_depth):
-        step = (rdef.join(frontier, rdef["dst"] == frontier["nid"])
-                .select(F.col("src").alias("nid")).distinct())
-        new = step.join(visited, "nid", "left_anti") \
-                  .localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
+    seeds = (nodes.filter(F.col("arg_index") >= 0).join(call_ids, "parent_id")
+             .select(F.lit(0).alias("fid"), F.col("id").alias("nid")))
+    back = reach_pairs(edge_adj(edges, M.REACHING_DEF, forward=False), seeds,
+                       slice_depth)
+    visited = back.select("nid").unionByName(seeds.select("nid")).distinct()
 
     methods = nodes.filter(F.col("kind") == M.METHOD).select(
         F.col("id").alias("method_id"),

@@ -13,14 +13,105 @@ filters (AstNodeTraversal.scala:96-211), AST walks (AstNodeTraversal.scala:
 14-95), expression context (ExpressionTraversal.scala:14-70), method
 structure (MethodTraversal.scala:16-171), call graph (callgraphextension),
 CFG/dominators, and dataflow ``reachableBy`` (ExtendedCfgNode.scala:15-60)
-as an iterative frontier join over REACHING_DEF triples.
+over REACHING_DEF triples.
+
+Every depth-bounded closure on the read side — the DSL's ``.repeat``
+steps, the scanner bundles' AST/dominator/REACHING_DEF walks, the copy-loop
+query and data-flow slices — is one call of :func:`reach_pairs`: a single
+grouped pandas task that runs the whole breadth-first walk in NumPy, so a
+walk costs the same few jobs whatever its depth.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from joern_spark import model as M
+
+
+def walk_pairs(adj: pd.DataFrame, seeds: pd.DataFrame,
+               max_depth: int) -> pd.DataFrame:
+    """(fid, nid) for every node that a walk of 1..``max_depth`` ``adj``
+    edges (src -> dst) reaches from one of fid's ``seeds`` (fid, nid).
+
+    A breadth-first search over (fid, node) states on a CSR adjacency, one
+    vectorized step per level. A state is expanded the first time it is
+    reached, so a seed that a walk reaches again (a cycle, or another seed
+    of the same fid) is reported like any other node; callers that want
+    only proper reachability anti-join their seeds."""
+    src = adj["src"].to_numpy(np.int64)
+    dst = adj["dst"].to_numpy(np.int64)
+    m = len(src)
+    ids, idx = np.unique(
+        np.concatenate([src, dst, seeds["nid"].to_numpy(np.int64)]),
+        return_inverse=True)
+    n = len(ids)
+    order = np.argsort(idx[:m], kind="stable")
+    nbr = idx[m:2 * m][order]
+    row = np.searchsorted(idx[:m][order], np.arange(n + 1))
+    fids, fidx = np.unique(seeds["fid"].to_numpy(np.int64), return_inverse=True)
+    # a state is the key fid_index * n + node_index
+    frontier = np.unique(fidx * n + idx[2 * m:])
+    reached = frontier[:0]
+    for _ in range(max_depth):
+        f, v = np.divmod(frontier, n)
+        lo, cnt = row[v], row[v + 1] - row[v]
+        total = int(cnt.sum())
+        if total == 0:
+            break
+        offset = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        step = np.unique(np.repeat(f, cnt) * n + nbr[np.repeat(lo, cnt) + offset])
+        frontier = np.setdiff1d(step, reached, assume_unique=True)
+        if not len(frontier):
+            break
+        reached = np.union1d(reached, frontier)
+    f, v = np.divmod(reached, n)
+    return pd.DataFrame({"fid": fids[f], "nid": ids[v]})
+
+
+def reach_pairs(adj: DataFrame, seeds: DataFrame, max_depth: int) -> DataFrame:
+    """(fid, nid) pairs reachable from fid's ``seeds`` (fid, nid) by a walk
+    of 1..``max_depth`` ``adj`` (src, dst) edges (:func:`walk_pairs`),
+    materialized once.
+
+    Edges and seeds go to one ``groupBy(<constant>).applyInPandas`` task.
+    No narrower key is exact: the link task attaches AST and DECLARES edges
+    to parents chosen by fullname, which can sit in another file or repo,
+    and stubs have no path (``linking.link_tail`` groups the same way). The
+    eager checkpoint runs the task and the seeds' plan once however often
+    the caller reads the result."""
+    def task(pdf: pd.DataFrame) -> pd.DataFrame:
+        e = pdf["edge"].to_numpy(bool)
+        return walk_pairs(pd.DataFrame({"src": pdf["a"][e], "dst": pdf["b"][e]}),
+                          pd.DataFrame({"fid": pdf["a"][~e], "nid": pdf["b"][~e]}),
+                          max_depth)
+
+    rows = (adj.select(F.lit(True).alias("edge"), F.col("src").cast("long").alias("a"),
+                       F.col("dst").cast("long").alias("b"))
+            .unionByName(seeds.select(F.lit(False).alias("edge"),
+                                      F.col("fid").cast("long").alias("a"),
+                                      F.col("nid").cast("long").alias("b"))))
+    return (rows.withColumn("walk_group", F.lit(0)).groupBy("walk_group")
+            .applyInPandas(task, "fid long, nid long")
+            .localCheckpoint(eager=True))
+
+
+def edge_adj(edges: DataFrame, label: str, forward: bool) -> DataFrame:
+    """(src, dst) adjacency of the ``label`` edges, reversed when not
+    ``forward``."""
+    a, b = ("src", "dst") if forward else ("dst", "src")
+    return edges.filter(F.col("label") == label).select(
+        F.col(a).alias("src"), F.col(b).alias("dst"))
+
+
+def parent_adj(nodes: DataFrame, up: bool) -> DataFrame:
+    """(src, dst) AST adjacency over the nodes' parent_id chain, child →
+    parent when ``up``."""
+    a, b = ("id", "parent_id") if up else ("parent_id", "id")
+    return nodes.filter(F.col("parent_id").isNotNull()).select(
+        F.col(a).alias("src"), F.col(b).alias("dst"))
 
 
 class Cpg:
@@ -180,24 +271,12 @@ class Steps:
         return Steps(self.cpg, out)
 
     def _closure(self, label: str, forward: bool, max_depth: int = 64) -> "Steps":
-        """Transitive closure by iterative frontier join (driver loop with
-        localCheckpoint to cut lineage) — the Spark form of `.repeat`."""
-        e = self.cpg.edges.filter(F.col("label") == label).select(
-            "src", "dst").localCheckpoint(eager=False)
-        a, b = ("src", "dst") if forward else ("dst", "src")
-        frontier = self._ids().select(F.col("id").alias("nid")).distinct() \
-            .localCheckpoint(eager=True)
-        seen = frontier
-        for _ in range(max_depth):
-            step = (frontier.join(e, frontier["nid"] == e[a])
-                    .select(F.col(b).alias("nid")).distinct())
-            new = step.join(seen, "nid", "left_anti").localCheckpoint(eager=True)
-            if new.isEmpty():
-                break
-            seen = seen.unionByName(new).localCheckpoint(eager=True)
-            frontier = new
-        start = self._ids().select(F.col("id").alias("nid"))
-        reached = seen.join(start, "nid", "left_anti")
+        """Nodes 1..max_depth ``label`` edges away from any of these, minus
+        these — the Spark form of `.repeat(...)(_.maxDepth(n))`. All start
+        nodes share one walk (one fid), so a node is reported once."""
+        start = self._ids().select(F.lit(0).alias("fid"), F.col("id").alias("nid"))
+        reached = (reach_pairs(edge_adj(self.cpg.edges, label, forward), start, max_depth)
+                   .select("nid").join(start, "nid", "left_anti"))
         out = reached.join(self.cpg.nodes, F.col("nid") == F.col("id")).drop("nid")
         return Steps(self.cpg, out)
 
@@ -491,9 +570,8 @@ class Steps:
     def reachable_by(self, sources: "Steps", max_depth: int = 64) -> "Steps":
         """Which of ``sources`` reach any of these sinks over REACHING_DEF
         edges — the reference solves this backwards from each sink with a
-        work-stealing task pool (Engine.scala:96-140); distributed, the whole
-        sink set advances as ONE frontier per iteration, deduped with a
-        left-anti join (the memoization table)."""
+        work-stealing task pool (Engine.scala:96-140); here the whole sink
+        set is one walk backwards (``_closure``)."""
         back = self._closure(M.REACHING_DEF, forward=False, max_depth=max_depth)
         reached = self.df.unionByName(back.df).select("id").distinct()
         out = sources.df.join(reached, "id", "left_semi")

@@ -8,9 +8,9 @@ bundle is a named DataFrame pipeline over the graph relations; results
 materialize both as a relational findings table and as FINDING node rows
 that can be unioned into the node relation.
 
-Scale shape: every bundle is a filter + bounded-depth join over the edges
-relation — no collects, no per-row Python; the AST-ancestor walk is a
-fixed-depth iterative join (loop nesting depth, not data size, bounds it).
+Scale shape: every bundle is a filter + joins over the node and edge
+relations — no collects; the copy-loop query's AST-ancestor walk is one
+grouped pandas task (``query.reach_pairs``).
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from joern_spark import model as M
+from joern_spark.query import parent_adj, reach_pairs
 
 INSECURE_FNS = ["gets", "strcpy", "strcat", "sprintf", "system", "scanf"]
 COPY_FNS = ["memcpy", "strcpy", "strncpy", "memmove"]
@@ -49,36 +50,16 @@ def insecure_calls(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 def copy_in_loop(nodes: DataFrame, edges: DataFrame,
                  max_depth: int = 12) -> DataFrame:
-    """Copy-routine calls inside a loop body (CopyLoops.scala:23-39): walk
-    AST parents of each matching call level by level; a FOR/WHILE/DO
-    ancestor marks the finding. Each level is eagerly checkpointed —
-    chaining the joins lazily builds an O(depth^2) Catalyst plan that costs
-    minutes to analyze, whereas the checkpointed frontier keeps every
-    level's plan one join deep (the walk is bounded by loop-nesting depth,
-    not data size) and the loop exits as soon as the frontier drains."""
-    calls = (_calls_named(nodes, COPY_FNS)
-             .select(F.col("id").alias("fid"), F.col("id").alias("cur"))
-             .localCheckpoint(eager=True))
-    parent_of = (nodes.filter(F.col("parent_id").isNotNull())
-                 .select(F.col("id").alias("cur"), F.col("parent_id").alias("up")))
+    """Copy-routine calls inside a loop body (CopyLoops.scala:23-39): a
+    FOR/WHILE/DO among a matching call's first ``max_depth`` AST ancestors
+    marks the finding. The ancestor walk is one ``reach_pairs`` task."""
+    calls = _calls_named(nodes, COPY_FNS).select(
+        F.col("id").alias("fid"), F.col("id").alias("nid"))
     loops = nodes.filter((F.col("kind") == M.CONTROL_STRUCTURE)
                          & F.col("control_structure_type").isin(LOOP_KINDS)) \
-                 .select(F.col("id").alias("cur"))
-    hits = []
-    frontier = calls
-    for _ in range(max_depth):
-        frontier = (frontier.join(parent_of, "cur")
-                    .select("fid", F.col("up").alias("cur"))
-                    .localCheckpoint(eager=True))
-        if frontier.isEmpty():
-            break
-        hits.append(frontier.join(loops, "cur").select("fid"))
-    if not hits:
-        return calls.select(F.col("fid").alias("id")).limit(0)
-    out = hits[0]
-    for h in hits[1:]:
-        out = out.unionByName(h)
-    return out.select(F.col("fid").alias("id")).distinct()
+                 .select(F.col("id").alias("nid"))
+    return (reach_pairs(parent_adj(nodes, up=True), calls, max_depth).join(loops, "nid")
+            .select(F.col("fid").alias("id")).distinct())
 
 
 DEFAULT_QUERIES: list[Query] = [

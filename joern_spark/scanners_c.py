@@ -14,13 +14,12 @@ from the same three scale-safe primitives:
 
 * equi-joins on the node/edge relations (AQE decides the physical join —
   nothing data-proportional is force-broadcast);
-* bounded iterative frontier joins for AST-ancestor / dominator-tree /
-  REACHING_DEF walks (depth is bounded by tree height, not data size; each
-  level is eagerly checkpointed so the Catalyst plan stays one join deep,
-  with early exit when the frontier drains);
+* depth-bounded AST-ancestor / dominator-tree / REACHING_DEF walks, each
+  one :func:`joern_spark.query.reach_pairs` call — a single grouped pandas
+  task, checkpointed once, whatever the depth;
 * per-method groupBys (map-side partial aggregation).
 
-No collects, no per-row Python in any traversal.
+No collects; the only Python in a traversal is the walk task.
 """
 
 from __future__ import annotations
@@ -31,6 +30,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from joern_spark import model as M
+from joern_spark.query import edge_adj, parent_adj, reach_pairs
 
 OP = "<operator>."
 ARITHMETIC_OPS = [
@@ -63,80 +63,36 @@ class ScanQuery:
 # shared plumbing
 # --------------------------------------------------------------------------- #
 
-def _chk(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
 def _seed(df: DataFrame) -> DataFrame:
-    """node rows → (fid, nid) frontier seeds (fid tracks provenance)."""
+    """node rows → (fid, nid) walk seeds (fid tracks provenance)."""
     return df.select(F.col("id").alias("fid"), F.col("id").alias("nid"))
 
 
 def _ancestor_pairs(nodes: DataFrame, seeds: DataFrame,
                     max_depth: int = 32) -> DataFrame:
     """(fid, nid=proper AST ancestor) pairs via the parent_id chain —
-    `inAstMinusLeaf` provenance-kept (AstNodeTraversal.scala:44-50).
-    Bounded frontier join: depth ≤ AST height, early exit, per-level
-    checkpoint keeps the plan one join deep."""
-    parent_of = nodes.filter(F.col("parent_id").isNotNull()).select(
-        F.col("id").alias("nid"), F.col("parent_id").alias("up"))
-    frontier = _chk(seeds.distinct())
-    out = []
-    for _ in range(max_depth):
-        frontier = _chk(frontier.join(parent_of, "nid")
-                        .select("fid", F.col("up").alias("nid")).distinct())
-        if frontier.isEmpty():
-            break
-        out.append(frontier)
-    if not out:
-        return seeds.limit(0)
-    acc = out[0]
-    for f in out[1:]:
-        acc = acc.unionByName(f)
-    return acc.distinct()
+    `inAstMinusLeaf` provenance-kept (AstNodeTraversal.scala:44-50). A seed
+    that is an ancestor of another seed of the same fid is kept."""
+    return reach_pairs(parent_adj(nodes, up=True), seeds, max_depth)
 
 
 def _descendant_pairs(nodes: DataFrame, seeds: DataFrame,
                       include_self: bool = True,
                       max_depth: int = 32) -> DataFrame:
     """(fid, nid=AST descendant) pairs — `.ast` provenance-kept."""
-    child_of = nodes.filter(F.col("parent_id").isNotNull()).select(
-        F.col("parent_id").alias("nid"), F.col("id").alias("down"))
-    frontier = _chk(seeds.distinct())
-    out = [frontier] if include_self else []
-    for _ in range(max_depth):
-        frontier = _chk(frontier.join(child_of, "nid")
-                        .select("fid", F.col("down").alias("nid")).distinct())
-        if frontier.isEmpty():
-            break
-        out.append(frontier)
-    if not out:
-        return seeds.limit(0)
-    acc = out[0]
-    for f in out[1:]:
-        acc = acc.unionByName(f)
-    return acc.distinct()
+    down = reach_pairs(parent_adj(nodes, up=False), seeds, max_depth)
+    return down.unionByName(seeds.select("fid", "nid")).distinct() \
+        if include_self else down
 
 
 def _edge_closure_pairs(edges: DataFrame, label: str, seeds: DataFrame,
                         forward: bool, max_depth: int = 64) -> DataFrame:
-    """(fid, nid) transitive closure over `label` edges, provenance-kept.
-    forward=False from a node walks to its DOMINATE/POST_DOMINATE tree
-    ancestors (its dominators / post-dominators)."""
-    e = edges.filter(F.col("label") == label).select("src", "dst")
-    a, b = ("src", "dst") if forward else ("dst", "src")
-    e = e.select(F.col(a).alias("nid"), F.col(b).alias("nxt"))
-    frontier = _chk(seeds.distinct())
-    seen = frontier
-    for _ in range(max_depth):
-        step = (frontier.join(e, "nid")
-                .select("fid", F.col("nxt").alias("nid")).distinct())
-        new = _chk(step.join(seen, ["fid", "nid"], "left_anti"))
-        if new.isEmpty():
-            break
-        seen = _chk(seen.unionByName(new))
-        frontier = new
-    return seen.join(seeds, ["fid", "nid"], "left_anti")
+    """(fid, nid) transitive closure over `label` edges, provenance-kept,
+    without fid's own seeds. forward=False from a node walks to its
+    DOMINATE/POST_DOMINATE tree ancestors (its dominators /
+    post-dominators)."""
+    return (reach_pairs(edge_adj(edges, label, forward), seeds, max_depth)
+            .join(seeds, ["fid", "nid"], "left_anti"))
 
 
 def _calls_to_method(nodes: DataFrame, edges: DataFrame,
@@ -1601,11 +1557,11 @@ def suite_findings(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     stubs — MethodStubCreator emits one `gets`/`free`/… stub for the whole
     corpus, and call-site resolution walks CALL edges into them) is exactly
     the per-suite cpg of the reference harness."""
-    # Materialize both relations once up front: the traversals below are
-    # bounded frontier-join loops (one eager action per level), and an
-    # un-checkpointed `edges` — a wide union of operator branches straight
-    # out of build_cpg — would re-execute that whole union on every level
-    # of every query (observed 10x+ wall-clock).
+    # Materialize both relations, and each bundle's node slice, once up
+    # front: a traversal reads them in many plan branches and in each of its
+    # `reach_pairs` jobs, and from local checkpoints those reads skip
+    # re-scanning and re-filtering the graph tables (without them the suite
+    # ran about a third slower).
     nodes = nodes.localCheckpoint(eager=True)
     edges = edges.localCheckpoint(eager=True)
     stubs = nodes.filter(F.col("path") == "")
