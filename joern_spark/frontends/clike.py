@@ -3377,7 +3377,7 @@ class CParser:
                 return node
 
     def try_tagged_template(self, node: "N", start: "Tok") -> "N | None":
-        """JS hook: `tag\`...\`` tagged template calls; no-op for C."""
+        r"""JS hook: `tag\`...\`` tagged template calls; no-op for C."""
         return None
 
     def try_as_cast(self, node: "N", start: "Tok") -> "N | None":

@@ -2291,7 +2291,7 @@ class JsParser(CParser):
         return call
 
     def try_tagged_template(self, node: N, start: Tok) -> N | None:
-        """`String.raw\`../${42}\\..\`` -> a DYNAMIC call (code = the whole
+        r"""`String.raw\`../${42}\\..\`` -> a DYNAMIC call (code = the whole
         tagged source) with the tag as receiver/base and arguments
         [quasi-array block (code = the template source), ...interpolations]
         (jssrc astForTemplateExpression;

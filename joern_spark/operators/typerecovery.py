@@ -25,18 +25,28 @@ recovered type (multi-hint receivers stay unresolved, mirroring the
 reference's dynamicTypeHint behavior); its assigned result takes
 `mfn:<returnValue>`.
 
-Scale shape: every join keys on (path, var) — file-local, co-partitioned
-with the parse layout, no corpus-wide shuffle; the symbol table is a
-dimension proportional to assignments-with-recoverable-rhs.
+The whole fixed point is one pandas kernel (``recovery_task``) run as a
+single ``groupBy(<constant>).applyInPandas`` task over a narrow projection
+of the JavaScript rows, the way the reference runs the pass inside one JVM
+over one CPG. The symbol table is a dimension proportional to assignments
+with a recoverable right-hand side; its joins key on (path, var), except
+relative-import resolution, which crosses files and so has no narrower
+group key than the whole input. ``recover_types`` materializes the task's
+output once.
 """
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from joern_spark import model as M
 
 RETURN_VALUE = "<returnValue>"
+ITERATIONS = 2  # XTypeRecovery's default iteration count
 
 # global builtin receivers (jssrc2cpg GlobalBuiltins;
 # TypeRecoveryPassTests "recovering paths for built-in calls")
@@ -48,669 +58,512 @@ JS_GLOBAL_BUILTINS = {
     "Promise": "__ecma.Promise",
 }
 
+# the task's input columns; its output rows are tagged rewrites (id, type =
+# the recovered methodFullName) or symbols (path, var, type)
+ID_COLS = ("id", "parent_id", "method_id")
+TEXT_COLS = ("kind", "name", "code", "path", "canonical_name", "method_full_name",
+             "full_name", "dispatch_type", "type_full_name", "ast_parent_type",
+             "ast_parent_full_name")
+IN_COLS = ID_COLS + ("arg_index",) + TEXT_COLS
+REWRITE_ROW = "rewrite"
+SYMBOL_ROW = "symbol"
+OUT_SCHEMA = "row string, id long, path string, var string, type string"
 
-def _js_children(nodes: DataFrame) -> DataFrame:
-    return nodes.filter(F.col("lang") == "javascript").select(
-        "id", "parent_id", "arg_index", "kind", "name", "code", "path",
-        "canonical_name", "method_full_name", "full_name")
+_QUOTES = re.compile("['\"`]")
+_STRING_LIT = re.compile(r"^['\"`]")
+_NUMBER_LIT = re.compile(r"^[0-9][0-9_.xXbBoOeE+-]*$")
+_DIR = re.compile(r"^(.*)/[^/]*$")
+_DOT = re.compile(r"(^|/)\./")
+_DOT_DOT = re.compile(r"(^|/)[^/.][^/]*/\.\./")
+_EXT = re.compile(r"\.[A-Za-z0-9]+$")
+_INIT = re.compile(r":<init>$")
 
 
-def js_symbol_table(nodes: DataFrame, iterations: int = 2) -> DataFrame:
-    """-> (path, var, type) multi-hint symbol table (see module doc)."""
-    return _recover(nodes, iterations)[1]
+def _literal_type(code: str) -> str | None:
+    if _STRING_LIT.search(code):
+        return "__ecma.String"
+    if _NUMBER_LIT.search(code):
+        return "__ecma.Number"
+    return None
 
 
-def js_mfn_rewrites(nodes: DataFrame, iterations: int = 2) -> DataFrame:
-    """-> (id, rec_mfn): methodFullName rewrites for JS dynamic member calls
-    whose receiver's type was recovered."""
-    return _recover(nodes, iterations)[0]
+def _rel_stem(path: str, mod: str) -> str:
+    """Normalized, extension-stripped `dirname(path)/mod` — posix normpath
+    over the bounded `./`/`../` nesting of import specifiers (RequirePassTests
+    `../../foo.ts`, `./d2/bar.ts`). Not ``posixpath.normpath``: a
+    `.`-prefixed directory is never collapsed."""
+    d = _DIR.search(path)
+    x = f"{d.group(1)}/{mod}" if d and d.group(1) else mod
+    for _ in range(6):
+        x = _DOT_DOT.sub(r"\1", _DOT.sub(r"\1", x))
+    return _EXT.sub("", x)
 
 
-def _recover(nodes: DataFrame, iterations: int = 2
-             ) -> tuple[DataFrame, DataFrame]:
-    ch = _js_children(nodes)
-    calls = nodes.filter((F.col("lang") == "javascript")
-                         & (F.col("kind") == M.CALL)).select(
-        "id", "name", "method_full_name", "path", "dispatch_type",
-        "method_id", "parent_id")
+def _map(fn, *cols) -> np.ndarray:
+    """``fn`` over the zipped values of ``cols``, as an object array (so an
+    empty result still joins with string columns)."""
+    return np.array([fn(*v) for v in zip(*cols)], dtype=object)
 
-    # assignment skeleton: (assign_id, path, lhs_name, rhs_id, rhs_kind)
-    assigns = nodes.filter((F.col("lang") == "javascript")
-                           & (F.col("kind") == M.CALL)
-                           & (F.col("name") == M.OP_ASSIGNMENT)).select(
-        F.col("id").alias("assign_id"), "path")
-    lhs = ch.filter((F.col("arg_index") == 1) & (F.col("kind") == M.IDENTIFIER)) \
-            .select(F.col("parent_id").alias("assign_id"),
-                    F.col("name").alias("var"))
-    rhs = ch.filter(F.col("arg_index") == 2).select(
-        F.col("parent_id").alias("assign_id"), F.col("id").alias("rhs_id"),
-        F.col("kind").alias("rhs_kind"), F.col("name").alias("rhs_name"),
-        F.col("code").alias("rhs_code"))
-    askel = assigns.join(lhs, "assign_id").join(rhs, "assign_id")
 
-    # ---- seeds ---------------------------------------------------------- #
+def _with_tail(types, tails) -> np.ndarray:
+    """An annotation's resolved head type joined with its `:`-separated
+    tail."""
+    return _map(lambda t, tail: f"{t}:{tail}" if tail else t, types, tails)
+
+
+def _split_ann(df: pd.DataFrame) -> pd.DataFrame:
+    """Annotation text `a.b.c` -> head `a`, tail `b:c`."""
+    return df.assign(head=_map(lambda a: a.split(".")[0], df["ann"]),
+                     tail=_map(lambda a: ":".join(a.split(".")[1:101]), df["ann"]))
+
+
+def _test(values, pred) -> np.ndarray:
+    return np.fromiter(map(pred, values), bool)
+
+
+def _distinct(*parts: pd.DataFrame) -> pd.DataFrame:
+    return pd.concat(parts, ignore_index=True).drop_duplicates(ignore_index=True)
+
+
+def _anti(df: pd.DataFrame, other: pd.DataFrame, on: list[str]) -> pd.DataFrame:
+    """df's rows whose ``on`` values do not occur in ``other``."""
+    hit = df.merge(other[on].drop_duplicates(), on=on, how="left",
+                   indicator=True)["_merge"] == "both"
+    return df[~hit.to_numpy()]
+
+
+def _single(st: pd.DataFrame) -> pd.DataFrame:
+    """The (path, var, type) rows of a distinct table whose (path, var)
+    holds exactly one type."""
+    return st[~st.duplicated(["path", "var"], keep=False)]
+
+
+def _sym(df: pd.DataFrame, **cols) -> pd.DataFrame:
+    """A (path, var, type) frame; each value names a column of ``df`` or is
+    an array of values."""
+    return pd.DataFrame({k: df[v].to_numpy() if isinstance(v, str) else v
+                         for k, v in cols.items()}, columns=["path", "var", "type"])
+
+
+def recovery_task(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One recovery group's JavaScript rows (``IN_COLS``) -> its call
+    rewrites and symbol table as tagged rows (``OUT_SCHEMA``). Absent ids
+    are 0; absent text is ""."""
+    kind, name, ai = pdf["kind"], pdf["name"], pdf["arg_index"]
+    mfn, tfn = pdf["method_full_name"], pdf["type_full_name"]
+    call = kind == M.CALL
+    ident = kind == M.IDENTIFIER
+    field_access = call & (name == M.OP_FIELD_ACCESS)
+    new_call = call & (name == M.OP + "new")
+    arg_mref = (ai == 2) & (kind == M.METHOD_REF) & (mfn != "")
+    field_ident = kind == M.FIELD_IDENTIFIER
+
+    def sel(mask, **cols) -> pd.DataFrame:
+        part = pdf[mask]
+        return pd.DataFrame({k: part[v].to_numpy() for k, v in cols.items()})
+
+    # assignment skeleton: (assign_id, path, var, rhs_id, rhs_kind, ...)
+    assigns = sel(call & (name == M.OP_ASSIGNMENT), assign_id="id", path="path")
+    lhs = sel((ai == 1) & ident, assign_id="parent_id", var="name")
+    rhs = sel(ai == 2, assign_id="parent_id", rhs_id="id", rhs_kind="kind",
+              rhs_name="name", rhs_code="code")
+    askel = assigns.merge(lhs, on="assign_id").merge(rhs, on="assign_id")
+    rk = askel["rhs_kind"]
+    blocks = askel[rk == M.BLOCK]
+
+    # ---- seeds ----------------------------------------------------------- #
     # var = require('module')
-    req = calls.filter(F.col("name") == "require").select(
-        F.col("id").alias("rhs_id"))
-    req_arg = ch.filter((F.col("arg_index") == 1) & (F.col("kind") == M.LITERAL)) \
-                .select(F.col("parent_id").alias("rhs_id"),
-                        F.regexp_replace("code", "['\"`]", "").alias("type"))
-    seed_req = (askel.join(req, "rhs_id").join(req_arg, "rhs_id")
-                .select("path", "var", "type"))
+    req = sel(call & (name == "require"), rhs_id="id")
+    req_arg = sel((ai == 1) & (kind == M.LITERAL), rhs_id="parent_id", code="code")
+    req_arg["type"] = _map(lambda c: _QUOTES.sub("", c), req_arg.pop("code"))
+    req_binds = askel.merge(req, on="rhs_id").merge(req_arg, on="rhs_id")
 
     # ES import bindings (IMPORT nodes carry the resolved type in
     # full_name). A RELATIVE import whose target module exists in the
-    # corpus is a ResolvedMember: instead of a dummy "module:member" seed,
+    # input is a ResolvedMember: instead of a dummy "module:member" seed,
     # the exporting module's recovered types flow across (rel_links below;
     # TypeRecoveryPassTests "recovering module members across modules").
-    imports = (nodes.filter((F.col("lang") == "javascript")
-                            & (F.col("kind") == M.IMPORT)
-                            & (F.col("canonical_name") != ""))
-               .select("path", F.col("canonical_name").alias("var"),
-                       F.col("full_name").alias("type"))
-               .withColumn("mod", F.split("type", ":").getItem(0)))
-    file_stems = (nodes.filter(F.col("lang") == "javascript")
-                  .select("path").distinct()
-                  .withColumn("stem", F.regexp_replace(
-                      "path", r"\.[A-Za-z0-9]+$", ""))
-                  .select(F.col("path").alias("src_path"), "stem"))
-
-    def _rel_stem(path_col, mod_col):
-        """Normalized, extension-stripped `dirname(path)/mod` — posix
-        normpath over the bounded `./`/`../` nesting of import specifiers
-        (RequirePassTests `../../foo.ts`, `./d2/bar.ts`)."""
-        dirc = F.regexp_extract(path_col, r"^(.*)/[^/]*$", 1)
-        x = F.when(dirc == "", mod_col).otherwise(
-            F.concat_ws("/", dirc, mod_col))
-        for _ in range(6):
-            x = F.regexp_replace(x, r"(^|/)\./", "$1")
-            x = F.regexp_replace(x, r"(^|/)[^/.][^/]*/\.\./", "$1")
-        return F.regexp_replace(x, r"\.[A-Za-z0-9]+$", "")
-
+    imports = sel((kind == M.IMPORT) & (pdf["canonical_name"] != ""),
+                  path="path", var="canonical_name", type="full_name")
+    imports["mod"] = _map(lambda t: t.split(":", 1)[0], imports["type"])
+    paths = pdf["path"].drop_duplicates().to_numpy()
+    file_stems = pd.DataFrame({"src_path": paths,
+                               "stem": _map(lambda p: _EXT.sub("", p), paths)})
     # resolved relative imports carry the imported member (named/default
-    # imports: the trailing `:alias` of the IMPORT type; requires: NULL)
-    rel_imports = (imports.filter(F.col("mod").startswith("."))
-                   .withColumn("member", F.when(
-                       F.col("type").contains(":"),
-                       F.substring_index("type", ":", -1))
-                       .otherwise(F.col("var")))
-                   .withColumn("stem", _rel_stem(F.col("path"),
-                                                 F.col("mod")))
-                   .select("path", "var", "member", "stem"))
+    # imports: the trailing `:alias` of the IMPORT type; requires: None);
     # relative `require("./m")` bindings resolve the same way (no IMPORT
     # node is emitted for require) — their exported members alias under
     # the binding var ("Recovered values that are returned in methods")
-    req_rel = (askel.join(req, "rhs_id").join(req_arg, "rhs_id")
-               .filter(F.col("type").startswith("."))
-               .withColumn("stem", _rel_stem(F.col("path"), F.col("type")))
-               .withColumn("member", F.lit(None).cast("string"))
-               .select("path", "var", "member", "stem"))
-    # file_stems is ∝ |files| — never force-broadcast at the 10^12-file
-    # target; AQE decides (static_call_edges precedent).
-    rel_links = (rel_imports.unionByName(req_rel)
-                 .join(file_stems, "stem")
-                 .select(F.col("path").alias("imp_path"), "var", "member",
-                         "src_path")
-                 .localCheckpoint(eager=True))
-    resolved_binds = rel_links.select(
-        F.col("imp_path").alias("path"), "var",
-        F.lit(True).alias("resolved")).distinct()
-    seed_imp = (imports.join(resolved_binds, ["path", "var"], "left")
-                .filter(F.col("resolved").isNull())
-                .select("path", "var", "type"))
-    # resolved require bindings drop their raw "./m" seed — the binding
-    # adopts the exporter's entity in the iteration loop instead
-    seed_req = (seed_req.join(resolved_binds, ["path", "var"], "left")
-                .filter(F.col("resolved").isNull())
-                .select("path", "var", "type"))
+    rel_imp = imports[_test(imports["mod"], lambda m: m.startswith("."))]
+    rel_req = req_binds[_test(req_binds["type"], lambda m: m.startswith("."))]
+    rel_links = pd.concat([
+        pd.DataFrame({
+            "imp_path": rel_imp["path"].to_numpy(), "var": rel_imp["var"].to_numpy(),
+            "member": _map(lambda t, v: t.rsplit(":", 1)[-1] if ":" in t else v,
+                           rel_imp["type"], rel_imp["var"]),
+            "stem": _map(_rel_stem, rel_imp["path"], rel_imp["mod"])}),
+        pd.DataFrame({
+            "imp_path": rel_req["path"].to_numpy(), "var": rel_req["var"].to_numpy(),
+            "member": _map(lambda _: None, rel_req["var"]),
+            "stem": _map(_rel_stem, rel_req["path"], rel_req["type"])}),
+    ], ignore_index=True).merge(file_stems, on="stem").drop(columns="stem")
+    # resolved bindings drop their raw seed: the binding adopts the
+    # exporter's entity in the iterations instead
+    resolved = rel_links[["imp_path", "var"]].rename(columns={"imp_path": "path"})
+    seed_imp = _anti(imports, resolved, ["path", "var"])
+    seed_req = _anti(req_binds, resolved, ["path", "var"])
 
     # literal builtins
-    lit_type = F.when(F.col("rhs_code").rlike(r"^['\"`]"), "__ecma.String") \
-        .when(F.col("rhs_code").rlike(r"^[0-9][0-9_.xXbBoOeE+-]*$"),
-              "__ecma.Number")
-    seed_lit = (askel.filter(F.col("rhs_kind") == M.LITERAL)
-                .withColumn("type", lit_type)
-                .filter(F.col("type").isNotNull())
-                .select("path", "var", "type"))
+    lits = askel[rk == M.LITERAL]
+    seed_lit = _sym(lits, path="path", var="var",
+                    type=_map(_literal_type, lits["rhs_code"])).dropna()
 
     # lowered array literal: rhs BLOCK containing `__ecma.Array.factory()`
-    blk_assign = ch.filter((F.col("kind") == M.CALL)
-                           & (F.col("name") == M.OP_ASSIGNMENT)).select(
-        F.col("parent_id").alias("rhs_id"), F.col("id").alias("ba_id"))
-    factory = ch.filter((F.col("kind") == M.CALL)
-                        & (F.col("name") == "__ecma.Array.factory")
-                        & (F.col("arg_index") == 2)).select(
-        F.col("parent_id").alias("ba_id"))
-    seed_arr = (askel.filter(F.col("rhs_kind") == M.BLOCK)
-                .join(blk_assign, "rhs_id").join(factory, "ba_id")
-                .select("path", "var", F.lit("__ecma.Array").alias("type"))
-                .distinct())
+    blk_assign = sel(call & (name == M.OP_ASSIGNMENT), rhs_id="parent_id", ba_id="id")
+    factory = sel(call & (name == "__ecma.Array.factory") & (ai == 2),
+                  ba_id="parent_id")
+    arr = blocks.merge(blk_assign, on="rhs_id").merge(factory, on="ba_id")
+    seed_arr = _sym(arr, path="path", var="var",
+                    type=_map(lambda _: "__ecma.Array", arr["var"]))
 
     # `v = new T(...)`: rhs BLOCK containing <operator>.new whose receiver
     # (arg_index -1 IDENTIFIER) names the constructed type
-    new_calls = ch.filter((F.col("kind") == M.CALL)
-                          & (F.col("name") == M.OP + "new")).select(
-        F.col("parent_id").alias("rhs_id"), F.col("id").alias("new_id"))
-    new_recv = ch.filter((F.col("kind") == M.IDENTIFIER)
-                         & (F.col("arg_index") == -1)).select(
-        F.col("parent_id").alias("new_id"), F.col("name").alias("tname"))
-    new_edges = (askel.filter(F.col("rhs_kind") == M.BLOCK)
-                 .join(new_calls, "rhs_id").join(new_recv, "new_id")
-                 .select("path", "var", "tname"))
+    new_calls = sel(new_call, rhs_id="parent_id", new_id="id")
+    new_recv = sel(ident & (ai == -1), new_id="parent_id", tname="name")
+    new_edges = blocks.merge(new_calls, on="rhs_id").merge(new_recv, on="new_id")
 
     # object-literal methods: `v = { f: function(){}, ... }` — the lowered
     # block holds `_tmp.f = <methodRef>`; seed `v.f` with the closure's
     # (ConstClosure-renamed) fullname so `v.f()` links to it
     # (ConstClosurePassTests.scala object properties + TypeHintCallLinker)
-    fa_lhs = ch.filter((F.col("arg_index") == 1) & (F.col("kind") == M.CALL)
-                       & (F.col("name") == M.OP_FIELD_ACCESS)).select(
-        F.col("parent_id").alias("ba_id"), F.col("id").alias("fa_id"))
-    fld = ch.filter(F.col("kind") == M.FIELD_IDENTIFIER).select(
-        F.col("parent_id").alias("fa_id"),
-        F.col("canonical_name").alias("fld"))
-    mref = ch.filter((F.col("arg_index") == 2)
-                     & (F.col("kind") == M.METHOD_REF)
-                     & (F.col("method_full_name") != "")).select(
-        F.col("parent_id").alias("ba_id"),
-        F.col("method_full_name").alias("type"))
-    seed_obj = (askel.filter(F.col("rhs_kind") == M.BLOCK)
-                .join(blk_assign, "rhs_id")
-                .join(fa_lhs, "ba_id").join(fld, "fa_id").join(mref, "ba_id")
-                .select("path", F.concat_ws(".", "var", "fld").alias("var"),
-                        "type"))
+    fa_lhs = sel((ai == 1) & field_access, ba_id="parent_id", fa_id="id")
+    fld = sel(field_ident, fa_id="parent_id", fld="canonical_name")
+    mref = sel(arg_mref, ba_id="parent_id", type="method_full_name")
+
+    def props(blk: pd.DataFrame) -> pd.DataFrame:
+        """The `_tmp.<fld> = <methodRef>` properties of lowered blocks."""
+        return (blk.merge(blk_assign, on="rhs_id").merge(fa_lhs, on="ba_id")
+                .merge(fld, on="fa_id").merge(mref, on="ba_id"))
+
+    obj = props(blocks)
+    seed_obj = _sym(obj, path="path", type="type",
+                    var=_map(lambda v, f: f"{v}.{f}", obj["var"], obj["fld"]))
 
     # identifier aliasing: `let d = db` copies the source's types
-    ident_edges = (askel.filter((F.col("rhs_kind") == M.IDENTIFIER)
-                                & (F.col("rhs_name") != F.col("var")))
-                   .select("path", "var",
-                           F.col("rhs_name").alias("src_var")))
+    ident_edges = askel[(rk == M.IDENTIFIER) & (askel["rhs_name"] != askel["var"])] \
+        .rename(columns={"rhs_name": "src_var"})[["path", "var", "src_var"]]
 
     # `v = <methodRef>` binds the closure fullname ("resolve a function
     # full name called as a constructor")
-    seed_mref = (askel.filter(F.col("rhs_kind") == M.METHOD_REF)
-                 .join(ch.select(F.col("id").alias("rhs_id"),
-                                 F.col("method_full_name").alias("type")),
-                       "rhs_id")
-                 .filter(F.col("type") != "")
-                 .select("path", "var", "type"))
+    seed_mref = askel[rk == M.METHOD_REF].merge(
+        sel(mfn != "", rhs_id="id", type="method_full_name"), on="rhs_id")
 
     # `exports.f = <methodRef>` — exported members carry the closure
     # fullname; relative importers alias them under their binding
     # ("Recovered values that are returned in methods")
-    fa_lhs2 = ch.filter((F.col("arg_index") == 1) & (F.col("kind") == M.CALL)
-                        & (F.col("name") == M.OP_FIELD_ACCESS)).select(
-        F.col("parent_id").alias("assign_id"), F.col("id").alias("fa2_id"))
-    fa2_base = ch.filter((F.col("arg_index") == 1)
-                         & (F.col("kind") == M.IDENTIFIER)).select(
-        F.col("parent_id").alias("fa2_id"), F.col("name").alias("bname"))
-    fa2_fld = ch.filter(F.col("kind") == M.FIELD_IDENTIFIER).select(
-        F.col("parent_id").alias("fa2_id"), F.col("canonical_name").alias("fld"))
-    rhs_mref2 = ch.filter((F.col("arg_index") == 2)
-                          & (F.col("kind") == M.METHOD_REF)
-                          & (F.col("method_full_name") != "")).select(
-        F.col("parent_id").alias("assign_id"),
-        F.col("method_full_name").alias("type"))
-    seed_exports = (assigns.join(fa_lhs2, "assign_id")
-                    .join(fa2_base, "fa2_id").join(fa2_fld, "fa2_id")
-                    .join(rhs_mref2, "assign_id")
-                    .filter(F.col("bname").isin("exports", "module"))
-                    .select("path",
-                            F.concat(F.lit("exports."), F.col("fld")).alias("var"),
-                            "type"))
+    exp_lhs = (assigns.merge(sel((ai == 1) & field_access, assign_id="parent_id",
+                                 fa2_id="id"), on="assign_id")
+               .merge(sel((ai == 1) & ident, fa2_id="parent_id", bname="name"),
+                      on="fa2_id"))
+    exp_lhs = exp_lhs[exp_lhs["bname"].isin(["exports", "module"])]
+    exp_fld = exp_lhs.merge(sel(field_ident, fa2_id="parent_id", fld="canonical_name"),
+                            on="fa2_id")
+
+    def exported(df: pd.DataFrame) -> np.ndarray:
+        return _map(lambda f: "exports." + f, df["fld"])
+
+    exp_mref = exp_fld.merge(sel(arg_mref, assign_id="parent_id",
+                                 type="method_full_name"), on="assign_id")
     # `module.exports = { f: function(){}, ... }` — each property of the
     # lowered object literal registers as an exported member
     # (CallLinkerPassTests "link exported <lambda> functions across file
     # boundaries")
-    rhs_blk2 = ch.filter((F.col("arg_index") == 2)
-                         & (F.col("kind") == M.BLOCK)).select(
-        F.col("parent_id").alias("assign_id"), F.col("id").alias("rhs_id"))
-    seed_exports = seed_exports.unionByName(
-        assigns.join(fa_lhs2, "assign_id")
-        .join(fa2_base, "fa2_id")
-        .filter(F.col("bname").isin("exports", "module"))
-        .join(rhs_blk2, "assign_id")
-        .join(blk_assign, "rhs_id")
-        .join(fa_lhs, "ba_id").join(fld, "fa_id").join(mref, "ba_id")
-        .select("path",
-                F.concat(F.lit("exports."), F.col("fld")).alias("var"),
-                "type"))
+    exp_obj = props(exp_lhs.merge(sel((ai == 2) & (kind == M.BLOCK),
+                                      assign_id="parent_id", rhs_id="id"),
+                                  on="assign_id"))
     # `exports.f = <identifier>` (ES named/default export lowering) —
     # aliases the exported local's recovered types each iteration
-    rhs_ident2 = ch.filter((F.col("arg_index") == 2)
-                           & (F.col("kind") == M.IDENTIFIER)).select(
-        F.col("parent_id").alias("assign_id"),
-        F.col("name").alias("src_var"))
-    export_ident_edges = (assigns.join(fa_lhs2, "assign_id")
-                          .join(fa2_base, "fa2_id").join(fa2_fld, "fa2_id")
-                          .join(rhs_ident2, "assign_id")
-                          .filter(F.col("bname").isin("exports", "module"))
-                          .select("path",
-                                  F.concat(F.lit("exports."),
-                                           F.col("fld")).alias("var"),
-                                  "src_var"))
+    exp_ident = exp_fld.merge(sel((ai == 2) & ident, assign_id="parent_id",
+                                  src_var="name"), on="assign_id")
+    export_ident_edges = pd.DataFrame({"path": exp_ident["path"].to_numpy(),
+                                       "var": exported(exp_ident),
+                                       "src_var": exp_ident["src_var"].to_numpy()})
 
     # TS type-annotation hints on parameters / method returns — the raw
     # annotation text resolves its HEAD against the symbol table each
     # iteration ("Type hints for method parameters and returns")
-    js = nodes.filter(F.col("lang") == "javascript")
-    ann_params = (js.filter((F.col("kind") == M.METHOD_PARAMETER_IN)
-                            & (F.col("name") != "this")
-                            & ~F.col("type_full_name").isin(
-                                M.ANY, "", "__ecma.Array"))
-                  .select("path", F.col("name").alias("pvar"),
-                          F.col("type_full_name").alias("ann"))
-                  .withColumn("head", F.split("ann", r"\.").getItem(0))
-                  .withColumn("tail", F.array_join(
-                      F.slice(F.split("ann", r"\."), 2, 100), ":")))
+    ann_params = _split_ann(sel((kind == M.METHOD_PARAMETER_IN) & (name != "this")
+                                & ~tfn.isin([M.ANY, "", "__ecma.Array"]),
+                                path="path", pvar="name", ann="type_full_name"))
     # annotated class members + `v = this.<f>` adoption (TS three-address
     # lowering: `_tmp = this.http; _tmp.post(...)`)
-    ann_members = (js.filter((F.col("kind") == M.MEMBER)
-                             & ~F.col("type_full_name").isin(M.ANY, ""))
-                   .select("path", F.col("name").alias("fld"),
-                           F.col("type_full_name").alias("ann"))
-                   .withColumn("head", F.split("ann", r"\.").getItem(0))
-                   .withColumn("tail", F.array_join(
-                       F.slice(F.split("ann", r"\."), 2, 100), ":")))
-    methods_js = js.filter(F.col("kind") == M.METHOD).select(
-        "path", F.col("id").alias("mid"),
-        F.col("full_name").alias("mfn_full"), F.col("name").alias("mname"))
-    mret_ann = (js.filter((F.col("kind") == M.METHOD_RETURN)
-                          & ~F.col("type_full_name").isin(M.ANY, ""))
-                .select(F.col("parent_id").alias("mid"),
-                        F.col("type_full_name").alias("ann"))
-                .join(methods_js, "mid")
-                .withColumn("head", F.split("ann", r"\.").getItem(0))
-                .withColumn("tail", F.array_join(
-                    F.slice(F.split("ann", r"\."), 2, 100), ":")))
+    ann_members = _split_ann(sel((kind == M.MEMBER) & ~tfn.isin([M.ANY, ""]),
+                                 path="path", fld="name", ann="type_full_name"))
+    methods_js = sel(kind == M.METHOD, path="path", mid="id", mfn_full="full_name",
+                     mname="name")
+    mret_ann = _split_ann(sel((kind == M.METHOD_RETURN) & ~tfn.isin([M.ANY, ""]),
+                              mid="parent_id", ann="type_full_name")
+                          .merge(methods_js, on="mid"))
     # return-statement expressions (literal / recovered-call)
-    ret_children = (js.select("id", "parent_id", "kind", "code", "method_id")
-                    .join(js.filter(F.col("kind") == M.RETURN)
-                          .select(F.col("id").alias("parent_id")),
-                          "parent_id", "leftsemi"))
-    ret_lit = (ret_children.filter(F.col("kind") == M.LITERAL)
-               .withColumn("rtype",
-                           F.when(F.col("code").rlike(r"^['\"`]"),
-                                  "__ecma.String")
-                           .when(F.col("code").rlike(
-                               r"^[0-9][0-9_.xXbBoOeE+-]*$"),
-                               "__ecma.Number"))
-               .filter(F.col("rtype").isNotNull())
-               .select(F.col("method_id").alias("mid"), "rtype"))
-    ret_call_ids = (ret_children.filter(F.col("kind") == M.CALL)
-                    .select("id", F.col("method_id").alias("mid")))
+    ret_children = pdf[pdf["parent_id"].isin(pdf["id"][kind == M.RETURN])]
+    ret_lit = pd.DataFrame({"mid": ret_children["method_id"].to_numpy(),
+                            "rtype": _map(lambda k, c: _literal_type(c) if k == M.LITERAL
+                                          else None, ret_children["kind"],
+                                          ret_children["code"])}).dropna()
+    ret_calls = ret_children[ret_children["kind"] == M.CALL]
+    ret_call_ids = pd.DataFrame({"id": ret_calls["id"].to_numpy(),
+                                 "mid": ret_calls["method_id"].to_numpy()})
 
     # destructured-require members: `v = <fieldAccess>(b, f)` — propagate a
     # single bare-module base type to v
-    fa_assign = (askel.filter((F.col("rhs_kind") == M.CALL)
-                              & (F.col("rhs_name") == M.OP_FIELD_ACCESS))
-                 .select("path", "var", "rhs_id"))
-    fa_base = ch.filter((F.col("arg_index") == 1)
-                        & (F.col("kind") == M.IDENTIFIER)).select(
-        F.col("parent_id").alias("rhs_id"), F.col("name").alias("bvar"))
-    fa_edges = fa_assign.join(fa_base, "rhs_id").select("path", "var", "bvar")
-    fa_fld = ch.filter(F.col("kind") == M.FIELD_IDENTIFIER).select(
-        F.col("parent_id").alias("rhs_id"),
-        F.col("canonical_name").alias("fld"))
-    this_fa_edges = (fa_assign.join(
-        fa_base.filter(F.col("bvar") == "this"), "rhs_id")
-        .join(fa_fld, "rhs_id").select("path", "var", "fld"))
+    fa_assign = askel[(rk == M.CALL) & (askel["rhs_name"] == M.OP_FIELD_ACCESS)]
+    fa_edges = fa_assign.merge(sel((ai == 1) & ident, rhs_id="parent_id", bvar="name"),
+                               on="rhs_id")
+    this_fa_edges = fa_edges[fa_edges["bvar"] == "this"].merge(
+        sel(field_ident, rhs_id="parent_id", fld="canonical_name"), on="rhs_id")
 
-    # The symbol table is a small dimension (proportional to assignments
-    # with a recoverable RHS) but is referenced ~5x per iteration below —
-    # without lineage truncation the self-referencing unions grow the
-    # Catalyst plan geometrically (measured: >170 M-char plan strings at 2
-    # iterations). Eager localCheckpoint per iteration keeps the plan flat,
-    # same pattern as the CC loop in plans/pipeline.py.
-    # builtin globals, seeded per file (tiny dimension: |files| x |table|)
-    paths = (nodes.filter(F.col("lang") == "javascript")
-             .select("path").distinct())
-    builtins_df = paths.sparkSession.createDataFrame(
-        list(JS_GLOBAL_BUILTINS.items()), "var string, type string")
-    seed_builtin = paths.crossJoin(F.broadcast(builtins_df)).select(
-        "path", "var", "type")
+    # builtin globals, seeded per file (|files| x |table|)
+    globals_ = np.array(list(JS_GLOBAL_BUILTINS.items()), dtype=object).reshape(-1, 2)
+    seed_builtin = pd.DataFrame({"path": np.repeat(paths, len(globals_)),
+                                 "var": np.tile(globals_[:, 0], len(paths)),
+                                 "type": np.tile(globals_[:, 1], len(paths))})
 
-    st = (seed_req.unionByName(seed_imp).unionByName(seed_lit)
-          .unionByName(seed_arr).unionByName(seed_obj)
-          .unionByName(seed_builtin).unionByName(seed_mref)
-          .unionByName(seed_exports)
-          .distinct().localCheckpoint(eager=True))
+    st = _distinct(_sym(seed_req, path="path", var="var", type="type"),
+                   _sym(seed_imp, path="path", var="var", type="type"),
+                   seed_lit, seed_arr, seed_obj, seed_builtin,
+                   _sym(seed_mref, path="path", var="var", type="type"),
+                   _sym(exp_mref, path="path", var=exported(exp_mref), type="type"),
+                   _sym(exp_obj, path="path", var=exported(exp_obj), type="type"))
 
     # member-call receivers: call -> base ARGUMENT(0) identifier name
-    base_ident = ch.filter((F.col("arg_index") == 0)
-                           & (F.col("kind") == M.IDENTIFIER)).select(
-        F.col("parent_id").alias("id"), F.col("name").alias("var"))
-    unresolved_calls = (calls.filter(
-        (F.col("dispatch_type") == M.DYNAMIC_DISPATCH)
-        & (F.col("method_full_name") == M.UNKNOWN_FULL_NAME)
-        & (F.col("name") != "require"))
-        .join(base_ident, "id")
-        .select("id", "name", "path", "var", "method_id"))
+    unresolved_calls = sel(
+        call & (pdf["dispatch_type"] == M.DYNAMIC_DISPATCH)
+        & (mfn == M.UNKNOWN_FULL_NAME) & (name != "require"),
+        id="id", name="name", path="path", method_id="method_id",
+    ).merge(sel((ai == 0) & ident, id="parent_id", var="name"), on="id")
+    this_calls = unresolved_calls[unresolved_calls["var"] == "this"]
     # simple `f()` calls: the RECEIVER is itself an identifier and the
     # base is the implicit `this` — TypeHintCallLinker on a single-typed
     # callable (CallLinkerPassTests "create call edges correctly",
     # RequirePassTests)
-    recv_ident = ch.filter((F.col("arg_index") == -1)
-                           & (F.col("kind") == M.IDENTIFIER)).select(
-        F.col("parent_id").alias("id"), F.col("name").alias("rvar"))
-    direct_calls = (unresolved_calls.filter(F.col("var") == "this")
-                    .join(recv_ident, "id")
-                    .select("id", "path", F.col("rvar").alias("var")))
-    member_calls = (unresolved_calls
-                    .join(direct_calls.select("id"), "id", "left_anti")
-                    .select("id", "name", "path", "var", "method_id"))
+    direct_calls = this_calls.merge(sel((ai == -1) & ident, id="parent_id", rvar="name"),
+                                    on="id")[["id", "path", "rvar"]] \
+        .rename(columns={"rvar": "var"})
+    member_calls = _anti(unresolved_calls, direct_calls, ["id"])
 
     # class methods dimension + class-member types assigned in <init>
     # (field initializers lower into the constructor): `bar = class Bar`
     # / `f = <methodRef>` type member `bar` of the enclosing class —
     # typeHintForThisExpression + member flow (CallLinkerPassTests
     # "create call edges correctly for methods from classes")
-    cls_methods = (js.filter((F.col("kind") == M.METHOD)
-                             & (F.col("ast_parent_type") == M.TYPE_DECL))
-                   .select(F.col("id").alias("method_id"),
-                           F.col("name").alias("cm_name"),
-                           F.col("ast_parent_full_name").alias("cls_fn")))
-    init_assigns = (calls.filter(F.col("name") == M.OP_ASSIGNMENT)
-                    .join(cls_methods.filter(
-                        F.col("cm_name") == M.CONSTRUCTOR), "method_id")
-                    .select(F.col("id").alias("assign_id"), "path", "cls_fn"))
-    lhs_fld = ch.filter((F.col("arg_index") == 1)
-                        & (F.col("kind") == M.IDENTIFIER)).select(
-        F.col("parent_id").alias("assign_id"), F.col("name").alias("fld"))
-    rhs_tref = ch.filter((F.col("arg_index") == 2)
-                         & (F.col("kind") == M.TYPE_REF)).select(
-        F.col("parent_id").alias("assign_id"), F.col("id").alias("tref_id"))
-    tref_td = ch.filter(F.col("kind") == M.TYPE_DECL).select(
-        F.col("parent_id").alias("tref_id"), F.col("full_name").alias("mty"))
-    rhs_mref3 = ch.filter((F.col("arg_index") == 2)
-                          & (F.col("kind") == M.METHOD_REF)
-                          & (F.col("method_full_name") != "")).select(
-        F.col("parent_id").alias("assign_id"),
-        F.col("method_full_name").alias("mty"))
-    mem_ctor = (init_assigns.join(lhs_fld, "assign_id")
-                .join(rhs_tref.join(tref_td, "tref_id")
-                      .select("assign_id", "mty")
-                      .unionByName(rhs_mref3), "assign_id")
-                .select("cls_fn", "fld", "mty")
-                .localCheckpoint(eager=True))
+    cls_methods = sel((kind == M.METHOD) & (pdf["ast_parent_type"] == M.TYPE_DECL),
+                      method_id="id", cm_name="name", cls_fn="ast_parent_full_name")
+    init_assigns = sel(call & (name == M.OP_ASSIGNMENT), assign_id="id",
+                       method_id="method_id").merge(
+        cls_methods[cls_methods["cm_name"] == M.CONSTRUCTOR], on="method_id")
+    member_ty = pd.concat([
+        sel((ai == 2) & (kind == M.TYPE_REF), assign_id="parent_id", tref_id="id")
+        .merge(sel(kind == M.TYPE_DECL, tref_id="parent_id", mty="full_name"),
+               on="tref_id")[["assign_id", "mty"]],
+        sel(arg_mref, assign_id="parent_id", mty="method_full_name")])
+    mem_ctor = (init_assigns.merge(lhs.rename(columns={"var": "fld"}), on="assign_id")
+                .merge(member_ty, on="assign_id")[["cls_fn", "fld", "mty"]])
 
-    method_fns = (js.filter(F.col("kind") == M.METHOD)
-                  .select(F.col("full_name").alias("cand")).distinct())
+    method_fns = set(pdf["full_name"][kind == M.METHOD])
+    cls_of = cls_methods[["method_id", "cls_fn"]]
+
+    def rewrite(ids, rec_mfn, is_ctor: bool) -> pd.DataFrame:
+        return pd.DataFrame({"id": np.asarray(ids, dtype=np.int64),
+                             "rec_mfn": np.asarray(rec_mfn, dtype=object),
+                             "is_ctor": is_ctor})
 
     # `this.b()` resolves against the enclosing class when the member
     # method exists (`this` dynamicTypeHint = the class fullname)
-    rw0_this = (unresolved_calls.filter(F.col("var") == "this")
-                .join(direct_calls.select("id"), "id", "left_anti")
-                .join(cls_methods.select("method_id", "cls_fn"), "method_id")
-                .withColumn("cand", F.concat_ws(":", "cls_fn", "name"))
-                .join(method_fns, "cand")
-                .select("id", F.col("cand").alias("rec_mfn"), "path")
-                .withColumn("is_ctor", F.lit(False)))
+    this_m = _anti(this_calls, direct_calls, ["id"]).merge(cls_of, on="method_id")
+    this_cand = _map(lambda c, n: f"{c}:{n}", this_m["cls_fn"], this_m["name"])
+    this_ok = _test(this_cand, method_fns.__contains__)
+    rw0_this = rewrite(this_m["id"].to_numpy()[this_ok], this_cand[this_ok], False)
 
     # `new this.bar()` — the receiver field access resolves through the
     # class-member table; the constructed value types the assigned tmp so
     # a chained `.c()` composes the member-method fullname
-    opnew = calls.filter(F.col("name") == M.OP + "new").select(
-        F.col("id").alias("nid"), "path", "method_id",
-        F.col("parent_id").alias("blk_id"))
-    nfa = ch.filter((F.col("arg_index") == -1) & (F.col("kind") == M.CALL)
-                    & (F.col("name") == M.OP_FIELD_ACCESS)).select(
-        F.col("parent_id").alias("nid"), F.col("id").alias("nfa_id"))
-    nfa_this = ch.filter((F.col("arg_index") == 1)
-                         & (F.col("kind") == M.IDENTIFIER)
-                         & (F.col("name") == "this")).select(
-        F.col("parent_id").alias("nfa_id"))
-    nfa_fld = ch.filter(F.col("kind") == M.FIELD_IDENTIFIER).select(
-        F.col("parent_id").alias("nfa_id"),
-        F.col("canonical_name").alias("fld"))
-    nfa_full = (nfa.join(nfa_this, "nfa_id", "leftsemi")
-                .join(nfa_fld, "nfa_id").select("nid", "fld"))
-    new_this = (opnew.join(nfa_full, "nid")
-                .join(cls_methods.select("method_id", "cls_fn"), "method_id")
-                .join(mem_ctor, ["cls_fn", "fld"])
-                .select("nid", "blk_id", "path", "mty").distinct())
-    rw0_new = (new_this
-               .withColumn("ctor_cand",
-                           F.concat(F.col("mty"), F.lit(f":{M.CONSTRUCTOR}")))
-               .join(method_fns.select(F.col("cand").alias("ctor_cand"),
-                                       F.lit(True).alias("ctor_ok")),
-                     "ctor_cand", "left")
-               .select(F.col("nid").alias("id"),
-                       F.when(F.col("ctor_ok").isNotNull(),
-                              F.col("ctor_cand"))
-                       .otherwise(F.col("mty")).alias("rec_mfn"), "path")
-               .withColumn("is_ctor", F.lit(True)))
+    opnew = sel(new_call, nid="id", path="path", method_id="method_id",
+                blk_id="parent_id")
+    nfa = sel((ai == -1) & field_access, nid="parent_id", nfa_id="id")
+    nfa = nfa[nfa["nfa_id"].isin(pdf["parent_id"][(ai == 1) & ident & (name == "this")])]
+    nfa_full = nfa.merge(sel(field_ident, nfa_id="parent_id", fld="canonical_name"),
+                         on="nfa_id")[["nid", "fld"]]
+    new_this = (opnew.merge(nfa_full, on="nid").merge(cls_of, on="method_id")
+                .merge(mem_ctor, on=["cls_fn", "fld"])
+                [["nid", "blk_id", "path", "mty"]].drop_duplicates())
+    rw0_new = rewrite(new_this["nid"], _map(
+        lambda t: f"{t}:{M.CONSTRUCTOR}" if f"{t}:{M.CONSTRUCTOR}" in method_fns else t,
+        new_this["mty"]), True)
     # the variable assigned from the new-expression block adopts the
     # constructed class type (so chained member calls compose)
-    seed_new_this = (new_this.join(
-        askel.select(F.col("rhs_id").alias("blk_id"), "var"), "blk_id")
-        .select("path", "var", F.col("mty").alias("type")))
-    st = st.unionByName(seed_new_this).distinct() \
-        .localCheckpoint(eager=True)
+    seed_new_this = new_this.merge(
+        askel[["rhs_id", "var"]].rename(columns={"rhs_id": "blk_id"}), on="blk_id")
+    st = _distinct(st, _sym(seed_new_this, path="path", var="var", type="mty"))
 
-    ret_lhs = askel.select("path", "var", "rhs_id")
-
-    rewrites = rw0_this.unionByName(rw0_new).distinct() \
-        .localCheckpoint(eager=True)
-    for _ in range(iterations):
+    rewrites = pd.concat([rw0_this, rw0_new], ignore_index=True).drop_duplicates()
+    for _ in range(ITERATIONS):
         # constructed-type propagation: v = new T() takes T's types — the
         # constructed VALUE drops the ctor binding's `:<init>` suffix so
         # instantiated identifiers carry the class fullname
         # (InheritanceFullNamePassTests "identifiers instantiated")
-        st = st.unionByName(
-            new_edges.join(st.withColumnRenamed("var", "tname"),
-                           ["path", "tname"])
-            .select("path", "var",
-                    F.regexp_replace("type", r":<init>$", "")
-                    .alias("type"))).distinct()
+        t = new_edges.merge(st.rename(columns={"var": "tname"}), on=["path", "tname"])
+        st = _distinct(st, _sym(t, path="path", var="var",
+                                type=_map(lambda x: _INIT.sub("", x), t["type"])))
         # cross-module resolved imports: the exporter's types flow to the
         # importing file's binding
-        st = st.unionByName(
-            rel_links.join(st.withColumnRenamed("path", "src_path"),
-                           ["src_path", "var"])
-            .select(F.col("imp_path").alias("path"), "var", "type")
-        ).distinct()
+        t = rel_links.merge(st.rename(columns={"path": "src_path"}),
+                            on=["src_path", "var"])
+        st = _distinct(st, _sym(t, path="imp_path", var="var", type="type"))
         # identifier aliasing within a file
-        st = st.unionByName(
-            ident_edges.join(
-                st.select(F.col("path").alias("path"),
-                          F.col("var").alias("src_var"),
-                          "type"), ["path", "src_var"])
-            .select("path", "var", "type")).distinct()
+        t = ident_edges.merge(st.rename(columns={"var": "src_var"}),
+                              on=["path", "src_var"])
+        st = _distinct(st, t[["path", "var", "type"]])
         # destructured-require propagation (single bare-module base only)
-        bare = (st.groupBy("path", F.col("var").alias("bvar"))
-                .agg(F.collect_set("type").alias("tys"))
-                .filter(F.size("tys") == 1)
-                .select("path", "bvar", F.element_at("tys", 1).alias("type"))
-                .filter(~F.col("type").contains(":")
-                        & ~F.col("type").startswith("__ecma.")))
-        st = st.unionByName(
-            fa_edges.join(bare, ["path", "bvar"]).select("path", "var", "type")
-        ).distinct()
-        # each self-referencing union DOUBLES the plan tree (st_{k+1}
-        # references st_k twice); with ~12 rules per iteration the
-        # un-truncated tree is 2^12 scans — checkpoint at midpoints to
-        # keep it bounded (measured: unbounded tree hangs the build)
-        st = st.localCheckpoint(eager=True)
+        bare = _single(st)
+        bare = bare[_test(bare["type"], lambda x: ":" not in x
+                          and not x.startswith("__ecma."))]
+        t = fa_edges.merge(bare.rename(columns={"var": "bvar"}), on=["path", "bvar"])
+        st = _distinct(st, t[["path", "var", "type"]])
         # single-typed receivers -> methodFullName rewrite
-        single = (st.groupBy("path", "var")
-                  .agg(F.collect_set("type").alias("tys"))
-                  .filter(F.size("tys") == 1)
-                  .select("path", "var", F.element_at("tys", 1).alias("type")))
+        single = _single(st)
+        by_head = single.rename(columns={"var": "head"})
         # annotated params resolve their head through the symbol table
-        st = st.unionByName(
-            ann_params.join(single.withColumnRenamed("var", "head"),
-                            ["path", "head"])
-            .select("path", F.col("pvar").alias("var"),
-                    F.when(F.col("tail") == "", F.col("type"))
-                    .otherwise(F.concat_ws(":", "type", "tail"))
-                    .alias("type"))).distinct()
+        t = ann_params.merge(by_head, on=["path", "head"])
+        st = _distinct(st, _sym(t, path="path", var="pvar",
+                                type=_with_tail(t["type"], t["tail"])))
         # annotated members: `v = this.<f>` adopts the resolved member type
-        mem_ty = (ann_members.join(single.withColumnRenamed("var", "head"),
-                                   ["path", "head"])
-                  .select("path", "fld",
-                          F.when(F.col("tail") == "", F.col("type"))
-                          .otherwise(F.concat_ws(":", "type", "tail"))
-                          .alias("type")))
-        st = st.unionByName(
-            this_fa_edges.join(mem_ty, ["path", "fld"])
-            .select("path", "var", "type")).distinct()
+        t = ann_members.merge(by_head, on=["path", "head"])
+        mem_ty = pd.DataFrame({"path": t["path"].to_numpy(), "fld": t["fld"].to_numpy(),
+                               "type": _with_tail(t["type"], t["tail"])})
+        t = this_fa_edges.merge(mem_ty, on=["path", "fld"])
+        st = _distinct(st, t[["path", "var", "type"]])
         # identifier-rhs exports (`exports.f = localName`) alias the
         # exported local's recovered types
-        st = st.unionByName(
-            export_ident_edges.join(
-                st.select("path", F.col("var").alias("src_var"), "type"),
-                ["path", "src_var"])
-            .select("path", "var", "type")).distinct()
-        exp_entity = (st.filter(F.col("var").startswith("exports."))
-                      .select(F.col("path").alias("src_path"),
-                              F.col("var").alias("evar"), "type"))
+        t = export_ident_edges.merge(st.rename(columns={"var": "src_var"}),
+                                     on=["path", "src_var"])
+        st = _distinct(st, t[["path", "var", "type"]])
+        exp_entity = st[_test(st["var"], lambda v: v.startswith("exports."))] \
+            .rename(columns={"path": "src_path", "var": "evar"})
         # exported members flow to relative importers under their binding
         # (`<binding>.<member>` composite vars for member-call resolution)
-        st = st.unionByName(
-            rel_links.join(exp_entity, "src_path")
-            .filter(~F.col("evar").isin("exports.exports",
-                                        "exports.default"))
-            .select(F.col("imp_path").alias("path"),
-                    F.concat(F.col("var"), F.lit("."),
-                             F.expr("substring(evar, 9)")).alias("var"),
-                    "type")).distinct()
+        t = rel_links.merge(exp_entity, on="src_path")
+        t = t[~t["evar"].isin(["exports.exports", "exports.default"])]
+        members = _sym(t, path="imp_path", var=_map(lambda v, e: f"{v}.{e[8:]}",
+                                                    t["var"], t["evar"]), type="type")
         # resolved bindings adopt their exported entity: named/default
         # export for ES imports; the `module.exports` closure — else the
         # module's `::program` entity — for requires
         # (JavaScriptImportResolverPass; CallLinkerPassTests receiver
         # typeFullName "bar.js::program", RequirePassTests
         # "sampleone.js::program:<lambda>0")
-        ad_member = (rel_links.filter(F.col("member").isNotNull())
-                     .join(exp_entity, "src_path")
-                     .filter((F.col("evar") == F.concat(F.lit("exports."),
-                                                        F.col("member")))
-                             | (F.col("evar") == "exports.default"))
-                     .select(F.col("imp_path").alias("path"), "var", "type"))
-        req_binds = rel_links.filter(F.col("member").isNull())
-        mod_exp = exp_entity.filter(F.col("evar") == "exports.exports")
-        ad_modfn = (req_binds.join(mod_exp, "src_path")
-                    .select(F.col("imp_path").alias("path"), "var", "type"))
-        ad_prog = (req_binds.join(mod_exp.select("src_path").distinct(),
-                                  "src_path", "left_anti")
-                   .select(F.col("imp_path").alias("path"), "var",
-                           F.concat(F.col("src_path"),
-                                    F.lit("::program")).alias("type")))
-        st = (st.unionByName(ad_member).unionByName(ad_modfn)
-              .unionByName(ad_prog).distinct()
-              .localCheckpoint(eager=True))  # midpoint truncation, see above
-        remaining = member_calls.join(rewrites.select("id"), "id",
-                                      "left_anti")
+        t = rel_links[rel_links["member"].notna()].merge(exp_entity, on="src_path")
+        t = t[_test(zip(t["evar"], t["member"]), lambda em: em[0] in (
+            "exports." + em[1], "exports.default"))]
+        ad_member = _sym(t, path="imp_path", var="var", type="type")
+        req_links = rel_links[rel_links["member"].isna()]
+        mod_exp = exp_entity[exp_entity["evar"] == "exports.exports"]
+        ad_modfn = _sym(req_links.merge(mod_exp, on="src_path"),
+                        path="imp_path", var="var", type="type")
+        prog = req_links[~req_links["src_path"].isin(mod_exp["src_path"])]
+        ad_prog = _sym(prog, path="imp_path", var="var",
+                       type=_map(lambda p: p + "::program", prog["src_path"]))
+        st = _distinct(st, members, ad_member, ad_modfn, ad_prog)
+
+        remaining = _anti(member_calls, rewrites, ["id"])
         # direct `v.f` symbol entries (object-literal methods) win over the
         # composed `type:name` rewrite
-        direct_single = (st.filter(F.col("var").contains(".")
-                                   & F.col("type").contains(":"))
-                         .groupBy("path", F.col("var").alias("dvar"))
-                         .agg(F.collect_set("type").alias("tys"))
-                         .filter(F.size("tys") == 1)
-                         .select("path", "dvar",
-                                 F.element_at("tys", 1).alias("rec_mfn")))
-        rw_direct = (remaining
-                     .withColumn("dvar", F.concat_ws(".", "var", "name"))
-                     .join(direct_single, ["path", "dvar"])
-                     .select("id", "rec_mfn", "path"))
-        remaining = remaining.join(rw_direct.select("id"), "id", "left_anti")
-        rw = (remaining.join(single, ["path", "var"])
-              .select("id",
-                      F.concat_ws(":", F.col("type"), F.col("name")).alias("rec_mfn"),
-                      "path"))
-        rw = rw.unionByName(rw_direct).withColumn("is_ctor", F.lit(False))
+        direct_single = _single(st[_test(st["var"], lambda v: "." in v)
+                                   & _test(st["type"], lambda x: ":" in x)])
+        t = remaining.assign(dvar=_map(lambda v, n: f"{v}.{n}",
+                                       remaining["var"], remaining["name"])) \
+            .merge(direct_single.rename(columns={"var": "dvar"}), on=["path", "dvar"])
+        rw_direct = rewrite(t["id"], t["type"], False)
+        t = _anti(remaining, rw_direct, ["id"]).merge(single, on=["path", "var"])
+        rw = pd.concat([rewrite(t["id"], _map(lambda x, n: f"{x}:{n}", t["type"], t["name"]),
+                                False), rw_direct], ignore_index=True)
         # simple `f()` calls on a single-typed callable binding
         # (conservative: multi-hint bindings — the flow-insensitive
         # `barOrBaz` case — stay <unknownFullName>)
-        single_callable = (st.filter(
-            F.col("type").contains("::")
-            & ~F.col("type").endswith("::program")
-            & F.expr("instr(substring(type, instr(type, '::') + 2), ':')"
-                     " > 0"))
-            .groupBy("path", "var")
-            .agg(F.collect_set("type").alias("tys"))
-            .filter(F.size("tys") == 1)
-            .select("path", "var", F.element_at("tys", 1).alias("rec_mfn")))
-        rw_call = (direct_calls
-                   .join(rewrites.select("id"), "id", "left_anti")
-                   .join(rw.select("id"), "id", "left_anti")
-                   .join(single_callable, ["path", "var"])
-                   .select("id", "rec_mfn", "path")
-                   .withColumn("is_ctor", F.lit(False)))
-        rw = rw.unionByName(rw_call)
+        callable_ty = _test(st["type"], lambda x: "::" in x
+                            and not x.endswith("::program")
+                            and ":" in x[x.find("::") + 2:])
+        t = _anti(_anti(direct_calls, rewrites, ["id"]), rw, ["id"]) \
+            .merge(_single(st[callable_ty]), on=["path", "var"])
+        rw_call = rewrite(t["id"], t["type"], False)
         # `new F()` where F is a single-typed known closure -> the ctor
         # call resolves to the function's fullname (no <returnValue>)
-        single2 = (st.groupBy("path", "var")
-                   .agg(F.collect_set("type").alias("tys"))
-                   .filter(F.size("tys") == 1)
-                   .select("path", "var",
-                           F.element_at("tys", 1).alias("type")))
-        op_new = calls.filter(F.col("name") == M.OP + "new").select(
-            F.col("id").alias("new_id"), "path")
-        rw_new = (op_new.join(new_recv, "new_id")
-                  .join(single2.withColumnRenamed("var", "tname"),
-                        ["path", "tname"])
-                  .filter(F.col("type").contains("::"))
-                  .select(F.col("new_id").alias("id"),
-                          F.col("type").alias("rec_mfn"), "path")
-                  .withColumn("is_ctor", F.lit(True)))
-        if rewrites is not None:
-            rw_new = rw_new.join(rewrites.select("id"), "id", "left_anti")
-        rw = rw.unionByName(rw_new).localCheckpoint(eager=True)
-        rewrites = rw if rewrites is None else rewrites.unionByName(rw)
+        single2 = _single(st)
+        t = (sel(new_call, new_id="id", path="path").merge(new_recv, on="new_id")
+             .merge(single2.rename(columns={"var": "tname"}), on=["path", "tname"]))
+        t = t[_test(t["type"], lambda x: "::" in x)]
+        rw_new = _anti(rewrite(t["new_id"], t["type"], True), rewrites, ["id"])
+        rw = pd.concat([rw, rw_call, rw_new], ignore_index=True)
+        rewrites = pd.concat([rewrites, rw], ignore_index=True)
+
         # method-return types: annotation > returned literal > returned
         # recovered call; the ret: rows surface as typerec facts
-        ret_ann_res = (mret_ann.join(single2.withColumnRenamed("var", "head"),
-                                     ["path", "head"])
-                       .select("mid",
-                               F.when(F.col("tail") == "", F.col("type"))
-                               .otherwise(F.concat_ws(":", "type", "tail"))
-                               .alias("rtype"),
-                               F.lit(0).alias("prio")))
-        ret_call = (ret_call_ids.join(rewrites.select("id", "rec_mfn"), "id")
-                    .select("mid",
-                            F.concat(F.col("rec_mfn"),
-                                     F.lit(":" + RETURN_VALUE)).alias("rtype"),
-                            F.lit(2).alias("prio")))
-        ret_map = (ret_ann_res
-                   .unionByName(ret_lit.withColumn("prio", F.lit(1)))
-                   .unionByName(ret_call)
-                   .groupBy("mid")
-                   .agg(F.min(F.struct("prio", "rtype")).alias("b"))
-                   .select("mid", F.col("b.rtype").alias("rtype"))
-                   .join(methods_js, "mid")
-                   .localCheckpoint(eager=True))
-        ret_by_mfn = ret_map.select(F.col("mfn_full").alias("rec_mfn"),
-                                    F.col("rtype").alias("known_rtype"))
-        st = st.unionByName(
-            ret_map.filter(~F.col("mname").startswith(":"))
-            .select("path", F.concat(F.lit("ret:"), "mname").alias("var"),
-                    F.col("rtype").alias("type"))).distinct()
+        t = mret_ann.merge(single2.rename(columns={"var": "head"}), on=["path", "head"])
+        t2 = ret_call_ids.merge(rewrites[["id", "rec_mfn"]], on="id")
+        ret_map = (pd.concat([
+            pd.DataFrame({"mid": t["mid"].to_numpy(), "prio": 0,
+                          "rtype": _with_tail(t["type"], t["tail"])}),
+            ret_lit.assign(prio=1),
+            pd.DataFrame({"mid": t2["mid"].to_numpy(), "prio": 2,
+                          "rtype": _map(lambda r: f"{r}:{RETURN_VALUE}", t2["rec_mfn"])}),
+        ], ignore_index=True).sort_values(["mid", "prio", "rtype"])
+            .drop_duplicates("mid")[["mid", "rtype"]].merge(methods_js, on="mid"))
+        ret_by_mfn = ret_map[["mfn_full", "rtype"]].rename(
+            columns={"mfn_full": "rec_mfn", "rtype": "known_rtype"})
+        named = ret_map[_test(ret_map["mname"], lambda n: not n.startswith(":"))]
+        st = _distinct(st, _sym(named, path="path", type="rtype",
+                                var=_map(lambda n: "ret:" + n, named["mname"])))
         # assigned results: known callee return type > `mfn:<returnValue>`
-        ret = (ret_lhs.join(rw.filter(~F.col("is_ctor"))
-                            .select(F.col("id").alias("rhs_id"), "rec_mfn"),
-                            "rhs_id")
-               .join(ret_by_mfn, "rec_mfn", "left")
-               .select("path", "var",
-                       F.when(F.col("rec_mfn").startswith("__ecma.Math:"),
-                              F.lit("__ecma.Number"))
-                       .when(F.col("known_rtype").isNotNull(),
-                             F.col("known_rtype"))
-                       .otherwise(F.concat(F.col("rec_mfn"),
-                                           F.lit(":" + RETURN_VALUE)))
-                       .alias("type")))
-        st = (st.unionByName(ret).distinct()
-              .localCheckpoint(eager=True))
+        called = rw[~rw["is_ctor"].to_numpy(bool)]
+        t = (askel[["path", "var", "rhs_id"]]
+             .merge(called[["id", "rec_mfn"]].rename(columns={"id": "rhs_id"}), on="rhs_id")
+             .merge(ret_by_mfn, on="rec_mfn", how="left"))
+        st = _distinct(st, _sym(t, path="path", var="var", type=_map(
+            lambda r, k: "__ecma.Number" if r.startswith("__ecma.Math:")
+            else k if isinstance(k, str) else f"{r}:{RETURN_VALUE}",
+            t["rec_mfn"], t["known_rtype"])))
     # a later-recovered return type REPLACES the dummy `mfn:<returnValue>`
     # hint rows accumulated in earlier iterations
-    repl = ret_by_mfn.select(
-        F.concat(F.col("rec_mfn"), F.lit(":" + RETURN_VALUE)).alias("type"),
-        "known_rtype").dropDuplicates(["type"])
-    st = (st.join(repl, "type", "left")
-          .select("path", "var",
-                  F.coalesce("known_rtype", "type").alias("type"))
-          .distinct().localCheckpoint(eager=True))
-    return rewrites.select("id", "rec_mfn"), st
+    repl = {f"{r}:{RETURN_VALUE}": k
+            for r, k in zip(ret_by_mfn["rec_mfn"], ret_by_mfn["known_rtype"])}
+    st = _distinct(_sym(st, path="path", var="var",
+                        type=_map(lambda x: repl.get(x, x), st["type"])))
+
+    return pd.concat([
+        pd.DataFrame({"row": REWRITE_ROW, "id": rewrites["id"].to_numpy(np.int64),
+                      "type": rewrites["rec_mfn"].to_numpy()}),
+        st.assign(row=SYMBOL_ROW, id=0),
+    ], ignore_index=True)
+
+
+def recover_types(nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """-> (rewrites (id, rec_mfn), symbol table (path, var, type)) for the
+    JavaScript rows of ``nodes``: one grouped task, materialized once."""
+    # no nulls in the id columns: Arrow hands a nullable integer column to
+    # pandas as float64, which cannot hold a 64-bit hash
+    js = nodes.filter(F.col("lang") == "javascript").select(
+        *[F.coalesce(c, F.lit(0).cast("long")).alias(c) for c in ID_COLS], "arg_index",
+        *[F.coalesce(c, F.lit("")).alias(c) for c in TEXT_COLS])
+    out = (js.withColumn("recovery_group", F.lit(0)).groupBy("recovery_group")
+           .applyInPandas(recovery_task, OUT_SCHEMA).localCheckpoint(eager=True))
+    rows = F.col("row")
+    return (out.filter(rows == REWRITE_ROW).select("id", F.col("type").alias("rec_mfn")),
+            out.filter(rows == SYMBOL_ROW).select("path", "var", "type"))
+
+
+def js_mfn_rewrites(nodes: DataFrame) -> DataFrame:
+    """-> (id, rec_mfn): methodFullName rewrites for JS dynamic member calls
+    whose receiver's type was recovered."""
+    return recover_types(nodes)[0]
 
 
 def js_inherits_parents(nodes: DataFrame,

@@ -259,8 +259,8 @@ def spark_facts(spark: SparkSession) -> DataFrame:
     # XTypeRecovery facts: recovered call mfns by call code + identifier
     # type-hint sets (sorted) by `id:<var>` — the distributed twin of the
     # sequential _js_recover mirror
-    from joern_spark.operators.typerecovery import _recover
-    rw, st = _recover(nodes)
+    from joern_spark.operators.typerecovery import recover_types
+    rw, st = recover_types(nodes)
     out.append(
         rw.join(base.select("lang", "kase", "id", "code"), "id")
         .select("lang", "kase", F.lit("typerec").alias("relation"),

@@ -3,9 +3,9 @@ after it.
 
 Stage order mirrors the reference overlay order (X2Cpg.scala:374-388 →
 DefaultOverlays.scala:18-25): parse (AST + fused intraprocedural passes) →
-the link tail (stubs, bindings, call graph, canonicalization; one grouped
-pandas task) → the row-scale base passes and edges. Every stage is a pure
-DataFrame→DataFrame function.
+JS type recovery and the link tail (stubs, bindings, call graph,
+canonicalization), each one grouped pandas task → the row-scale base passes
+and edges. Every stage is a pure DataFrame→DataFrame function.
 
 A build materializes twice: the parse output, written here, and the graph
 tables, written by ``sources.write_graph_tables`` from the lazy relations
@@ -132,10 +132,10 @@ def build_cpg(spark: SparkSession, source: DataFrame,
     ok = nodes.filter(F.col("parse_error") == "")
 
     # ---- stage 2: the link tail, one grouped pandas task ---------------------
-    # XTypeRecovery lite: recovered JS methodFullNames reach the link task,
-    # so require()-bound member calls get stubs + CALL edges (XTypeHintCallLinker
-    # analogue). JS-free input skips type recovery and the JS inheritance
-    # resolution.
+    # JS type recovery (XTypeRecovery; one grouped pandas task, checkpointed
+    # once): recovered methodFullNames reach the link task, so require()-bound
+    # member calls get stubs + CALL edges (XTypeHintCallLinker analogue).
+    # JS-free input skips type recovery and the JS inheritance resolution.
     has_js = manifest["has_js"]
     rewrites = TR.js_mfn_rewrites(ok) if has_js else None
     # One eager checkpoint runs the task; its (dimension-sized) output is a

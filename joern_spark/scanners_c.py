@@ -1557,20 +1557,23 @@ def suite_findings(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     stubs — MethodStubCreator emits one `gets`/`free`/… stub for the whole
     corpus, and call-site resolution walks CALL edges into them) is exactly
     the per-suite cpg of the reference harness."""
-    # Materialize both relations, and each bundle's node slice, once up
-    # front: a traversal reads them in many plan branches and in each of its
-    # `reach_pairs` jobs, and from local checkpoints those reads skip
-    # re-scanning and re-filtering the graph tables (without them the suite
-    # ran about a third slower).
+    # Materialize both relations up front, and each file's node slice once,
+    # for the first query on it: a traversal reads them in many plan
+    # branches and in each of its `reach_pairs` jobs, and from local
+    # checkpoints those reads skip re-scanning and re-filtering the graph
+    # tables (without them the suite ran about a third slower).
     nodes = nodes.localCheckpoint(eager=True)
     edges = edges.localCheckpoint(eager=True)
     stubs = nodes.filter(F.col("path") == "")
+    slices: dict[str, DataFrame] = {}
     out = None
     for bname, bundle in BUNDLES.items():
         for q in bundle:
             fpath = SUITE_OVERRIDES.get((bname, q.name), f"{bname}.c")
-            n_f = (nodes.filter(F.col("path") == fpath).unionByName(stubs)
-                   .localCheckpoint(eager=True))
+            if fpath not in slices:
+                slices[fpath] = (nodes.filter(F.col("path") == fpath)
+                                 .unionByName(stubs).localCheckpoint(eager=True))
+            n_f = slices[fpath]
             methods = n_f.filter(F.col("kind") == M.METHOD).select(
                 F.col("id").alias("m_id"), F.col("name").alias("m_name"))
             ids = q.traversal(n_f, edges).select("id").distinct()
