@@ -1,69 +1,115 @@
-"""Base linking layer — reference passes #2-#12 (SURVEY.md §2A).
+"""Base linking layer — reference passes #2-#12 (SURVEY.md §2A) — and the
+generators that turn passes into node and edge rows.
 
-Two kinds of pass live here.
+Node ids are content-derived (xxhash64 over stable keys), so a pass whose
+target identity is a pure function of row columns is a per-row projection,
+not a join. Where each pass runs:
 
-Row-scale passes stay DataFrame ops (``run_base``). Node ids are
-content-derived (xxhash64 over stable keys), so every edge whose *target
-identity* is a pure function of row columns becomes a PROJECTION instead of
-a join:
-
-* INHERITS_FROM / ALIAS_OF → type id = xxhash64('TYPE', type_full_name)
-* SOURCE_FILE → file id  = xxhash64('FILE', repo, path, commit)
-* AST link to the per-file <global> NAMESPACE_BLOCK → computable id
-
-Symbol-table passes — the method and type-decl stubs, the TYPE→TYPE_DECL
-REF edges and the AST/DECLARES links to a parent named by fullname — are
-pandas rules over one link group's rows, run inside
-``linking.link_task``, as the reference runs them as hash-map lookups
-inside one JVM (LinkingUtil.scala:35-119). Stub ids are hashed JVM-side
-into the task's input rows.
+* **Per parse row, behind one generator.** ``file_local_nodes`` turns each
+  parse row into its candidate FILE, per-file ``<global>``
+  NAMESPACE_BLOCK and METHOD_PARAMETER_OUT nodes and explodes them once.
+  ``operators.parse.derived_edges`` does the same for every edge one row
+  determines, among them NSB → FILE SOURCE_FILE, NSB → NAMESPACE REF, the
+  AST links to the ``<global>`` block, ALIAS_OF and the non-JavaScript
+  INHERITS_FROM edges.
+* **In the link task** (``linking.link_task``), as pandas rules over one
+  link group's rows: the passes that need the whole input — META_DATA per
+  (repo, lang) and NAMESPACE per block name, a distinct each — the
+  symbol-table passes (method and type-decl stubs, TYPE → TYPE_DECL REF,
+  AST/DECLARES to a parent named by fullname) and FieldAccessLinkerPass,
+  a cross-file lookup. The reference runs these as hash-map lookups inside
+  one JVM (LinkingUtil.scala:35-119). Python has no xxhash, so ids are
+  hashed JVM-side: into the task's input rows, or where
+  ``linking.link_nodes`` and ``linking.link_edges`` decode its output.
+* **Spark-side joins** (``run_base``): CAPTURE edges and the JavaScript
+  INHERITS_FROM edges (``typerecovery.js_inherits_parents``). CAPTURE
+  pairs rows of one file, yet stays a join: fusing it into the parse
+  kernel would change the METHOD rows' ``ie_*`` arrays.
 """
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from joern_spark import model as M
 from joern_spark.operators import callgraph as CG
 from joern_spark.operators.typerecovery import js_inherits_parents
 
 NODE_COLS = [f.name for f in M.RAW_NODE_SCHEMA.fields] + M.NODE_ID_COLS
+_NODE_TYPES = {**{f.name: f.dataType for f in M.RAW_NODE_SCHEMA.fields},
+               **{c: T.LongType() for c in M.NODE_ID_COLS}}
+
+# a derived node's value in each column no pass sets
+_NODE_DEFAULTS = {
+    "repo": "", "path": "", "commit": "", "lang": "", "sha256": "",
+    "node_idx": -1, "parent_idx": -1, "method_idx": -1, "ref_idx": -1,
+    "kind": "", "name": "", "full_name": "", "signature": "", "code": "",
+    "order": 0, "arg_index": -1, "role": "", "dispatch_type": "",
+    "type_full_name": M.ANY, "method_full_name": "",
+    "control_structure_type": "", "jump_label": "", "canonical_name": "",
+    "ast_parent_type": "", "ast_parent_full_name": "", "inherits_from": None,
+    "alias_type_full_name": "", "evaluation_strategy": "", "param_index": -1,
+    "is_variadic": False, "is_external": False, "nargs": -1,
+    "generic_signature": "", "line": 0, "line_end": -1, "parse_error": "",
+    "ie_src": None, "ie_dst": None, "ie_label": None, "ie_var": None,
+    "id": None, "parent_id": None, "method_id": None, "ref_id": None,
+}
+
+# the columns some pass sets on a derived node
+GEN_COLS = ["repo", "path", "commit", "lang", "id", "kind", "name", "full_name",
+            "signature", "code", "order", "param_index", "type_full_name",
+            "evaluation_strategy", "is_external", "parent_id", "method_id",
+            "method_full_name", "ast_parent_type", "ast_parent_full_name"]
+
+EDGE_TYPE = "struct<src:bigint,dst:bigint,label:string,variable:string>"
 
 
-def _mk_nodes(df: DataFrame, **exprs) -> DataFrame:
-    """Project df into the canonical wide node schema, defaulting columns."""
-    defaults = {
-        "repo": F.lit(""), "path": F.lit(""), "commit": F.lit(""), "lang": F.lit(""),
-        "sha256": F.lit(""), "node_idx": F.lit(-1).cast("long"),
-        "parent_idx": F.lit(-1).cast("long"), "method_idx": F.lit(-1).cast("long"),
-        "ref_idx": F.lit(-1).cast("long"), "kind": F.lit(""), "name": F.lit(""),
-        "full_name": F.lit(""), "signature": F.lit(""), "code": F.lit(""),
-        "order": F.lit(0), "arg_index": F.lit(-1), "role": F.lit(""),
-        "dispatch_type": F.lit(""), "type_full_name": F.lit(M.ANY),
-        "method_full_name": F.lit(""), "control_structure_type": F.lit(""),
-        "jump_label": F.lit(""), "canonical_name": F.lit(""),
-        "ast_parent_type": F.lit(""), "ast_parent_full_name": F.lit(""),
-        "inherits_from": F.lit(None).cast("array<string>"),
-        "alias_type_full_name": F.lit(""), "evaluation_strategy": F.lit(""),
-        "param_index": F.lit(-1), "is_variadic": F.lit(False),
-        "is_external": F.lit(False), "nargs": F.lit(-1),
-        "generic_signature": F.lit(""),
-        "line": F.lit(0), "line_end": F.lit(-1), "parse_error": F.lit(""),
-        "ie_src": F.lit(None).cast("array<bigint>"),
-        "ie_dst": F.lit(None).cast("array<bigint>"),
-        "ie_label": F.lit(None).cast("array<int>"),
-        "ie_var": F.lit(None).cast("array<string>"),
-        "id": F.lit(None).cast("long"), "parent_id": F.lit(None).cast("long"),
-        "method_id": F.lit(None).cast("long"), "ref_id": F.lit(None).cast("long"),
-    }
-    defaults.update(exprs)
-    return df.select(*[defaults[c].alias(c) for c in NODE_COLS])
+def _default(c: str) -> Column:
+    return F.lit(_NODE_DEFAULTS[c]).cast(_NODE_TYPES[c])
 
 
-def _edge(src, dst, label, variable=None):
-    return [src.alias("src"), dst.alias("dst"), F.lit(label).alias("label"),
-            (F.lit(None).cast("string") if variable is None else variable).alias("variable")]
+def node(**cols) -> Column:
+    """One candidate node for ``generate_nodes``: a struct of ``GEN_COLS``
+    holding ``cols`` (columns or literals) and defaults elsewhere."""
+    def value(c):
+        v = cols.get(c, _NODE_DEFAULTS[c])
+        return (v if isinstance(v, Column) else F.lit(v)).cast(_NODE_TYPES[c])
+    return F.struct(*[value(c).alias(c) for c in GEN_COLS])
+
+
+def generate_nodes(df: DataFrame, candidates: Column) -> DataFrame:
+    """The nodes of ``candidates``, an array of ``node`` structs per row of
+    ``df`` (null entries dropped), exploded once into the wide node
+    schema."""
+    n = df.select(F.explode(candidates).alias("n")).filter(F.col("n").isNotNull())
+    return n.select(*[(F.col("n")[c] if c in GEN_COLS else _default(c)).alias(c)
+                      for c in NODE_COLS])
+
+
+def edge(cond, src: Column, dst: Column, label, variable: Column | None = None
+         ) -> Column:
+    """One candidate edge (``EDGE_TYPE``) for ``explode_edges``; null where
+    ``cond`` does not hold (``cond`` None: always)."""
+    e = F.struct(src.cast("long").alias("src"), dst.cast("long").alias("dst"),
+                 (F.lit(label) if isinstance(label, str) else label).alias("label"),
+                 (F.lit(None).cast("string") if variable is None
+                  else variable).alias("variable"))
+    return e if cond is None else F.when(cond, e)
+
+
+def explode_edges(df: DataFrame, candidates: Column) -> DataFrame:
+    """The edges of ``candidates``, an array of ``edge`` structs per row of
+    ``df`` (null entries dropped), exploded once."""
+    return (df.select(F.explode(candidates).alias("e"))
+            .filter(F.col("e").isNotNull())
+            .select("e.src", "e.dst", "e.label", "e.variable"))
+
+
+def _edges(df: DataFrame, src: Column, dst: Column, label: str) -> DataFrame:
+    return df.select(edge(None, src, dst, label).alias("e")).select("e.*")
 
 
 def type_id(col):
@@ -76,6 +122,10 @@ def file_id():
 
 def nsb_id():
     return F.xxhash64(F.lit("NSB"), F.col("repo"), F.col("path"), F.col("commit"))
+
+
+def namespace_id(name_col):
+    return F.xxhash64(F.lit("NAMESPACE"), name_col)
 
 
 # --------------------------------------------------------------------------- #
@@ -106,17 +156,6 @@ def used_type_fullnames(nodes: DataFrame, has_js: bool) -> DataFrame:
     return fns.filter((F.col("fn") != "") & F.col("fn").isNotNull()).distinct()
 
 
-def type_nodes(fns: DataFrame) -> DataFrame:
-    return _mk_nodes(
-        fns,
-        id=type_id(F.col("fn")),
-        kind=F.lit(M.TYPE),
-        name=F.element_at(F.split(F.col("fn"), r"\."), -1),
-        full_name=F.col("fn"),
-        type_full_name=F.col("fn"),
-    )
-
-
 # Pass 12 — TypeEvalPass (x2cpg/.../base/TypeEvalPass.scala:9-42): projection.
 EVAL_TYPE_KINDS = [M.METHOD_PARAMETER_IN, M.METHOD_PARAMETER_OUT, M.METHOD_RETURN,
                    M.MEMBER, M.LITERAL, M.CALL, M.LOCAL, M.IDENTIFIER, M.BLOCK,
@@ -124,38 +163,33 @@ EVAL_TYPE_KINDS = [M.METHOD_PARAMETER_IN, M.METHOD_PARAMETER_OUT, M.METHOD_RETUR
 
 
 # --------------------------------------------------------------------------- #
-# Pass 3 — FileCreationPass (+ SOURCE_FILE edges), pass 0 — per-file
-# NAMESPACE_BLOCK (MetaDataPass.scala:28-35)
+# Pass 3 — FileCreationPass, pass 0 — the per-file NAMESPACE_BLOCK
+# (MetaDataPass.scala:28-35) and pass 8 — MethodDecoratorPass
+# (MethodDecoratorPass.scala:20-57): one generator over the parse rows.
 # --------------------------------------------------------------------------- #
 
-def file_dimension(nodes: DataFrame) -> DataFrame:
-    """One row per source file WITHOUT a distinct/shuffle: the preorder root
-    row (node_idx == 0) is unique per file by construction."""
-    return nodes.filter(F.col("node_idx") == 0).select("repo", "path", "commit", "lang")
-
-
-def file_nodes(files: DataFrame) -> DataFrame:
-    return _mk_nodes(
-        files, repo=F.col("repo"), path=F.col("path"), commit=F.col("commit"),
-        lang=F.col("lang"), id=file_id(), kind=F.lit(M.FILE),
-        name=F.col("path"), full_name=F.col("path"),
-    )
-
-
-def namespace_block_nodes(files: DataFrame) -> DataFrame:
-    return _mk_nodes(
-        files, repo=F.col("repo"), path=F.col("path"), commit=F.col("commit"),
-        lang=F.col("lang"), id=nsb_id(), kind=F.lit(M.NAMESPACE_BLOCK),
-        name=F.lit(M.GLOBAL),
-        full_name=F.concat_ws(":", F.col("path"), F.lit(M.GLOBAL)),
-        parent_id=file_id(),
-    )
-
-
-def source_file_edges(files: DataFrame) -> DataFrame:
-    """NSB → FILE only: decl → FILE edges are emitted by the fused
-    projection pass (operators.parse.derived_edges)."""
-    return files.select(*_edge(nsb_id(), file_id(), M.SOURCE_FILE))
+def file_local_nodes(nodes: DataFrame) -> DataFrame:
+    """FILE and ``<global>`` NAMESPACE_BLOCK nodes per file, from its
+    preorder root row (node_idx 0, unique per file by construction, so no
+    distinct), and a METHOD_PARAMETER_OUT clone per METHOD_PARAMETER_IN."""
+    root = F.col("node_idx") == 0
+    pin = F.col("kind") == M.METHOD_PARAMETER_IN
+    where = {c: F.col(c) for c in ("repo", "path", "commit", "lang")}
+    return generate_nodes(nodes.filter(root | pin), F.array(
+        F.when(root, node(**where, id=file_id(), kind=M.FILE,
+                          name=F.col("path"), full_name=F.col("path"))),
+        F.when(root, node(**where, id=nsb_id(), kind=M.NAMESPACE_BLOCK,
+                          name=M.GLOBAL,
+                          full_name=F.concat_ws(":", F.col("path"), F.lit(M.GLOBAL)),
+                          parent_id=file_id())),
+        F.when(pin, node(**where, id=F.xxhash64(F.lit("POUT"), F.col("id")),
+                         kind=M.METHOD_PARAMETER_OUT, name=F.col("name"),
+                         code=F.col("code"), order=F.col("order"),
+                         param_index=F.col("param_index"),
+                         type_full_name=F.col("type_full_name"),
+                         evaluation_strategy=M.BY_SHARING,
+                         parent_id=F.col("parent_id"),
+                         method_id=F.col("method_id")))))
 
 
 # --------------------------------------------------------------------------- #
@@ -163,51 +197,26 @@ def source_file_edges(files: DataFrame) -> DataFrame:
 # reference emits ONE META_DATA node per CPG; distributed, the natural unit
 # is one per (repo, lang) build partition — name carries the language (as in
 # the reference), full_name the partition key, code the producing engine.
-# --------------------------------------------------------------------------- #
-
-def meta_data_nodes(files: DataFrame) -> DataFrame:
-    parts = files.select("repo", "lang").distinct()
-    return _mk_nodes(
-        parts, repo=F.col("repo"), lang=F.col("lang"),
-        id=F.xxhash64(F.lit("META_DATA"), F.col("repo"), F.col("lang")),
-        kind=F.lit(M.META_DATA), name=F.upper(F.col("lang")),
-        full_name=F.concat_ws(":", F.col("repo"), F.col("lang")),
-        code=F.lit("joern_spark"),
-    )
-
-
-# --------------------------------------------------------------------------- #
 # Pass 4 — NamespaceCreator (x2cpg/.../base/NamespaceCreator.scala:17-25):
-# one NAMESPACE node per distinct NAMESPACE_BLOCK name + NSB → NAMESPACE REF.
-# Namespace ids are pure hashes of the name, so the REF edges are a
-# projection over the NSB dimension — no join, no shuffle beyond the tiny
-# distinct for the nodes themselves.
+# one NAMESPACE node per distinct NAMESPACE_BLOCK name. Both are distincts
+# over the whole input, so they run in the link task; the NSB → NAMESPACE
+# REF edges are a projection (``parse.derived_edges``), since namespace ids
+# hash the name.
 # --------------------------------------------------------------------------- #
 
-def namespace_id(name_col):
-    return F.xxhash64(F.lit("NAMESPACE"), name_col)
+def meta_data_partitions(roots: pd.DataFrame) -> pd.DataFrame:
+    """(repo, lang) of each META_DATA node, over the file-root rows."""
+    return roots[["repo", "lang"]].drop_duplicates()
 
 
-def _nsb_dimension(nodes: DataFrame, files: DataFrame) -> DataFrame:
-    """(nsb_id, name): the derived per-file global blocks plus any parsed
-    NAMESPACE_BLOCK rows."""
-    derived = files.select(nsb_id().alias("nsb_id"), F.lit(M.GLOBAL).alias("name"))
-    parsed = nodes.filter(F.col("kind") == M.NAMESPACE_BLOCK).select(
-        F.col("id").alias("nsb_id"), "name")
-    return derived.unionByName(parsed)
-
-
-def namespace_nodes(nodes: DataFrame, files: DataFrame) -> DataFrame:
-    names = _nsb_dimension(nodes, files).select("name").distinct()
-    return _mk_nodes(
-        names, id=namespace_id(F.col("name")), kind=F.lit(M.NAMESPACE),
-        name=F.col("name"), full_name=F.col("name"),
-    )
-
-
-def namespace_ref_edges(nodes: DataFrame, files: DataFrame) -> DataFrame:
-    d = _nsb_dimension(nodes, files)
-    return d.select(*_edge(F.col("nsb_id"), namespace_id(F.col("name")), M.REF))
+def namespace_names(rows: pd.DataFrame, roots: pd.DataFrame) -> pd.DataFrame:
+    """(name) of each NAMESPACE node: the parsed NAMESPACE_BLOCK rows'
+    names, plus ``<global>`` for the per-file blocks when there are files
+    (``roots``)."""
+    names = rows.loc[rows["kind"] == M.NAMESPACE_BLOCK, "name"]
+    if len(roots):
+        names = pd.concat([pd.Series([M.GLOBAL], dtype=object), names])
+    return names.drop_duplicates().to_frame("name")
 
 
 # --------------------------------------------------------------------------- #
@@ -238,8 +247,8 @@ def capture_edges(nodes: DataFrame) -> DataFrame:
              .select(F.col("id").alias("inner_mid"),
                      F.col("parent_id").alias("mref_id"))
              .join(mref_ids, "mref_id"))
-    return (captured.join(inner, "inner_mid")
-            .select(*_edge(F.col("mref_id"), F.col("ref_id"), M.CAPTURE)))
+    return _edges(captured.join(inner, "inner_mid"),
+                  F.col("mref_id"), F.col("ref_id"), M.CAPTURE)
 
 
 # --------------------------------------------------------------------------- #
@@ -267,16 +276,6 @@ def type_decl_dimension(nodes: pd.DataFrame, fns: pd.DataFrame) -> pd.DataFrame:
                       .assign(stub=True)], ignore_index=True)
 
 
-def type_decl_stub_rows(stubs: DataFrame) -> DataFrame:
-    """External TYPE_DECL nodes for the stub rows (fn, decl_id) of
-    ``type_decl_dimension``."""
-    return _mk_nodes(
-        stubs, id=F.col("decl_id"), kind=F.lit(M.TYPE_DECL),
-        name=F.element_at(F.split(F.col("fn"), r"\."), -1),
-        full_name=F.col("fn"), is_external=F.lit(True),
-    )
-
-
 # --------------------------------------------------------------------------- #
 # Pass 6 — MethodStubCreator (MethodStubCreator.scala:26-91): one external
 # METHOD stub (+params, RET) per called-but-undefined methodFullName; arg
@@ -302,67 +301,12 @@ def method_stub_nodes(calls: pd.DataFrame, methods_dim: pd.DataFrame) -> pd.Data
         is_external=True, m_parent="")
 
 
-def method_stub_rows(stubs: DataFrame) -> DataFrame:
-    """METHOD, METHOD_PARAMETER_IN (one per argument position, p1..pN) and
-    METHOD_RETURN nodes for the stub rows (m_fn, m_id, m_name, m_sig,
-    max_args) ``method_stub_nodes`` found."""
-    stub = _mk_nodes(
-        stubs, id=F.col("m_id"), kind=F.lit(M.METHOD), name=F.col("m_name"),
-        full_name=F.col("m_fn"), signature=F.col("m_sig"),
-        code=F.col("m_name"), is_external=F.lit(True),
-    )
-    params_src = stubs.filter(F.col("max_args") >= 1).select(
-        "m_fn", "m_id", F.explode(F.sequence(F.lit(1), F.col("max_args"))).alias("pi"))
-    params = _mk_nodes(
-        params_src,
-        id=F.xxhash64(F.lit("METHOD_STUB_P"), F.col("m_fn"), F.col("pi")),
-        kind=F.lit(M.METHOD_PARAMETER_IN),
-        name=F.concat(F.lit("p"), F.col("pi")),
-        code=F.concat(F.lit("p"), F.col("pi")),
-        order=F.col("pi"), param_index=F.col("pi"),
-        evaluation_strategy=F.lit(M.BY_VALUE), is_external=F.lit(True),
-        parent_id=F.col("m_id"),
-    )
-    rets = _mk_nodes(
-        stubs,
-        id=F.xxhash64(F.lit("METHOD_STUB_R"), F.col("m_fn")),
-        kind=F.lit(M.METHOD_RETURN), code=F.lit("RET"),
-        evaluation_strategy=F.lit(M.BY_VALUE), is_external=F.lit(True),
-        parent_id=F.col("m_id"),
-    )
-    return stub.unionByName(params).unionByName(rets)
-
-
-# --------------------------------------------------------------------------- #
-# Pass 8 — MethodDecoratorPass (MethodDecoratorPass.scala:20-57):
-# METHOD_PARAMETER_OUT clone per by-reference PARAM_IN + PARAMETER_LINK.
-# --------------------------------------------------------------------------- #
-
-def parameter_out_nodes(nodes: DataFrame) -> DataFrame:
-    pins = nodes.filter(F.col("kind") == M.METHOD_PARAMETER_IN)
-    return _mk_nodes(
-        pins, repo=F.col("repo"), path=F.col("path"), commit=F.col("commit"),
-        lang=F.col("lang"), id=F.xxhash64(F.lit("POUT"), F.col("id")),
-        kind=F.lit(M.METHOD_PARAMETER_OUT), name=F.col("name"),
-        code=F.col("code"), order=F.col("order"), param_index=F.col("param_index"),
-        type_full_name=F.col("type_full_name"),
-        evaluation_strategy=F.lit(M.BY_SHARING),
-        parent_id=F.col("parent_id"), method_id=F.col("method_id"),
-    )
-
-
 # --------------------------------------------------------------------------- #
 # Pass 9 — AstLinkerPass (AstLinkerPass.scala:12-61) + DECLARES extraction.
+# The AST links to the per-file <global> NAMESPACE_BLOCK are a projection
+# (``parse.derived_edges``); those to a parent named by fullname need the
+# symbol tables.
 # --------------------------------------------------------------------------- #
-
-def global_block_ast_edges(nodes: DataFrame) -> DataFrame:
-    """Parent = the per-file <global> NAMESPACE_BLOCK: computable id, so a
-    projection."""
-    return (nodes.filter((F.col("ast_parent_full_name") != "")
-                         & (F.col("ast_parent_type") == M.NAMESPACE_BLOCK)
-                         & F.col("kind").isin(M.METHOD, M.TYPE_DECL, M.MEMBER))
-            .select(*_edge(nsb_id(), F.col("id"), M.AST)))
-
 
 def ast_link_and_declares_edges(nodes: pd.DataFrame, decl_dim: pd.DataFrame
                                 ) -> pd.DataFrame:
@@ -393,73 +337,46 @@ def ast_link_and_declares_edges(nodes: pd.DataFrame, decl_dim: pd.DataFrame
 # keyed by (evalType(base) stripped of pointer decoration, field name).
 # --------------------------------------------------------------------------- #
 
-def field_access_ref_edges(nodes: DataFrame) -> DataFrame:
-    fa_calls = (nodes.filter((F.col("kind") == M.CALL)
-                             & F.col("name").isin(M.OP_FIELD_ACCESS,
-                                                  M.OP_INDIRECT_FIELD_ACCESS))
-                .select(F.col("id").alias("call_id")))
-    base = (nodes.filter((F.col("arg_index") == 1) & F.col("parent_id").isNotNull())
-            .select(F.col("parent_id").alias("call_id"),
-                    F.regexp_replace("type_full_name", r"[*\s&]+$", "").alias("owner")))
-    fld = (nodes.filter((F.col("kind") == M.FIELD_IDENTIFIER)
-                        & (F.col("arg_index") == 2))
-           .select(F.col("parent_id").alias("call_id"),
-                   F.col("canonical_name").alias("fname")))
-    # member owner = the enclosing TYPE_DECL (AST parent); frontends leave
-    # astParent* empty on MEMBER rows, the tree edge carries the ownership
-    owners = nodes.filter(F.col("kind") == M.TYPE_DECL).select(
-        F.col("id").alias("parent_id"), F.col("full_name").alias("owner"))
-    members = (nodes.filter(F.col("kind") == M.MEMBER)
-               .join(owners, "parent_id")
-               .select(F.col("id").alias("dst"), "owner",
-                       F.col("name").alias("fname")))
-    j = (fa_calls.join(base, "call_id").join(fld, "call_id")
-         .join(members, ["owner", "fname"]))
-    return j.select(*_edge(F.col("call_id"), F.col("dst"), M.REF))
+# trailing pointer/reference decoration; ASCII \s is Java's \s
+_DECORATION = re.compile(r"[*\s&]+$", re.ASCII)
 
 
-# --------------------------------------------------------------------------- #
-# Pass 16/17 — TypeHierarchyPass / AliasLinkerPass: projections.
-# --------------------------------------------------------------------------- #
-
-def inherits_edges(nodes: DataFrame, has_js: bool) -> DataFrame:
-    d = nodes.filter((F.col("kind") == M.TYPE_DECL) & F.col("inherits_from").isNotNull())
-    # JavaScript parents resolve through the XInheritanceFullNamePass twin
-    # (import/name lookup); other frontends emit resolved names at parse
-    if has_js:
-        d = d.filter(F.col("lang") != "javascript")
-    e = d.select(F.col("id").alias("src"), F.explode("inherits_from").alias("parent_fn"))
-    if has_js:
-        e = e.unionByName(js_inherits_parents(nodes).withColumnRenamed("id", "src"))
-    return e.select(*_edge(F.col("src"), type_id(F.col("parent_fn")), M.INHERITS_FROM))
-
-
-def alias_edges(nodes: DataFrame) -> DataFrame:
-    d = nodes.filter((F.col("kind") == M.TYPE_DECL) & (F.col("alias_type_full_name") != ""))
-    return d.select(*_edge(F.col("id"), type_id(F.col("alias_type_full_name")), M.ALIAS_OF))
+def field_access_ref_edges(rows: pd.DataFrame) -> pd.DataFrame:
+    """REF edges from each ``<operator>.(indirect)fieldAccess`` CALL to the
+    MEMBER named by its arg-2 FIELD_IDENTIFIER under a TYPE_DECL whose
+    fullname is its arg-1 type, decoration stripped. Frontends leave
+    astParent* empty on MEMBER rows, so a member's owner is its AST parent
+    (``parent_id``; 0 for none). A fullname several TYPE_DECLs hold links
+    through each of them, as a join does."""
+    kind, arg = rows["kind"], rows["arg_index"]
+    calls = rows.loc[(kind == M.CALL) & rows["name"].isin(
+        [M.OP_FIELD_ACCESS, M.OP_INDIRECT_FIELD_ACCESS]), ["id"]]
+    base = rows[(arg == 1) & (rows["parent_id"] != 0)]
+    base = pd.DataFrame({"id": base["parent_id"], "owner": base["type_full_name"]
+                         .str.replace(_DECORATION, "", regex=True)})
+    fld = rows[(kind == M.FIELD_IDENTIFIER) & (arg == 2)]
+    fld = pd.DataFrame({"id": fld["parent_id"], "fname": fld["canonical_name"]})
+    owners = rows.loc[kind == M.TYPE_DECL, ["id", "full_name"]].set_axis(
+        ["parent_id", "owner"], axis=1)
+    members = (rows.loc[kind == M.MEMBER, ["id", "parent_id", "name"]]
+               .merge(owners, on="parent_id")
+               .rename(columns={"id": "dst", "name": "fname"}))
+    j = (calls.merge(base.dropna(), on="id").merge(fld.dropna(), on="id")
+         .merge(members.dropna(subset=["owner", "fname"]), on=["owner", "fname"]))
+    return CG.edges(j, "id", "dst", M.REF)
 
 
 def run_base(nodes: DataFrame, has_js: bool) -> tuple[DataFrame, DataFrame]:
-    """The row-scale base passes over the parse output -> (extra_nodes,
-    extra_edges). Every pass is a projection or a join of rows the parser
-    resolved file-locally; the symbol-table passes run in the link task.
-    EVAL_TYPE / decl-SOURCE_FILE / PARAMETER_LINK edges are emitted by the
-    fused projection pass in ``operators.parse.derived_edges``."""
-    files = file_dimension(nodes)
-    extra_nodes = (
-        file_nodes(files)
-        .unionByName(namespace_block_nodes(files))
-        .unionByName(meta_data_nodes(files))
-        .unionByName(namespace_nodes(nodes, files))
-        .unionByName(parameter_out_nodes(nodes))
-    )
-    extra_edges = (
-        source_file_edges(files)
-        .unionByName(namespace_ref_edges(nodes, files))
-        .unionByName(global_block_ast_edges(nodes))
-        .unionByName(inherits_edges(nodes, has_js))
-        .unionByName(alias_edges(nodes))
-        .unionByName(field_access_ref_edges(nodes))
-        .unionByName(capture_edges(nodes))
-    )
-    return extra_nodes, extra_edges
+    """The Spark-side base passes over the parse output -> (nodes, edges):
+    the file-local node generator, CAPTURE, and the JavaScript
+    INHERITS_FROM edges (``has_js``: the input holds JavaScript rows). The
+    other passes run per parse row in ``operators.parse.derived_edges`` or
+    in the link task (see the module doc)."""
+    edges = capture_edges(nodes)
+    if has_js:
+        # JavaScript parents resolve through the XInheritanceFullNamePass
+        # twin (import/name lookup); other frontends emit resolved names
+        edges = edges.unionByName(_edges(
+            js_inherits_parents(nodes), F.col("id"),
+            type_id(F.col("parent_fn")), M.INHERITS_FROM))
+    return file_local_nodes(nodes), edges

@@ -12,20 +12,27 @@ The group key is a constant for now: fullnames are one namespace over the
 whole input.
 
 The task's input is one narrow, tagged projection of the parse output
-(``link_input``): METHOD, CALL, TYPE_DECL, METHOD_REF, BINDING and
-fullname-parented MEMBER rows, the referenced type fullnames and the
-type-recovered JS call sites. Ids the task cannot hash itself (no xxhash in
-Python) are hashed JVM-side into those rows: each CALL row carries the id a
-stub for its fullname gets, each type fullname its TYPE and TYPE_DECL-stub
-ids. Id columns hold no nulls, since Arrow hands a nullable integer column
-to pandas as float64, which cannot hold a 64-bit hash. The task emits
-tagged rows (``link_nodes``, ``link_edges`` and ``canonical_map`` decode
-them):
+(``link_input``): METHOD, CALL, TYPE_DECL, METHOD_REF, BINDING, MEMBER and
+NAMESPACE_BLOCK rows, each file's root row, the arguments FieldAccessLinker
+reads (every arg-1 row and the arg-2 FIELD_IDENTIFIERs), the referenced
+type fullnames and the type-recovered JS call sites. Every parse row
+appears once, in parse-output order (``pos``). Ids the task cannot hash
+itself (no xxhash in Python) are hashed JVM-side, into those rows (each
+CALL row carries the id a stub for its fullname gets, each type fullname
+its TYPE and TYPE_DECL-stub ids) or where the output is decoded. Id columns
+hold no nulls (``parent_id`` 0 stands for none), since Arrow hands a
+nullable integer column to pandas as float64, which cannot hold a 64-bit
+hash. The task emits tagged rows; ``link_nodes`` and ``link_edges`` decode
+them through one generator each, ``canonical_map`` by a filter:
 
 * stubs — ``base.method_stub_nodes``, ``base.type_decl_dimension``;
 * TYPE nodes with their TYPE -REF-> TYPE_DECL edges;
+* META_DATA per (repo, lang) and NAMESPACE per block name
+  (``base.meta_data_partitions``, ``base.namespace_names``): distincts
+  over the whole input;
 * AST/DECLARES links to fullname-named parents
   (``base.ast_link_and_declares_edges``);
+* field-access REF edges (``base.field_access_ref_edges``);
 * bindings — ``bindings.binding_relation`` over
   ``callgraph.inheritance_closure``;
 * CALL and METHOD_REF REF edges — ``callgraph.run_callgraph``, with the
@@ -201,9 +208,13 @@ def link_task(pdf: pd.DataFrame) -> pd.DataFrame:
     links = canonicalize_call_edges(
         CG.run_callgraph(calls, pdf[kind == M.METHOD_REF], closure, rel, dim,
                          pdf[kind == TYPE_HINT_ROW]), canonical)
-    edges = pd.concat([B.ast_link_and_declares_edges(pdf, decl_dim), links])
+    edges = pd.concat([B.ast_link_and_declares_edges(pdf, decl_dim),
+                       B.field_access_ref_edges(pdf), links])
     types = fns.merge(decl_dim, left_on="full_name", right_on="fn")
+    roots = pdf[pdf["node_idx"] == 0]
     return pd.concat([
+        _part(M.META_DATA, B.meta_data_partitions(roots), fn="repo", name="lang"),
+        _part(M.NAMESPACE, B.namespace_names(pdf, roots), name="name"),
         _part(M.TYPE, types, src="id", dst="decl_id", fn="fn"),
         _part(M.TYPE_DECL, decl_dim[decl_dim["stub"]], src="decl_id", fn="fn"),
         _part(M.METHOD, stubs, src="m_id", fn="m_fn", name="m_name", sig="m_sig",
@@ -224,28 +235,31 @@ def link_input(ok: DataFrame, fns: DataFrame,
     """The link task's input rows (see the module doc). ``fns`` is
     ``base.used_type_fullnames``; ``rewrites`` (id, rec_mfn) the JS
     type-recovery rewrites, or None on JS-free input."""
-    k, mfn = F.col("kind"), F.col("method_full_name")
-    rows = ok.filter(k.isin(M.METHOD, M.CALL, M.TYPE_DECL, M.BINDING)
+    k, mfn, arg = F.col("kind"), F.col("method_full_name"), F.col("arg_index")
+    rows = ok.filter(k.isin(M.METHOD, M.CALL, M.TYPE_DECL, M.BINDING, M.MEMBER,
+                            M.NAMESPACE_BLOCK)
                      | ((k == M.METHOD_REF) & (mfn != ""))
-                     | ((k == M.MEMBER) & (F.col("ast_parent_full_name") != "")))
-    rows = rows.select("kind", "id", "name", "full_name", "signature",
-                       "method_full_name", "dispatch_type", "nargs",
-                       "is_external", "ast_parent_type", "ast_parent_full_name",
-                       "inherits_from", F.monotonically_increasing_id().alias("pos"))
-    zero = F.lit(0).cast("long")
+                     | (F.col("node_idx") == 0)
+                     | ((arg == 1) & F.col("parent_id").isNotNull())
+                     | ((k == M.FIELD_IDENTIFIER) & (arg == 2)))
+    rows = rows.select("kind", "id", "parent_id", "node_idx", "repo", "lang",
+                       "name", "full_name", "signature", "method_full_name",
+                       "dispatch_type", "nargs", "arg_index", "type_full_name",
+                       "canonical_name", "is_external", "ast_parent_type",
+                       "ast_parent_full_name", "inherits_from",
+                       F.monotonically_increasing_id().alias("pos"))
     parts = [fns.select(F.lit(TYPE_NAME_ROW).alias("kind"),
                         B.type_id(F.col("fn")).alias("id"),
                         F.col("fn").alias("full_name"),
-                        F.xxhash64(F.lit("TYPE_DECL_STUB"), F.col("fn")).alias("stub_id"),
-                        zero.alias("pos"))]
+                        F.xxhash64(F.lit("TYPE_DECL_STUB"), F.col("fn")).alias("stub_id"))]
     if rewrites is not None:
         rows = TR.apply_rewrites(rows, rewrites)
-        parts.append(rewrites.select(F.lit(TYPE_HINT_ROW).alias("kind"), "id",
-                                     zero.alias("stub_id"), zero.alias("pos")))
+        parts.append(rewrites.select(F.lit(TYPE_HINT_ROW).alias("kind"), "id"))
     rows = rows.withColumn("stub_id", F.when(
-        k == M.CALL, F.xxhash64(F.lit("METHOD_STUB"), mfn)).otherwise(zero))
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                  parts, rows)
+        k == M.CALL, F.xxhash64(F.lit("METHOD_STUB"), mfn)))
+    return (reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                   parts, rows)
+            .na.fill(0, ["parent_id", "stub_id", "pos"]))
 
 
 def link_tail(ok: DataFrame, fns: DataFrame,
@@ -257,45 +271,70 @@ def link_tail(ok: DataFrame, fns: DataFrame,
             .groupBy("link_group").applyInPandas(link_task, OUT_SCHEMA))
 
 
-def _rows(link: DataFrame, row: str) -> DataFrame:
-    return link.filter(F.col("row") == row)
-
-
 def _binding_id():
     return F.xxhash64(F.lit("BINDING"), F.col("td"), F.col("name"), F.col("sig"))
 
 
 def link_nodes(link: DataFrame) -> DataFrame:
-    """TYPE nodes, TYPE_DECL and METHOD stubs, and BINDING nodes."""
-    bindings = _rows(link, M.BINDING)
-    return (B.type_nodes(_rows(link, M.TYPE).select("fn"))
-            .unionByName(B.type_decl_stub_rows(_rows(link, M.TYPE_DECL).select(
-                "fn", F.col("src").alias("decl_id"))))
-            .unionByName(B.method_stub_rows(_rows(link, M.METHOD).select(
-                F.col("fn").alias("m_fn"), F.col("src").alias("m_id"),
-                F.col("name").alias("m_name"), F.col("sig").alias("m_sig"),
-                F.col("n").alias("max_args"))))
-            .unionByName(B._mk_nodes(
-                bindings, id=_binding_id(), kind=F.lit(M.BINDING),
-                name=F.col("name"), signature=F.col("sig"),
-                code=F.concat_ws(":", F.col("name"), F.col("sig")),
-                method_full_name=F.col("fn"),
-                ast_parent_type=F.lit(M.TYPE_DECL), ast_parent_full_name=F.col("td"))))
+    """TYPE nodes, TYPE_DECL stubs, METHOD stubs with their parameters and
+    return, BINDING, META_DATA and NAMESPACE nodes, through one generator
+    over the task's output."""
+    row, src, fn, name, sig = (F.col(c) for c in ("row", "src", "fn", "name", "sig"))
+    short = F.element_at(F.split(fn, r"\."), -1)
+
+    def stub_part(i):
+        """Part ``i`` of a METHOD stub: 0 is its METHOD_RETURN, 1..n its
+        parameters p1..pn."""
+        p = F.concat(F.lit("p"), i)
+        return F.when(i == 0, B.node(
+            id=F.xxhash64(F.lit("METHOD_STUB_R"), fn), kind=M.METHOD_RETURN,
+            code="RET", evaluation_strategy=M.BY_VALUE, is_external=True,
+            parent_id=src)).otherwise(B.node(
+                id=F.xxhash64(F.lit("METHOD_STUB_P"), fn, i),
+                kind=M.METHOD_PARAMETER_IN, name=p, code=p, order=i,
+                param_index=i, evaluation_strategy=M.BY_VALUE,
+                is_external=True, parent_id=src))
+
+    return B.generate_nodes(link, (
+        F.when(row == M.TYPE, F.array(B.node(
+            id=B.type_id(fn), kind=M.TYPE, name=short, full_name=fn,
+            type_full_name=fn)))
+        .when(row == M.TYPE_DECL, F.array(B.node(
+            id=src, kind=M.TYPE_DECL, name=short, full_name=fn,
+            is_external=True)))
+        .when(row == M.METHOD, F.concat(F.array(B.node(
+            id=src, kind=M.METHOD, name=name, full_name=fn, signature=sig,
+            code=name, is_external=True)),
+            F.transform(F.sequence(F.lit(0), F.col("n")), stub_part)))
+        .when(row == M.BINDING, F.array(B.node(
+            id=_binding_id(), kind=M.BINDING, name=name, signature=sig,
+            code=F.concat_ws(":", name, sig), method_full_name=fn,
+            ast_parent_type=M.TYPE_DECL, ast_parent_full_name=F.col("td"))))
+        # a META_DATA row holds its partition's repo in fn, its lang in name
+        .when(row == M.META_DATA, F.array(B.node(
+            repo=fn, lang=name, id=F.xxhash64(F.lit("META_DATA"), fn, name),
+            kind=M.META_DATA, name=F.upper(name),
+            full_name=F.concat_ws(":", fn, name), code="joern_spark")))
+        .when(row == M.NAMESPACE, F.array(B.node(
+            id=B.namespace_id(name), kind=M.NAMESPACE, name=name,
+            full_name=name)))))
 
 
 def link_edges(link: DataFrame) -> DataFrame:
     """The task's edges, TYPE -REF-> TYPE_DECL, and per BINDING node
-    TYPE_DECL -BINDS-> BINDING plus BINDING -REF-> METHOD."""
-    bindings = _rows(link, M.BINDING)
-    return (_rows(link, EDGE_ROW).select(*B._edge(F.col("src"), F.col("dst"), F.col("label")))
-            .unionByName(_rows(link, M.TYPE).select(*B._edge(F.col("src"), F.col("dst"), M.REF)))
-            .unionByName(bindings.select(*B._edge(F.col("src"), _binding_id(), M.BINDS)))
-            .unionByName(bindings.filter(F.col("dst").isNotNull())
-                         .select(*B._edge(_binding_id(), F.col("dst"), M.REF))))
+    TYPE_DECL -BINDS-> BINDING plus BINDING -REF-> METHOD, through one
+    generator over the task's output."""
+    row, src, dst = F.col("row"), F.col("src"), F.col("dst")
+    return B.explode_edges(link, (
+        F.when(row == EDGE_ROW, F.array(B.edge(None, src, dst, F.col("label"))))
+        .when(row == M.TYPE, F.array(B.edge(None, src, dst, M.REF)))
+        .when(row == M.BINDING, F.array(
+            B.edge(None, src, _binding_id(), M.BINDS),
+            B.edge(dst.isNotNull(), _binding_id(), dst, M.REF)))))
 
 
 def canonical_map(link: DataFrame) -> DataFrame:
     """(m_id, canon_id, canon_fn): each aliased stub's canonical method."""
-    return _rows(link, CANONICAL_ROW).select(
+    return link.filter(F.col("row") == CANONICAL_ROW).select(
         F.col("src").alias("m_id"), F.col("dst").alias("canon_id"),
         F.col("fn").alias("canon_fn"))

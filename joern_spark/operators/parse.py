@@ -134,62 +134,76 @@ def with_ids(raw: DataFrame) -> DataFrame:
 
 def derived_edges(nodes: DataFrame) -> DataFrame:
     """Every edge the parse rows determine on their own, in ONE scan of the
-    parse parquet: the projection-derived edges (AST + typed shortcut +
-    ARGUMENT + REF + CONTAINS + EVAL_TYPE + SOURCE_FILE + PARAMETER_LINK —
-    no join, no shuffle: the parser resolved everything file-locally, and
-    EVAL_TYPE/SOURCE_FILE targets are pure id-hash functions of row columns)
-    plus the METHOD rows' fused intraprocedural edges (``intra_edges``).
+    parse parquet: the projection-derived edges plus the METHOD rows' fused
+    intraprocedural edges (CFG, DOMINATE, POST_DOMINATE, CDG, REACHING_DEF;
+    ``model.IE_LABELS``). No join, no shuffle: the parser resolved
+    everything file-locally, and the other targets (TYPE, FILE, the
+    per-file ``<global>`` NAMESPACE_BLOCK, NAMESPACE) are pure id-hash
+    functions of row columns.
 
     Reference equivalents: Ast.withChild/argEdges (Ast.scala:85-121),
     VariableScopeManager REF links (:334-358), ContainsEdgePass.scala:15-48
     (projection via parser-carried method_idx), TypeEvalPass.scala:9-42,
-    FileCreationPass.scala:41-55, MethodDecoratorPass.scala:50.
+    FileCreationPass.scala:41-55, MethodDecoratorPass.scala:50,
+    NamespaceCreator.scala:17-25, AstLinkerPass.scala:12-61 (the
+    ``<global>`` parents), TypeHierarchyPass and AliasLinkerPass.
 
-    The per-row candidate structs and the transformed ie_* zip land in one
-    concat'd array behind one generator, so the node parquet is decoded
-    exactly once and the whole derivation stays in one codegen stage.
+    The per-row candidate structs, the parents named in ``inherits_from``
+    and the transformed ie_* zip land in one concat'd array behind one
+    generator, so the node parquet is decoded exactly once and the whole
+    derivation stays in one codegen stage.
     """
-    from joern_spark.operators.base import EVAL_TYPE_KINDS, file_id, type_id
+    from joern_spark.operators.base import (EDGE_TYPE, EVAL_TYPE_KINDS, edge,
+                                            explode_edges, file_id,
+                                            namespace_id, nsb_id, type_id)
 
     n = nodes.filter(F.col("parse_error") == "")
-    null_s = F.lit(None).cast("string")
-
-    def edge(cond, src, dst, label, variable=None):
-        e = F.struct(src.cast("long").alias("src"), dst.cast("long").alias("dst"),
-                     (label if not isinstance(label, str) else F.lit(label)).alias("label"),
-                     (variable if variable is not None else null_s).alias("variable"))
-        return F.when(cond, e)
-
+    kind, pid, nid = F.col("kind"), F.col("parent_id"), F.col("id")
+    root = F.col("node_idx") == 0
     role_map = F.create_map(*[F.lit(x) for kv in M.ROLE_EDGE_LABELS.items() for x in kv])
     candidates = F.array(
         # BINDING children attach via BINDS (vtable entry), not AST
         # (BindingTableAdapterImpls.scala: typeDecl -BINDS-> binding)
-        edge(F.col("parent_id").isNotNull() & (F.col("kind") != M.BINDING),
-             F.col("parent_id"), F.col("id"), M.AST),
-        edge(F.col("parent_id").isNotNull() & (F.col("kind") == M.BINDING),
-             F.col("parent_id"), F.col("id"), M.BINDS),
-        edge((F.col("role") != "") & F.col("parent_id").isNotNull(),
-             F.col("parent_id"), F.col("id"), role_map[F.col("role")]),
-        edge((F.col("arg_index") >= 0) & F.col("parent_id").isNotNull(),
-             F.col("parent_id"), F.col("id"), M.ARGUMENT,
+        edge(pid.isNotNull() & (kind != M.BINDING), pid, nid, M.AST),
+        edge(pid.isNotNull() & (kind == M.BINDING), pid, nid, M.BINDS),
+        edge((F.col("role") != "") & pid.isNotNull(),
+             pid, nid, role_map[F.col("role")]),
+        edge((F.col("arg_index") >= 0) & pid.isNotNull(), pid, nid, M.ARGUMENT,
              F.col("arg_index").cast("string")),
-        edge(F.col("ref_id").isNotNull(), F.col("id"), F.col("ref_id"), M.REF),
+        edge(F.col("ref_id").isNotNull(), nid, F.col("ref_id"), M.REF),
         edge(F.col("method_id").isNotNull()
-             & (~F.col("kind").isin(M.METHOD, M.METHOD_PARAMETER_IN,
-                                    M.METHOD_PARAMETER_OUT, M.METHOD_RETURN,
-                                    M.LOCAL, M.MODIFIER, M.TYPE_DECL, M.MEMBER)),
-             F.col("method_id"), F.col("id"), M.CONTAINS),
-        edge(F.col("kind").isin(EVAL_TYPE_KINDS)
+             & (~kind.isin(M.METHOD, M.METHOD_PARAMETER_IN,
+                           M.METHOD_PARAMETER_OUT, M.METHOD_RETURN,
+                           M.LOCAL, M.MODIFIER, M.TYPE_DECL, M.MEMBER)),
+             F.col("method_id"), nid, M.CONTAINS),
+        edge(kind.isin(EVAL_TYPE_KINDS)
              & (F.col("type_full_name") != "") & F.col("type_full_name").isNotNull(),
-             F.col("id"), type_id(F.col("type_full_name")), M.EVAL_TYPE),
-        edge(F.col("kind").isin(M.METHOD, M.TYPE_DECL) & (F.col("path") != ""),
-             F.col("id"), file_id(), M.SOURCE_FILE),
-        edge(F.col("kind") == M.METHOD_PARAMETER_IN,
-             F.col("id"), F.xxhash64(F.lit("POUT"), F.col("id")), M.PARAMETER_LINK),
+             nid, type_id(F.col("type_full_name")), M.EVAL_TYPE),
+        edge(kind.isin(M.METHOD, M.TYPE_DECL) & (F.col("path") != ""),
+             nid, file_id(), M.SOURCE_FILE),
+        edge(kind == M.METHOD_PARAMETER_IN,
+             nid, F.xxhash64(F.lit("POUT"), nid), M.PARAMETER_LINK),
+        # the file's <global> NAMESPACE_BLOCK: its FILE and its NAMESPACE
+        edge(root, nsb_id(), file_id(), M.SOURCE_FILE),
+        edge(root, nsb_id(), namespace_id(F.lit(M.GLOBAL)), M.REF),
+        edge(kind == M.NAMESPACE_BLOCK, nid, namespace_id(F.col("name")), M.REF),
+        edge(kind.isin(M.METHOD, M.TYPE_DECL, M.MEMBER)
+             & (F.col("ast_parent_full_name") != "")
+             & (F.col("ast_parent_type") == M.NAMESPACE_BLOCK),
+             nsb_id(), nid, M.AST),
+        edge((kind == M.TYPE_DECL) & (F.col("alias_type_full_name") != ""),
+             nid, type_id(F.col("alias_type_full_name")), M.ALIAS_OF),
     )
+    # the parsers resolve supertype names, except JavaScript's:
+    # base.run_base links those through the import/name lookup
+    inherits = F.transform(
+        F.coalesce(F.when((kind == M.TYPE_DECL) & (F.col("lang") != "javascript"),
+                          F.col("inherits_from")),
+                   F.array().cast("array<string>")),
+        lambda p: edge(None, nid, type_id(p), M.INHERITS_FROM))
     label_lut = F.array(*[F.lit(x) for x in M.IE_LABELS])
     ie = F.when(
-        (F.col("kind") == M.METHOD) & F.col("ie_src").isNotNull(),
+        (kind == M.METHOD) & F.col("ie_src").isNotNull(),
         F.transform(
             F.arrays_zip("ie_src", "ie_dst", "ie_label", "ie_var"),
             lambda x: F.struct(
@@ -197,25 +211,5 @@ def derived_edges(nodes: DataFrame) -> DataFrame:
                 F.xxhash64("repo", "path", "commit", x["ie_dst"]).alias("dst"),
                 F.element_at(label_lut, x["ie_label"] + 1).alias("label"),
                 x["ie_var"].alias("variable")))
-    ).otherwise(F.array().cast("array<struct<src:bigint,dst:bigint,label:string,variable:string>>"))
-    return (n.select(F.explode(F.concat(candidates, ie)).alias("e"))
-            .filter(F.col("e").isNotNull())
-            .select("e.src", "e.dst", "e.label", "e.variable"))
-
-
-def intra_edges(nodes: DataFrame) -> DataFrame:
-    """Explode the fused per-method parallel edge arrays into global-id edge
-    rows; the label dictionary (M.IE_LABELS) is decoded JVM-side."""
-    label_lut = F.array(*[F.lit(x) for x in M.IE_LABELS])
-    m = nodes.filter((F.col("kind") == M.METHOD) & F.col("ie_src").isNotNull())
-    # inline() expands the zipped struct array in one generator step —
-    # measurably cheaper than explode-then-field-extract on the 100M+-row
-    # edge materialization (no intermediate struct column in codegen)
-    e = m.select("repo", "path", "commit",
-                 F.inline(F.arrays_zip("ie_src", "ie_dst", "ie_label", "ie_var")))
-    return e.select(
-        F.xxhash64("repo", "path", "commit", F.col("ie_src")).alias("src"),
-        F.xxhash64("repo", "path", "commit", F.col("ie_dst")).alias("dst"),
-        F.element_at(label_lut, F.col("ie_label") + 1).alias("label"),
-        F.col("ie_var").alias("variable"),
-    )
+    ).otherwise(F.array().cast(f"array<{EDGE_TYPE}>"))
+    return explode_edges(n, F.concat(candidates, inherits, ie))

@@ -1113,7 +1113,7 @@ def expected_api_vectors() -> list[tuple[str, str, int, int, int]]:
             if mi is not None and mi >= 0 and mi in bags:
                 bags[mi][r["code"]] += 1
                 # MethodDecoratorPass clones every PARAM_IN as a PARAM_OUT
-                # AST child (operators/base.py parameter_out_nodes), and
+                # AST child (operators/base.py file_local_nodes), and
                 # method.ast includes it — count the code twice
                 if r["kind"] == M.METHOD_PARAMETER_IN:
                     bags[mi][r["code"]] += 1

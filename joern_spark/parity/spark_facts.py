@@ -83,7 +83,7 @@ def _closure(edges: DataFrame, rounds: int = 6) -> DataFrame:
 
 def spark_facts(spark: SparkSession) -> DataFrame:
     """-> (lang, kase, relation, subj, obj) over the whole corpus."""
-    from joern_spark.operators.parse import intra_edges, parse_source, with_ids
+    from joern_spark.operators.parse import derived_edges, parse_source, with_ids
 
     src = corpus_source(spark).repartition(8, "path")
     nodes = with_ids(parse_source(src)).filter(F.col("parse_error") == "")
@@ -114,7 +114,8 @@ def spark_facts(spark: SparkSession) -> DataFrame:
                             F.col("dc").alias("obj"),
                             F.col("kase").alias("dst_kase"))
 
-    ie = intra_edges(nodes)
+    # every consumer below filters to one intraprocedural label
+    ie = derived_edges(nodes)
     out = []
 
     def edge_facts(label: str, rel: str, edges: DataFrame) -> DataFrame:

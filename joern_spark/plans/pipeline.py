@@ -2,10 +2,24 @@
 after it.
 
 Stage order mirrors the reference overlay order (X2Cpg.scala:374-388 →
-DefaultOverlays.scala:18-25): parse (AST + fused intraprocedural passes) →
-JS type recovery and the link tail (stubs, bindings, call graph,
-canonicalization), each one grouped pandas task → the row-scale base passes
-and edges. Every stage is a pure DataFrame→DataFrame function.
+DefaultOverlays.scala:18-25), but not its shape: the reference emits each
+base pass as its own diff graph, while here each pass runs where its data
+already sits (``operators.base`` says which pass runs where):
+
+1. parse (AST + fused intraprocedural passes), written once;
+2. JS type recovery and the link tail, each one grouped pandas task. The
+   link tail holds stubs, bindings, call graph, canonicalization and the
+   base passes that need a distinct over the whole input or a cross-file
+   lookup (META_DATA, NAMESPACE, FieldAccessLinker); one eager checkpoint
+   runs it;
+3. the sink's relations, each read from those two sources through one
+   generator per source. Nodes are the parse rows, ``base.file_local_nodes``
+   over the parse stage and ``linking.link_nodes`` over the checkpoint:
+   writing them is one Spark job with no shuffle. Edges are
+   ``parse.derived_edges``, ``linking.link_edges`` and the two joins left
+   in ``base.run_base``: CAPTURE and the JavaScript INHERITS_FROM edges.
+
+Every stage is a pure DataFrame→DataFrame function.
 
 A build materializes twice: the parse output, written here, and the graph
 tables, written by ``sources.write_graph_tables`` from the lazy relations
@@ -33,13 +47,21 @@ from joern_spark.operators.parse import derived_edges, parse_source, with_ids
 
 
 def _adhoc_scratch_dir() -> str:
-    """A fresh directory for an ad-hoc build's parse stage, removed at
-    interpreter exit."""
+    """A fresh directory for an ad-hoc build's parse stage, named after the
+    owning process and removed at interpreter exit. A process killed before
+    its exit hooks run leaves its directory behind, so each call first
+    removes the directories of owners that no longer exist."""
     import atexit
+    import re
     import shutil
     import tempfile
 
-    d = tempfile.mkdtemp(prefix="joern_spark_parse_")
+    root = tempfile.gettempdir()
+    for name in os.listdir(root):
+        m = re.fullmatch(r"joern_spark_parse_(\d+)_.+", name)
+        if m and not os.path.exists(f"/proc/{m.group(1)}"):
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    d = tempfile.mkdtemp(prefix=f"joern_spark_parse_{os.getpid()}_")
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
@@ -91,27 +113,29 @@ def source_fingerprint(source: DataFrame) -> str:
 def build_cpg(spark: SparkSession, source: DataFrame,
               out_dir: str | None = None) -> dict[str, DataFrame]:
     """source(repo,path,commit,lang,content) → {nodes, edges, errors,
-    canonical, timings}.
+    parsed, canonical, timings}.
 
     ``out_dir`` keeps the parse stage for resume; without it the stage goes
-    to a scratch directory. ``nodes``, ``edges`` and ``canonical`` are lazy
-    plans over that stage and the link task's checkpoint: write them once
-    with ``sources.write_graph_tables`` and query what ``read_graph_tables``
+    to a scratch directory. ``parsed`` is that stage (ok and failed rows);
+    ``nodes``, ``edges`` and ``canonical`` are lazy plans over it and the
+    link task's checkpoint: write them once with
+    ``sources.write_graph_tables`` and query what ``read_graph_tables``
     returns."""
-    # The edges relation is a wide union of operator branches; its rendered
-    # explain string runs to hundreds of MB, and AQE re-renders it on every
-    # plan update (AdaptiveSparkPlanExec.onUpdatePlan) — on a default-heap
-    # driver that alone OOMs. Cap the plan string on whatever session the
-    # caller hands us (runtime-settable SQL conf; explain output truncates
-    # with a notice instead of materializing the full tree).
+    # AQE re-renders a plan's explain string on every plan update
+    # (AdaptiveSparkPlanExec.onUpdatePlan). The edges relation's full string
+    # (all four plans of its queryExecution) measures 39 K characters on a
+    # 195-file polyglot build; it grows with the plan, not the rows. A
+    # session built elsewhere (tools/run_pipeline.py builds its own) may
+    # carry no cap, so set one on whatever session the caller hands us
+    # (runtime-settable SQL conf; explain output truncates with a notice).
     spark.conf.set("spark.sql.maxPlanStringLength", "100000")
 
     # ---- stage 1: parse (+ fused per-method passes) -------------------------
     # The parse output is always written to parquet: the link task's input,
-    # the row-scale base passes, the edge derivation and the node union each
-    # scan it, and a cached in-memory copy of the wide rows (ie_* arrays)
-    # both risks eviction → silent Python re-parse and defeats column
-    # pruning. It is written unpartitioned, so the link task's first-row
+    # the node generator, the edge derivation, the node union and the sink's
+    # metrics each scan it, and a cached in-memory copy of the wide rows
+    # (ie_* arrays) both risks eviction → silent Python re-parse and defeats
+    # column pruning. It is written unpartitioned, so the link task's first-row
     # picks (``pos``) see one row order, kept or scratch. A
     # partitionBy("lang") write would sort the wide parse rows per task
     # (~40% more parse+write time on the bench corpus); lang-filtered
@@ -139,12 +163,13 @@ def build_cpg(spark: SparkSession, source: DataFrame,
     has_js = manifest["has_js"]
     rewrites = TR.js_mfn_rewrites(ok) if has_js else None
     # One eager checkpoint runs the task; its (dimension-sized) output is a
-    # leaf that every consumer below reads: stubs, TYPE and BINDING nodes,
-    # link edges with canonical CALL targets, and the canonical map.
+    # leaf that every consumer below reads: stubs, TYPE, BINDING, META_DATA
+    # and NAMESPACE nodes, link edges with canonical CALL targets, and the
+    # canonical map.
     link = L.link_tail(ok, B.used_type_fullnames(ok, has_js),
                        rewrites).localCheckpoint(eager=True)
 
-    # ---- stage 3: row-scale base passes and edges ----------------------------
+    # ---- stage 3: the sink's relations, one generator per source ------------
     extra_nodes, base_edges = B.run_base(ok, has_js)
     all_nodes = ok.unionByName(extra_nodes).unionByName(L.link_nodes(link))
     edges = (derived_edges(ok).unionByName(base_edges)
@@ -152,7 +177,8 @@ def build_cpg(spark: SparkSession, source: DataFrame,
 
     timings["link_materialize_sec"] = round(time.time() - t_link, 3)
     return {"nodes": all_nodes, "edges": edges, "errors": errors,
-            "canonical": L.canonical_map(link), "timings": timings}
+            "parsed": nodes, "canonical": L.canonical_map(link),
+            "timings": timings}
 
 
 # --------------------------------------------------------------------------- #

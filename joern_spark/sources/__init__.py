@@ -53,7 +53,7 @@ def read_source_table(spark: SparkSession, location: str,
 def write_graph_tables(out: dict[str, DataFrame], location: str) -> None:
     """Materialize a build's {nodes, edges, canonical, errors} + metrics as
     tables — the one write of its final relations (``build_cpg`` returns
-    them as lazy plans).
+    them as lazy plans, and its parse stage as ``parsed``).
 
     Nodes partition on lang (the unit of downstream per-language analysis)
     and sort within files by (repo, full_name) — the parquet stand-in for
@@ -66,18 +66,16 @@ def write_graph_tables(out: dict[str, DataFrame], location: str) -> None:
         (w.partitionBy(*partition_by) if partition_by else w).save(
             os.path.join(location, table))
 
-    nodes, errors = out["nodes"], out["errors"]
-    save(nodes.sortWithinPartitions("repo", "full_name"), "nodes", "lang")
+    save(out["nodes"].sortWithinPartitions("repo", "full_name"), "nodes", "lang")
     save(out["edges"], "edges", "label")
     save(out["canonical"], "canonical")
     # Failed parses are the expected case at scale (parse.py docstring):
-    # build_cpg splits them out of `nodes`, so they must (a) be persisted as
-    # their own table and (b) feed the lineage metrics — otherwise the
-    # documented sha_rollup/n_files equality with source_sha_rollup silently
-    # breaks as soon as one file fails to parse, and failed files vanish.
-    save(errors, "errors")
-    save(partition_metrics(nodes.filter(F.col("node_idx") >= 0).unionByName(
-        errors.filter(F.col("node_idx") >= 0))), "metrics")
+    # build_cpg splits them out of `nodes` into their own table, and the
+    # lineage metrics read the parse stage, ok and failed rows alike, so the
+    # documented sha_rollup/n_files equality with source_sha_rollup holds
+    # when a file fails to parse. Only parse rows (node_idx >= 0) count.
+    save(out["errors"], "errors")
+    save(partition_metrics(out["parsed"].filter(F.col("node_idx") >= 0)), "metrics")
 
 
 def read_graph_tables(spark: SparkSession, location: str) -> dict[str, DataFrame]:

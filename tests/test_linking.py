@@ -193,19 +193,36 @@ def test_adhoc_and_checkpointed_builds_agree(spark, tmp_path):
 
 _LINK_COLS = ["kind", "id", "name", "full_name", "signature", "method_full_name",
               "dispatch_type", "nargs", "is_external", "ast_parent_type",
-              "ast_parent_full_name", "inherits_from", "stub_id"]
+              "ast_parent_full_name", "inherits_from", "stub_id", "parent_id",
+              "node_idx", "repo", "lang", "arg_index", "type_full_name",
+              "canonical_name"]
+
+
+def row(kind, id_, name="", full_name="", signature="", mfn="", dispatch="",
+        nargs=-1, external=False, ptype="", parent="", inherits=None, stub_id=0,
+        parent_id=0, node_idx=-1, repo="", lang="", arg=-1, tfn="", cname=""):
+    """One ``linking.link_input`` row; ``parent_id`` 0 stands for none."""
+    return (kind, id_, name, full_name, signature, mfn, dispatch, nargs,
+            external, ptype, parent, inherits, stub_id, parent_id, node_idx,
+            repo, lang, arg, tfn, cname)
+
+
+def _link_task(rows):
+    """The link task's output for ``rows``, in parse-output order (``pos``)."""
+    from joern_spark.operators.linking import link_task
+    return link_task(pd.DataFrame(rows, columns=_LINK_COLS).assign(pos=range(len(rows))))
+
+
+def _out_rows(out, tag, *cols):
+    part = out[out["row"] == tag][list(cols)].astype(object)
+    return sorted(tuple(None if pd.isna(v) else v for v in r)
+                  for r in part.itertuples(index=False, name=None))
 
 
 def _link_rows():
     """One link group's input rows, as ``linking.link_input`` tags them
     (without ``pos``, the parse-output position)."""
     from joern_spark.operators.linking import TYPE_NAME_ROW
-
-    def row(kind, id_, name="", full_name="", signature="", mfn="",
-            dispatch="", nargs=-1, external=False, ptype="", parent="",
-            inherits=None, stub_id=0):
-        return (kind, id_, name, full_name, signature, mfn, dispatch, nargs,
-                external, ptype, parent, inherits, stub_id)
 
     def method(id_, fn, name, sig, parent=""):
         return row(M.METHOD, id_, name, fn, sig,
@@ -245,15 +262,12 @@ def _link_rows():
 
 
 def test_link_task_rules():
-    from joern_spark.operators.linking import CANONICAL_ROW, EDGE_ROW, link_task
+    from joern_spark.operators.linking import CANONICAL_ROW, EDGE_ROW
 
-    rows = _link_rows()
-    out = link_task(pd.DataFrame(rows, columns=_LINK_COLS).assign(pos=range(len(rows))))
+    out = _link_task(_link_rows())
 
     def rows(tag, *cols):
-        part = out[out["row"] == tag][list(cols)].astype(object)
-        return sorted(tuple(None if pd.isna(v) else v for v in r)
-                      for r in part.itertuples(index=False, name=None))
+        return _out_rows(out, tag, *cols)
 
     assert rows(EDGE_ROW, "src", "dst", "label") == sorted([
         (10, 6, M.CALL_EDGE),                          # static
@@ -299,3 +313,73 @@ def test_build_leaves_no_cached_plans(spark, tmp_path):
     spark.catalog.clearCache()
     write_graph_tables(build_cpg(spark, src), str(tmp_path / "cpg"))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_link_task_field_access():
+    """FieldAccessLinkerPass in the link task: REF from a field-access CALL
+    to the MEMBER its arg-2 field names, under the TYPE_DECLs named by its
+    arg-1 type with pointer and reference decoration stripped. Row shapes
+    follow the C frontend's: the member's owner is its AST parent."""
+    from joern_spark.operators.linking import EDGE_ROW
+
+    def access(call, op, base_type, field):
+        return [row(M.CALL, call, op),
+                row(M.IDENTIFIER, call + 1, parent_id=call, arg=1, tfn=base_type),
+                row(M.FIELD_IDENTIFIER, call + 2, field, parent_id=call, arg=2,
+                    cname=field)]
+
+    rows = [
+        # a.c declares struct S; b.c only forward-declares it
+        row(M.TYPE_DECL, 200, "S", "S", node_idx=0),
+        row(M.MEMBER, 201, "x", parent_id=200),
+        row(M.MEMBER, 202, "y", parent_id=200),
+        row(M.TYPE_DECL, 210, "S", "S", node_idx=0),
+        # c.c and d.c each declare their own struct D with a member v
+        row(M.TYPE_DECL, 220, "D", "D", node_idx=0),
+        row(M.MEMBER, 221, "v", parent_id=220),
+        row(M.TYPE_DECL, 230, "D", "D", node_idx=0),
+        row(M.MEMBER, 231, "v", parent_id=230),
+        # b.c: `struct S *p; p->x`, through S declared in a.c
+        *access(300, M.OP_INDIRECT_FIELD_ACCESS, "S*", "x"),
+        # `S &r; r.y`
+        *access(310, M.OP_FIELD_ACCESS, "S &", "y"),
+        # `(*p).x`: the base is an untyped CALL, which has no TYPE_DECL
+        row(M.CALL, 320, M.OP_FIELD_ACCESS),
+        row(M.CALL, 321, M.OP_INDIRECTION, parent_id=320, arg=1, tfn=M.ANY),
+        row(M.FIELD_IDENTIFIER, 322, "x", parent_id=320, arg=2, cname="x"),
+        # `struct T *q; q->x`: no TYPE_DECL named T
+        *access(330, M.OP_INDIRECT_FIELD_ACCESS, "T*", "x"),
+        # `struct D *d; d->v`: one REF per TYPE_DECL D, no first-row pick
+        *access(340, M.OP_INDIRECT_FIELD_ACCESS, "D*", "v"),
+        # a field S has no member named
+        *access(350, M.OP_INDIRECT_FIELD_ACCESS, "S*", "z"),
+        # the same arguments under a call that is no field access
+        *access(360, "<operator>.addition", "S*", "x"),
+    ]
+    assert _out_rows(_link_task(rows), EDGE_ROW, "src", "dst", "label") == [
+        (300, 201, M.REF), (310, 202, M.REF), (340, 221, M.REF), (340, 231, M.REF)]
+
+
+def test_link_task_meta_data_and_namespaces():
+    """One META_DATA row per (repo, lang) over the files' root rows, and one
+    NAMESPACE row per distinct NAMESPACE_BLOCK name: the parsed blocks'
+    names plus ``<global>``, the name of every file's own block."""
+    def root(kind, id_, repo, lang, name=""):
+        return row(kind, id_, name, node_idx=0, repo=repo, lang=lang)
+
+    out = _link_task([
+        root(M.TYPE_DECL, 1, "r1", "c"),
+        root(M.UNKNOWN, 2, "r1", "c"),
+        root(M.NAMESPACE_BLOCK, 3, "r1", "java", "p.q"),
+        row(M.NAMESPACE_BLOCK, 4, "p.q"),
+        row(M.NAMESPACE_BLOCK, 5, M.GLOBAL),
+        root(M.TYPE_DECL, 6, "r2", "c"),
+        # not a file's root
+        row(M.TYPE_DECL, 7, repo="r3", lang="cpp"),
+    ])
+    assert _out_rows(out, M.META_DATA, "fn", "name") == [
+        ("r1", "c"), ("r1", "java"), ("r2", "c")]
+    assert _out_rows(out, M.NAMESPACE, "name") == [(M.GLOBAL,), ("p.q",)]
+    # no file, no <global>
+    assert _out_rows(_link_task([row(M.NAMESPACE_BLOCK, 4, "p.q")]),
+                     M.NAMESPACE, "name") == [("p.q",)]

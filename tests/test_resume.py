@@ -110,3 +110,30 @@ def test_adhoc_build_writes_only_the_parse_stage(spark, tmp_path, monkeypatch):
     assert back["nodes"].count() == out["nodes"].count() > 0
     assert back["edges"].count() == out["edges"].count() > 0
     assert back["canonical"].count() == out["canonical"].count()
+
+
+def test_adhoc_scratch_sweeps_dirs_of_dead_owners(tmp_path, monkeypatch):
+    """An ad-hoc parse stage is named after its owner's pid. A build killed
+    before its exit hooks run leaves it behind; the next ad-hoc build
+    removes it, and keeps the directories of owners still running."""
+    import subprocess
+    import sys
+    import tempfile
+
+    from joern_spark.plans import pipeline
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    child = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
+                           capture_output=True, text=True, check=True)
+    dead = tmp_path / f"joern_spark_parse_{child.stdout.strip()}_a1"
+    live = tmp_path / f"joern_spark_parse_{os.getppid()}_b2"
+    other = tmp_path / "joern_spark_tables_c3"
+    for d in (dead, live, other):
+        (d / "nodes").mkdir(parents=True)
+
+    made = pipeline._adhoc_scratch_dir()
+
+    assert os.path.dirname(made) == str(tmp_path)
+    assert os.path.basename(made).startswith(f"joern_spark_parse_{os.getpid()}_")
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        [live.name, other.name, os.path.basename(made)])

@@ -7,6 +7,8 @@ import os
 
 import pytest
 
+from joern_spark import model as M
+
 
 @pytest.fixture(scope="module")
 def spark():
@@ -70,3 +72,78 @@ def test_sink_metrics_cover_parse_failures(spark, tmp_path_factory):
             for r in source_sha_rollup(src).collect()}
     assert got == want
     assert ("fixtures/broken", "fortran") in got
+
+
+def _source(spark, rows):
+    return spark.createDataFrame(
+        [("fixtures/sink", path, "d" * 40, lang, content)
+         for path, lang, content in rows],
+        "repo string, path string, commit string, lang string, content string")
+
+
+def _write_jobs(spark, out, location, monkeypatch) -> dict[str, int]:
+    """``write_graph_tables(out, location)``, with the Spark jobs each table's
+    write issues counted under its own job group."""
+    from pyspark.sql import DataFrameWriter
+
+    from joern_spark.sources import write_graph_tables
+
+    sc, save = spark.sparkContext, DataFrameWriter.save
+    groups = {}
+
+    def save_in_group(self, path, *args, **kwargs):
+        groups[os.path.basename(path)] = group = f"sink_write_{len(groups)}_{id(out)}"
+        sc.setJobGroup(group, f"write {path}")
+        try:
+            return save(self, path, *args, **kwargs)
+        finally:
+            sc.setJobGroup(None, None)
+
+    monkeypatch.setattr(DataFrameWriter, "save", save_in_group)
+    write_graph_tables(out, location)
+    monkeypatch.undo()
+    st = sc.statusTracker()
+    return {t: len(st.getJobIdsForGroup(g)) for t, g in groups.items()}
+
+
+def test_nodes_write_is_one_job(spark, tmp_path, monkeypatch):
+    """The sink's nodes are the parse rows and two generators, one over the
+    parse stage and one over the link task's checkpoint. No pass needs a
+    distinct or a join there, so writing them is one Spark job for any mix
+    of languages."""
+    from joern_spark.plans.pipeline import build_cpg
+
+    src = _source(spark, [
+        ("src/a.c", "c", "int helper(int x) { return x + 1; }\n"
+                         "int main() { return helper(2); }\n"),
+        ("src/B.java", "java", "class A { void f() {} }\n"
+                               "class B extends A { void g() { f(); } }\n"),
+        ("src/m.js", "javascript", "class P {}\nclass Q extends P {}\n"
+                                   "const m = require('m');\nm.run(1);\n")])
+    jobs = _write_jobs(spark, build_cpg(spark, src), str(tmp_path / "cpg"),
+                       monkeypatch)
+    assert jobs["nodes"] == 1, jobs
+
+
+def test_file_local_and_partition_nodes(spark):
+    """Per-kind counts of the derived nodes for a C file and a Java file
+    in package p.q: a FILE and a ``<global>`` NAMESPACE_BLOCK per file (the
+    Java file also parses its package block), a META_DATA node per (repo,
+    lang), a NAMESPACE per block name, and a METHOD_PARAMETER_OUT per
+    parameter (the Java methods' ``this`` included)."""
+    from collections import Counter
+
+    from tests.graph import built_graph
+
+    g = built_graph(spark, _source(spark, [
+        ("src/a.c", "c", "int add(int a, int b) { return a + b; }\n"),
+        ("p/q/A.java", "java", "package p.q;\nclass A { int f(int x) { return x; } }\n")]))
+    kinds = (M.FILE, M.NAMESPACE_BLOCK, M.META_DATA, M.NAMESPACE,
+             M.METHOD_PARAMETER_OUT)
+    got = Counter(r["kind"] for r in g["nodes"].filter(
+        g["nodes"]["kind"].isin(*kinds)).select("kind").collect())
+    assert got == {M.FILE: 2, M.NAMESPACE_BLOCK: 3, M.META_DATA: 2,
+                   M.NAMESPACE: 2, M.METHOD_PARAMETER_OUT: 5}
+    names = {r["name"] for r in g["nodes"].filter(
+        g["nodes"]["kind"] == M.NAMESPACE).select("name").collect()}
+    assert names == {M.GLOBAL, "p.q"}
