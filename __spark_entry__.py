@@ -21,23 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 _CPG_CACHE: dict[int, dict] = {}
 
 
-def _graph(spark: SparkSession, src: DataFrame) -> dict:
-    """An ad-hoc build of ``src``, written as graph tables into a temporary
-    directory that is cached next to the frames read back from it."""
-    import tempfile
-
-    from joern_spark.plans.pipeline import build_cpg
-    from joern_spark.sources import read_graph_tables, write_graph_tables
-    tables = tempfile.TemporaryDirectory(prefix="joern_spark_tables_")
-    write_graph_tables(build_cpg(spark, src), tables.name)
-    return {**read_graph_tables(spark, tables.name), "tables": tables}
-
-
 def _cpg(spark: SparkSession) -> dict:
     key = id(spark)
     if key not in _CPG_CACHE:
         from joern_spark.corpus import fixture_source
-        _CPG_CACHE[key] = _graph(spark, fixture_source(spark))
+        from joern_spark.sources import built_graph
+        _CPG_CACHE[key] = built_graph(spark, fixture_source(spark))
     return _CPG_CACHE[key]
 
 
@@ -51,7 +40,8 @@ def _scan_cpg(spark: SparkSession) -> dict:
     key = id(spark)
     if key not in _SCAN_CPG_CACHE:
         from joern_spark.scanners_c import suite_source_rows
-        _SCAN_CPG_CACHE[key] = _graph(spark, spark.createDataFrame(
+        from joern_spark.sources import built_graph
+        _SCAN_CPG_CACHE[key] = built_graph(spark, spark.createDataFrame(
             suite_source_rows(),
             "repo string, path string, commit string, lang string, "
             "content string"))
@@ -468,9 +458,10 @@ def q_cpg_api_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cpg_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE north-star metric: P/R per (lang, relation) vs golden expectations
     hand-transcribed from the reference's own test suites (citations in
-    joern_spark/parity/corpus_*.py). Runs the full distributed path (Arrow
-    mapInPandas parse + fused intra-method kernels + closure joins); the
-    DuckDB oracle pins the same scores computed by the sequential extractor.
+    joern_spark/parity/corpus_*.py). Builds the fixture corpus the way
+    production does (build, write and read back the graph tables) and scores
+    each case's rows in one grouped task with the sequential fact code; the
+    DuckDB oracle pins the scores of the same code over in-process parsing.
     The north rule target is precision_bp and recall_bp >= 9500 per row."""
     from joern_spark.parity.spark_facts import parity_scores
     return parity_scores(spark).select(
@@ -574,10 +565,11 @@ def _scan_c_oracle_sql() -> str:
 
 
 def _parity_oracle_sql() -> str:
-    """Sequential (pure-Python) parity scores rendered as VALUES — the
-    Spark-vs-DuckDB hash equality proves the distributed extractor computes
-    the same facts as the sequential one; the scores themselves measure
-    parity vs the transcribed reference expectations."""
+    """Sequential (in-process parse) parity scores rendered as VALUES — the
+    Spark-vs-DuckDB hash equality proves the distributed build yields the
+    same facts as parsing in process, both read by the one per-case fact
+    extractor; the scores themselves measure parity vs the transcribed
+    reference expectations."""
     from joern_spark import oracle as O
     from joern_spark.parity import score_corpus
     _rows, summary = score_corpus()

@@ -59,34 +59,6 @@ ANNOTATION_PARAMETER_ASSIGN = "ANNOTATION_PARAMETER_ASSIGN"
 ANNOTATION_PARAMETER = "ANNOTATION_PARAMETER"
 ANNOTATION_LITERAL = "ANNOTATION_LITERAL"
 
-# Kinds that participate in the CFG (reference CfgCreator.cfgFor dispatch,
-# x2cpg/.../cfgcreation/CfgCreator.scala:99-128).
-NON_CFG_KINDS = frozenset(
-    {
-        METHOD,
-        METHOD_PARAMETER_IN,
-        METHOD_PARAMETER_OUT,
-        MODIFIER,
-        LOCAL,
-        TYPE_DECL,
-        TYPE,
-        MEMBER,
-        JUMP_LABEL,
-        METHOD_RETURN,
-        NAMESPACE_BLOCK,
-        NAMESPACE,
-        FILE,
-        META_DATA,
-        COMMENT,
-        IMPORT,
-        BINDING,
-        ANNOTATION,
-        ANNOTATION_PARAMETER_ASSIGN,
-        ANNOTATION_PARAMETER,
-        ANNOTATION_LITERAL,
-    }
-)
-
 # --------------------------------------------------------------------------- #
 # Edge labels (reference: EdgeTypes.*, SURVEY.md §1.4)
 # --------------------------------------------------------------------------- #

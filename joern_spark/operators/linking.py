@@ -187,6 +187,14 @@ def _part(row: str, frame: pd.DataFrame, **cols: str) -> pd.DataFrame:
     return pd.DataFrame({"row": pd.Series([row] * n, dtype=object), **out})
 
 
+def _concat(frames: list[pd.DataFrame], **kw) -> pd.DataFrame:
+    """``pd.concat`` of the non-empty ``frames`` (the first one if all are
+    empty). pandas deprecates letting empty entries take part in choosing a
+    result dtype; an input without CALLs has an empty stub frame whose
+    object index would otherwise meet the methods' integer index."""
+    return pd.concat([f for f in frames if len(f)] or frames[:1], **kw)
+
+
 def link_task(pdf: pd.DataFrame) -> pd.DataFrame:
     """One link group's rows (``link_input``) -> its stubs, TYPE nodes,
     bindings, link edges and canonical map as tagged rows (``OUT_SCHEMA``)."""
@@ -196,12 +204,12 @@ def link_task(pdf: pd.DataFrame) -> pd.DataFrame:
     real = pdf[kind == M.METHOD]
     dim_real = CG.method_dimension(real)
     stubs = B.method_stub_nodes(calls, dim_real)
-    dim = pd.concat([dim_real, stubs[CG.DIM_COLS]], ignore_index=True)
+    dim = _concat([dim_real, stubs[CG.DIM_COLS]], ignore_index=True)
     decl_dim = B.type_decl_dimension(pdf, fns)
     closure = CG.inheritance_closure(pdf)
     rel = BD.binding_relation(pdf, closure)
-    methods = pd.concat([B.first_by_full_name(real).set_axis(["m_fn", "m_id"], axis=1),
-                         stubs[["m_fn", "m_id"]]])
+    methods = _concat([B.first_by_full_name(real).set_axis(["m_fn", "m_id"], axis=1),
+                       stubs[["m_fn", "m_id"]]])
     binding_rows = BD.binding_nodes_and_edges(pdf, rel, decl_dim[["fn", "decl_id"]],
                                               methods)
     canonical = canonical_symbol_map(dim)

@@ -566,38 +566,36 @@ def js_mfn_rewrites(nodes: DataFrame) -> DataFrame:
     return recover_types(nodes)[0]
 
 
-def js_inherits_parents(nodes: DataFrame,
-                        project_col: str = "repo") -> DataFrame:
+def js_inherits_parents(nodes: DataFrame) -> DataFrame:
     """(id, parent_fn) for JavaScript TYPE_DECLs with inheritsFrom entries
     — the XInheritanceFullNamePass twin (jssrc flavor: pathSep ':',
     moduleName ':program', fileExt '.js').  A parent name that is in the
     file's scope (same-file type decls + imported entities) and names a
-    TYPE_DECL anywhere in the corpus resolves to that fullName; otherwise
+    TYPE_DECL in the same repo resolves to that fullName; otherwise
     an import whose entity ends with the name synthesizes the external
     stub `<module>.js::program:<name>`; unresolvable parents keep the raw
     name.  All joins are name-keyed small dimensions (∝ |type decls| /
     |imports|) — AQE picks the strategy, nothing is force-broadcast
     (jssrc InheritanceFullNamePassTests; sequential mirror:
     oracle.js_resolve_inherits)."""
-    js = nodes.filter(F.col("lang") == "javascript") \
-        .withColumn("proj", F.col(project_col))
+    js = nodes.filter(F.col("lang") == "javascript")
     td = (js.filter((F.col("kind") == M.TYPE_DECL)
                     & F.col("inherits_from").isNotNull())
-          .select("id", "proj", "path", "full_name",
+          .select("id", "repo", "path", "full_name",
                   F.explode("inherits_from").alias("x"))
           .filter(~F.col("x").isin("ANY", "object", "")))
     imp = js.filter(F.col("kind") == M.IMPORT).select(
-        "proj", "path", F.col("full_name").alias("qn"))
+        "repo", "path", F.col("full_name").alias("qn"))
     scope = (imp.select("path", F.substring_index("qn", ":", -1).alias("x"))
              .unionByName(js.filter(F.col("kind") == M.TYPE_DECL)
                           .select("path", F.substring_index(
                               "full_name", ":", -1).alias("x")))
              .distinct())
     cands = (js.filter(F.col("kind") == M.TYPE_DECL)
-             .select("proj", F.col("name").alias("x"),
+             .select("repo", F.col("name").alias("x"),
                      F.col("full_name").alias("cand_fn")).distinct())
     resolved = (td.join(scope, ["path", "x"], "leftsemi")
-                .join(cands, ["proj", "x"])
+                .join(cands, ["repo", "x"])
                 .filter(F.col("cand_fn") != F.col("full_name"))
                 .select("id", F.col("cand_fn").alias("parent_fn"))
                 .distinct())
@@ -606,7 +604,7 @@ def js_inherits_parents(nodes: DataFrame,
     norm = F.regexp_replace(mod, r"(^|/)\./", "$1")
     for _ in range(4):
         norm = F.regexp_replace(norm, r"(^|/)[^/.][^/]*/\.\./", "$1")
-    synth = (unres.join(imp.drop("proj"), "path")
+    synth = (unres.join(imp.drop("repo"), "path")
              .filter(F.col("qn").endswith(F.concat(F.lit(":"), F.col("x"))))
              .withColumn("mod_norm", norm)
              .withColumn("ext", F.when(F.substring_index(

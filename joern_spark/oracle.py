@@ -844,7 +844,7 @@ def js_resolve_inherits(rows: list[dict]) -> dict[int, list[str]]:
               and (r.get("lang") or "") == "javascript"]
     # name lookup scoped to the owning project/repo — cross-repo name
     # resolution would be wrong at corpus scale (mirrors the Spark twin's
-    # project_col keying)
+    # repo keying)
     by_name: dict[tuple[str, str], list[str]] = {}
     for td in td_all:
         by_name.setdefault((td.get("repo") or "", td["name"]),

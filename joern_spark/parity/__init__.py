@@ -23,10 +23,14 @@ Scoring model (mirrors how the reference tests assert):
 * Relations whose reference assertion is a "contains" (not an exact set)
   are marked PARTIAL — their FP term is not counted.
 
-Two extractors produce the fact rows: a pure-Python one (this module — used
-by pytest and to render the DuckDB oracle) and a Spark one
-(``joern_spark.parity.spark_facts`` — the distributed plan). Both must
-agree row-for-row; the driver's Spark-vs-DuckDB comparison checks that.
+One extractor produces the fact rows: ``case_facts`` over one case's parse
+rows. Two data paths feed it. ``python_case_facts`` parses the case in
+process (pytest, the transcription tools and the DuckDB oracle use it);
+``joern_spark.parity.spark_facts`` builds the whole corpus the way
+production does and runs ``case_facts`` and ``score_case`` on each case's
+rows read back from the graph tables. The driver's Spark-vs-DuckDB
+comparison therefore checks the distributed build against in-process
+parsing.
 """
 
 from __future__ import annotations
@@ -151,13 +155,12 @@ def want_facts(case: dict) -> list[tuple[str, str, str]]:
             for pairs in f["want"]:
                 out.append(("flows", f["name"], serialize(pairs)))
     # dedupe, order-preserving: a transcription may legitimately list the
-    # same (rel, subj, obj) twice (e.g. both if-branches display <empty>);
-    # duplicated want rows would double-count TP in the Spark join scorer
+    # same (rel, subj, obj) twice (e.g. both if-branches display <empty>)
     return list(dict.fromkeys(out))
 
 
 # --------------------------------------------------------------------------- #
-# Pure-Python fact extraction (one case, sequential).
+# Fact extraction (one case).
 # --------------------------------------------------------------------------- #
 
 def case_sources(case: dict) -> list[tuple[str, str]]:
@@ -171,36 +174,39 @@ def case_sources(case: dict) -> list[tuple[str, str]]:
     return [(f"{base}/{rel}", content) for rel, content in files]
 
 
-def _parse_one(lang: str, path: str, content: str) -> list[dict]:
-    from joern_spark.frontends.astnode import flatten_file
-    if lang in ("c", "cpp"):
-        from joern_spark.frontends.clike import parse_c_file
-        roots = parse_c_file("parity", path, "f" * 40, lang, content)
-    elif lang == "javascript":
-        from joern_spark.frontends.jssrc import parse_js_file
-        roots = parse_js_file("parity", path, "f" * 40, content)
-    else:
-        from joern_spark.frontends.javasrc import parse_java_file
-        roots = parse_java_file("parity", path, "f" * 40, content)
-    return flatten_file("parity", path, "f" * 40, lang, content, roots)
-
-
-def _parse_rows(case: dict) -> list[dict]:
-    lang = case["lang"]
+def case_rows(files: list[list[dict]]) -> list[dict]:
+    """One case's parse rows from its files' rows, given in ``case_sources``
+    order. Each file's rows are sorted by ``node_idx``; a file's
+    ``node_idx``/``parent_idx``/``method_idx``/``ref_idx`` and its METHOD
+    rows' ``ie_src``/``ie_dst`` shift past the files before it, so the
+    occurrence-indexed subject keys count across the whole case."""
     out: list[dict] = []
     base = 0
-    for path, content in case_sources(case):
-        rows = _parse_one(lang, path, content)
+    for rows in files:
+        rows = sorted(rows, key=lambda r: r["node_idx"])
         if base:
             for r in rows:
                 r["node_idx"] += base
                 for k in ("parent_idx", "method_idx", "ref_idx"):
                     if r.get(k) is not None and r[k] >= 0:
                         r[k] += base
+                for k in ("ie_src", "ie_dst"):
+                    if r.get(k) is not None:
+                        r[k] = [i + base for i in r[k]]
         if rows:
             base = max(r["node_idx"] for r in rows) + 1
         out += rows
     return out
+
+
+def _parse_rows(case: dict) -> list[dict]:
+    """The case parsed in process the way the parse stage parses a file:
+    one repo per case, fused intraprocedural edges on the METHOD rows."""
+    from joern_spark.operators.parse import _parse_one
+    return case_rows([
+        [r for r in _parse_one(case["name"], path, "f" * 40, case["lang"],
+                               content, "", True) if not r["parse_error"]]
+        for path, content in case_sources(case)])
 
 
 def display_code(r: dict) -> str:
@@ -210,28 +216,6 @@ def display_code(r: dict) -> str:
     if r["kind"] == M.METHOD:
         return r["name"]
     return r["code"] or "<empty>"
-
-
-def _method_edges(rows: list[dict]):
-    """(cfg_edges, dom_edges, pdom_edges, cdg_edges) over all methods."""
-    from joern_spark.operators.controlflow import cfg_for_method, dominator_edges
-    cfg, dom, pdom, cdg = [], [], [], []
-    for m in [r for r in rows if r["kind"] == M.METHOD]:
-        mrows = [r for r in rows
-                 if r["method_idx"] == m["node_idx"] or r["node_idx"] == m["node_idx"]]
-        edges = cfg_for_method(mrows, m)
-        cfg += edges
-        exit_idx = next((r["node_idx"] for r in mrows
-                         if r["kind"] == M.METHOD_RETURN
-                         and r["parent_idx"] == m["node_idx"]), None)
-        if exit_idx is not None:
-            d, p, c = dominator_edges(
-                edges, m["node_idx"], exit_idx,
-                kind_of={r["node_idx"]: r["kind"] for r in mrows})
-            dom += d
-            pdom += p
-            cdg += c
-    return cfg, dom, pdom, cdg
 
 
 def _subject_keys(rows: list[dict]) -> dict[int, list[str]]:
@@ -253,10 +237,31 @@ def _subject_keys(rows: list[dict]) -> dict[int, list[str]]:
 
 
 def python_case_facts(case: dict) -> set[tuple[str, str, str]]:
-    rows = _parse_rows(case)
+    """``case_facts`` over the case parsed in process, with the sequential
+    resolver mirrors."""
+    from joern_spark.oracle import _js_recover, js_resolve_inherits
+    return case_facts(case, _parse_rows(case), _js_recover,
+                      js_resolve_inherits)
+
+
+def case_facts(case: dict, rows: list[dict], recover_js, resolve_js_parents
+               ) -> set[tuple[str, str, str]]:
+    """(relation, subj, obj) facts of one case's parse rows (``case_rows``).
+
+    The two resolver-backed relations take their resolver as an argument:
+    ``recover_js(rows)`` -> (node_idx -> recovered call methodFullName,
+    var -> type hints) for ``typerec``, and ``resolve_js_parents(rows)`` ->
+    (``id(row)`` -> resolved parents) for JavaScript ``inherits``."""
     by_idx = {r["node_idx"]: r for r in rows}
     keys = _subject_keys(rows)
-    cfg, dom, pdom, cdg = _method_edges(rows)
+    # CFG and dominator-tree edges: the METHOD rows' fused edge arrays
+    edges: dict[str, list[tuple[int, int]]] = defaultdict(list)
+    for r in rows:
+        if r["kind"] == M.METHOD and r.get("ie_src") is not None:
+            for s, d, lbl in zip(r["ie_src"], r["ie_dst"], r["ie_label"]):
+                edges[M.IE_LABELS[lbl]].append((s, d))
+    cfg, dom, pdom, cdg = (edges[lbl] for lbl in (
+        M.CFG, M.DOMINATE, M.POST_DOMINATE, M.CDG))
     out: set[tuple[str, str, str]] = set()
 
     def emit(rel, src_idx, obj):
@@ -264,7 +269,7 @@ def python_case_facts(case: dict) -> set[tuple[str, str, str]]:
             out.add((rel, k, obj))
 
     if case.get("cfg") is not None:
-        for s, d, _kind in cfg:
+        for s, d in cfg:
             emit("cfg", s, display_code(by_idx[d]))
 
     if case.get("cdg") is not None:
@@ -376,13 +381,12 @@ def python_case_facts(case: dict) -> set[tuple[str, str, str]]:
         is_js = case["lang"] == "javascript"
         ih_res: dict[int, list[str]] = {}
         if is_js:
-            from joern_spark.oracle import js_resolve_inherits
-            ih_res = js_resolve_inherits(rows)
+            ih_res = resolve_js_parents(rows)
         for r in rows:
             if r["kind"] == M.TYPE_DECL:
                 # JS parents come from the resolver only (trivial ANY/object
-                # entries drop, matching the Spark twin); other frontends
-                # keep the raw inheritsFrom entries
+                # entries drop); other frontends keep the raw inheritsFrom
+                # entries
                 ps = ih_res.get(id(r), []) if is_js \
                     else r.get("inherits_from") or []
                 for p in ps:
@@ -429,9 +433,7 @@ def python_case_facts(case: dict) -> set[tuple[str, str, str]]:
         # XTypeRecovery facts: recovered call methodFullNames keyed by the
         # call code, identifier type hints keyed by `id:<var>` with the
         # hint set sorted (flow-insensitive union, TypeRecoveryPassTests)
-        from joern_spark.oracle import _js_recover
-        rec, st = _js_recover(rows)
-        by_idx = {r["node_idx"]: r for r in rows}
+        rec, st = recover_js(rows)
         for idx, mfn in rec.items():
             out.add(("typerec", by_idx[idx]["code"], mfn))
         for var, tys in st.items():
@@ -682,15 +684,17 @@ def python_case_facts(case: dict) -> set[tuple[str, str, str]]:
 # Scoring.
 # --------------------------------------------------------------------------- #
 
-def score_case(case: dict):
-    """-> list of (lang, case, relation, tp, fp, fn)."""
+def score_case(case: dict, got_all: set[tuple[str, str, str]] | None = None):
+    """-> list of (lang, case, relation, tp, fp, fn) for the facts
+    ``got_all`` (default: ``python_case_facts(case)``)."""
     want = set()
     subjects: dict[str, set[str]] = defaultdict(set)
     for rel, s, o in want_facts(case):
         subjects[rel].add(s)
         if o != "":
             want.add((rel, s, o))
-    got_all = python_case_facts(case)
+    if got_all is None:
+        got_all = python_case_facts(case)
     got = {(rel, s, o) for rel, s, o in got_all if s in subjects.get(rel, ())}
     per: dict[str, list[int]] = defaultdict(lambda: [0, 0, 0])
     for rel, s, o in got & want:

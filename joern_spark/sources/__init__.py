@@ -81,3 +81,15 @@ def write_graph_tables(out: dict[str, DataFrame], location: str) -> None:
 def read_graph_tables(spark: SparkSession, location: str) -> dict[str, DataFrame]:
     return {t: spark.read.format(TABLE_FORMAT).load(os.path.join(location, t))
             for t in ("nodes", "edges", "canonical", "errors", "metrics")}
+
+
+def built_graph(spark: SparkSession, source: DataFrame) -> dict[str, DataFrame]:
+    """The graph tables of an ad-hoc build of ``source``, the way production
+    builds: ``build_cpg`` → ``write_graph_tables`` → ``read_graph_tables``.
+    The tables go to a scratch directory removed at interpreter exit (or by
+    a later ad-hoc build, if this process is killed first)."""
+    from joern_spark.plans.pipeline import _adhoc_scratch_dir, build_cpg
+
+    location = _adhoc_scratch_dir()
+    write_graph_tables(build_cpg(spark, source), location)
+    return read_graph_tables(spark, location)

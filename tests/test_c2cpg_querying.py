@@ -57,7 +57,7 @@ int foo(int y) {
 def cpg():
     from joern_spark.query import Cpg
     from joern_spark.session import get_spark
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
 
     spark = get_spark(master="local[4]", app="c2cpg_querying",
                       shuffle_partitions=8)

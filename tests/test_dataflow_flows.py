@@ -19,7 +19,7 @@ def spark():
 def cpg(spark):
     from joern_spark.corpus import fixture_source
     from joern_spark.query import Cpg
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
     out = built_graph(spark, fixture_source(spark))
     return Cpg(out["nodes"], out["edges"])
 

@@ -49,7 +49,7 @@ def _src(spark, rows):
 
 def test_alias_linker_typedef_and_using(spark):
     from joern_spark.operators.base import type_id
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
 
     out = built_graph(spark, _src(spark, [("src/alias.c", "c", ALIAS_C),
                                           ("src/alias.cpp", "cpp", ALIAS_CPP)]))
@@ -85,7 +85,7 @@ int plain(int v) { return v + 1; }
 
 
 def test_method_decorator_param_out_mirror(spark):
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
 
     out = built_graph(spark, _src(spark, [("src/params.c", "c", PARAMS_C)]))
     n, e = out["nodes"], out["edges"]

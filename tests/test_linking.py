@@ -118,7 +118,7 @@ def test_inheritance_closure_empty():
 def test_canonical_aliases_match_oracle(spark):
     from joern_spark import oracle as O
     from joern_spark.corpus import fixture_source
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
 
     out = built_graph(spark, fixture_source(spark))
     methods = out["nodes"].filter(F.col("kind") == M.METHOD).select(
@@ -137,7 +137,7 @@ def test_canonical_call_edge_rewrite(spark):
     """The CALL edge from UseHelper.run lands on the internal Helpers.tripler
     after canonicalization."""
     from joern_spark.corpus import fixture_source
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
 
     out = built_graph(spark, fixture_source(spark))
     n, e = out["nodes"], out["edges"]
@@ -383,3 +383,15 @@ def test_link_task_meta_data_and_namespaces():
     # no file, no <global>
     assert _out_rows(_link_task([row(M.NAMESPACE_BLOCK, 4, "p.q")]),
                      M.NAMESPACE, "name") == [("p.q",)]
+
+
+def test_link_task_without_calls_warns_nothing():
+    """One METHOD and no CALL: the stub frame is empty, and pandas warns
+    when an empty frame takes part in a concat's dtype choice."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = _link_task([row(M.METHOD, 11, name="f", full_name="f",
+                              signature="int()")])
+    assert _out_rows(out, M.METHOD, "src") == []

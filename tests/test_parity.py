@@ -5,6 +5,10 @@ C/C++/Java/JS fixture expectations. The corpus (joern_spark/parity/corpus_*)
 is hand-transcribed from the reference test suites — independent of this
 repo's frontends — so this is a real parity measurement, not
 self-validation.
+
+The distributed scorer (``parity.spark_facts.parity_scores``, the driver's
+``cpg_parity``) builds the corpus through the production path and must give
+the sequential scores exactly.
 """
 
 from __future__ import annotations
@@ -33,9 +37,10 @@ def test_parity_corpus_breadth():
     assert len(cases) >= 90, len(cases)
     # every case cites its reference source
     assert all(c.get("cite") for c in cases)
-    # names must be unique: the Spark extractor keys facts by the
-    # name-derived file path, so a duplicate merges two parses into one
-    # case and silently corrupts occurrence-indexed subjects
+    # names must be unique: each case is its own repo in the distributed
+    # build, and the scorer groups the parse rows by repo, so a duplicate
+    # merges two cases' rows into one and corrupts occurrence-indexed
+    # subjects
     from collections import Counter
     dups = [k for k, v in Counter(c["name"] for c in cases).items() if v > 1]
     assert not dups, f"duplicate case names: {dups}"
@@ -49,3 +54,42 @@ def test_parity_case_exact(case):
     rows = score_case(case)
     bad = [(rel, fp, fn) for _l, _n, rel, _tp, fp, fn in rows if fp or fn]
     assert not bad, bad
+
+
+@pytest.fixture(scope="module")
+def spark():
+    from joern_spark.session import get_spark
+    return get_spark(master="local[4]", app="test_parity", shuffle_partitions=8)
+
+
+@pytest.fixture(scope="module")
+def distributed(spark):
+    """``parity_scores`` rows and the Spark jobs they took, counted under
+    one job group."""
+    from joern_spark.parity.spark_facts import parity_scores
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test_parity_scores", "parity scores")
+    try:
+        rows = parity_scores(spark).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup("test_parity_scores"))
+
+
+def test_distributed_scores_equal_sequential(distributed):
+    """The driver's cpg_parity check: the distributed scores equal the
+    sequential summary in basis points, as its DuckDB oracle renders it."""
+    import duckdb
+
+    import __spark_entry__ as e
+    rows, _jobs = distributed
+    want = duckdb.connect().execute(e._parity_oracle_sql()).fetchall()
+    assert want and sorted(tuple(r) for r in rows) == sorted(want)
+
+
+def test_parity_scores_issue_few_jobs(distributed):
+    """One build, one write and one grouped scoring task: a fixed number of
+    jobs, not a plan per relation and a job per closure round."""
+    _rows, jobs = distributed
+    assert jobs <= 65, jobs

@@ -94,7 +94,7 @@ def test_ast_walk_jobs_do_not_grow_with_depth(spark):
     """`.ast()` over a function nested 25 deep issues as many Spark jobs as
     over one nested 3 deep: the walk is one task, not one job per level."""
     from joern_spark.query import Cpg
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
 
     src = spark.createDataFrame(
         [("fixtures/reach", "nest.c", "c" * 40, "c",

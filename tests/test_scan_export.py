@@ -20,7 +20,7 @@ def spark():
 @pytest.fixture(scope="module")
 def cpg(spark):
     from joern_spark.corpus import fixture_source
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
     return built_graph(spark, fixture_source(spark))
 
 

@@ -38,7 +38,7 @@ def _release_own_cpg(request, spark):
 
 
 def _cpg_for(spark, code: str, path: str):
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
     src = spark.createDataFrame(
         [("fixtures/querydb", path, "c" * 40, "c", code)],
         "repo string, path string, commit string, lang string, content string")
@@ -243,7 +243,7 @@ def test_run_bundles_schema(spark):
 def test_suite_findings_match_reference(spark):
     from joern_spark.scanners_c import (
         suite_expected_rows, suite_findings, suite_source_rows)
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
     src = spark.createDataFrame(
         suite_source_rows(),
         "repo string, path string, commit string, lang string, content string")

@@ -133,7 +133,7 @@ def test_file_local_and_partition_nodes(spark):
     parameter (the Java methods' ``this`` included)."""
     from collections import Counter
 
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
 
     g = built_graph(spark, _source(spark, [
         ("src/a.c", "c", "int add(int a, int b) { return a + b; }\n"),

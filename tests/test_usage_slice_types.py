@@ -84,7 +84,7 @@ def spark():
 
 
 def _build(spark, path, content):
-    from tests.graph import built_graph
+    from joern_spark.sources import built_graph
     src = spark.createDataFrame(
         [("fixtures/slicing", path, "f" * 40, "javascript", content)],
         "repo string, path string, commit string, lang string, content string")
