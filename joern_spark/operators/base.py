@@ -16,15 +16,14 @@ not a join. Where each pass runs:
   link group's rows: the passes that need the whole input — META_DATA per
   (repo, lang) and NAMESPACE per block name, a distinct each — the
   symbol-table passes (method and type-decl stubs, TYPE → TYPE_DECL REF,
-  AST/DECLARES to a parent named by fullname) and FieldAccessLinkerPass,
-  a cross-file lookup. The reference runs these as hash-map lookups inside
-  one JVM (LinkingUtil.scala:35-119). Python has no xxhash, so ids are
-  hashed JVM-side: into the task's input rows, or where
-  ``linking.link_nodes`` and ``linking.link_edges`` decode its output.
-* **Spark-side joins** (``run_base``): CAPTURE edges and the JavaScript
-  INHERITS_FROM edges (``typerecovery.js_inherits_parents``). CAPTURE
-  pairs rows of one file, yet stays a join: fusing it into the parse
-  kernel would change the METHOD rows' ``ie_*`` arrays.
+  AST/DECLARES to a parent named by fullname), FieldAccessLinkerPass, a
+  cross-file lookup, CAPTURE, a pairing of uses with declarations, and
+  the JavaScript INHERITS_FROM edges, from the supertypes
+  ``typerecovery.js_inherits_parents`` resolves. The reference runs these
+  as hash-map lookups inside one JVM (LinkingUtil.scala:35-119). Python
+  has no xxhash, so ids are hashed JVM-side: into the task's input rows,
+  or where ``linking.link_nodes`` and ``linking.link_edges`` decode its
+  output.
 """
 
 from __future__ import annotations
@@ -36,7 +35,6 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from joern_spark import model as M
 from joern_spark.operators import callgraph as CG
-from joern_spark.operators.typerecovery import js_inherits_parents
 
 NODE_COLS = [f.name for f in M.RAW_NODE_SCHEMA.fields] + M.NODE_ID_COLS
 _NODE_TYPES = {**{f.name: f.dataType for f in M.RAW_NODE_SCHEMA.fields},
@@ -108,10 +106,6 @@ def explode_edges(df: DataFrame, candidates: Column) -> DataFrame:
             .select("e.src", "e.dst", "e.label", "e.variable"))
 
 
-def _edges(df: DataFrame, src: Column, dst: Column, label: str) -> DataFrame:
-    return df.select(edge(None, src, dst, label).alias("e")).select("e.*")
-
-
 def type_id(col):
     return F.xxhash64(F.lit("TYPE"), col)
 
@@ -132,12 +126,12 @@ def namespace_id(name_col):
 # Pass 2 — TypeNodePass (x2cpg/.../frontend/TypeNodePass.scala:39-59)
 # --------------------------------------------------------------------------- #
 
-def used_type_fullnames(nodes: DataFrame, has_js: bool) -> DataFrame:
-    """All referenced type fullnames (``fn``) in ONE scan of the node table
-    (the reference collects the same set via its TypeNodePass accumulator,
-    TypeNodePass.scala:39-59). Four union branches would scan + shuffle the
-    big table four times; a per-row candidate array + explode keeps it to one
-    scan feeding one distinct. ``has_js``: the input holds JavaScript rows."""
+def used_type_fullnames(nodes: DataFrame) -> DataFrame:
+    """Every referenced type fullname (``fn``), once per parse row that
+    names it, in ONE scan of the node table (the reference collects the
+    same set via its TypeNodePass accumulator, TypeNodePass.scala:39-59): a
+    per-row candidate array + explode, no union of scans. The link task
+    drops the duplicates, so the plan holds no shuffle."""
     cand = F.concat(
         F.array(
             F.col("type_full_name"),
@@ -146,14 +140,8 @@ def used_type_fullnames(nodes: DataFrame, has_js: bool) -> DataFrame:
         ),
         F.coalesce(F.col("inherits_from"), F.array()),
     )
-    fns = nodes.select(F.explode(cand).alias("fn"))
-    if has_js:
-        # resolved/synthesized JS parent types (XInheritanceFullNamePass
-        # createTypeStub) join the universe so INHERITS_FROM edges have
-        # TYPE targets
-        fns = fns.unionByName(js_inherits_parents(nodes)
-                              .select(F.col("parent_fn").alias("fn")))
-    return fns.filter((F.col("fn") != "") & F.col("fn").isNotNull()).distinct()
+    fn = F.explode(cand).alias("fn")
+    return nodes.select(fn).filter((F.col("fn") != "") & F.col("fn").isNotNull())
 
 
 # Pass 12 — TypeEvalPass (x2cpg/.../base/TypeEvalPass.scala:9-42): projection.
@@ -217,38 +205,6 @@ def namespace_names(rows: pd.DataFrame, roots: pd.DataFrame) -> pd.DataFrame:
     if len(roots):
         names = pd.concat([pd.Series([M.GLOBAL], dtype=object), names])
     return names.drop_duplicates().to_frame("name")
-
-
-# --------------------------------------------------------------------------- #
-# CAPTURE edges — METHOD_REF → captured outer LOCAL / PARAMETER
-# (x2cpg/.../Ast.scala:104 captureEdges; closures get `<lambda>N` names per
-# Defines.scala:35). A capture is an identifier USE inside one method whose
-# REF target declaration lives in a DIFFERENT (enclosing) method; the edge
-# hangs off the closure's METHOD_REF (the METHOD's AST parent).
-# --------------------------------------------------------------------------- #
-
-def capture_edges(nodes: DataFrame) -> DataFrame:
-    uses = (nodes.filter((F.col("kind") == M.IDENTIFIER)
-                         & F.col("ref_id").isNotNull()
-                         & F.col("method_id").isNotNull())
-            .select(F.col("method_id").alias("use_mid"), "ref_id"))
-    decls = (nodes.filter(F.col("kind").isin(M.LOCAL, M.METHOD_PARAMETER_IN))
-             .select(F.col("id").alias("ref_id"),
-                     F.col("method_id").alias("decl_mid")))
-    captured = (uses.join(decls, "ref_id")
-                .filter(F.col("use_mid") != F.col("decl_mid"))
-                .select(F.col("use_mid").alias("inner_mid"), "ref_id")
-                .distinct())
-    # the closure's METHOD_REF is the inner METHOD's AST parent
-    mref_ids = nodes.filter(F.col("kind") == M.METHOD_REF).select(
-        F.col("id").alias("mref_id"))
-    inner = (nodes.filter((F.col("kind") == M.METHOD)
-                          & F.col("parent_id").isNotNull())
-             .select(F.col("id").alias("inner_mid"),
-                     F.col("parent_id").alias("mref_id"))
-             .join(mref_ids, "mref_id"))
-    return _edges(captured.join(inner, "inner_mid"),
-                  F.col("mref_id"), F.col("ref_id"), M.CAPTURE)
 
 
 # --------------------------------------------------------------------------- #
@@ -366,17 +322,35 @@ def field_access_ref_edges(rows: pd.DataFrame) -> pd.DataFrame:
     return CG.edges(j, "id", "dst", M.REF)
 
 
-def run_base(nodes: DataFrame, has_js: bool) -> tuple[DataFrame, DataFrame]:
-    """The Spark-side base passes over the parse output -> (nodes, edges):
-    the file-local node generator, CAPTURE, and the JavaScript
-    INHERITS_FROM edges (``has_js``: the input holds JavaScript rows). The
-    other passes run per parse row in ``operators.parse.derived_edges`` or
-    in the link task (see the module doc)."""
-    edges = capture_edges(nodes)
-    if has_js:
-        # JavaScript parents resolve through the XInheritanceFullNamePass
-        # twin (import/name lookup); other frontends emit resolved names
-        edges = edges.unionByName(_edges(
-            js_inherits_parents(nodes), F.col("id"),
-            type_id(F.col("parent_fn")), M.INHERITS_FROM))
-    return file_local_nodes(nodes), edges
+# --------------------------------------------------------------------------- #
+# CAPTURE edges — METHOD_REF → captured outer LOCAL / PARAMETER
+# (x2cpg/.../Ast.scala:104 captureEdges; closures get `<lambda>N` names per
+# Defines.scala:35). A capture is an identifier USE inside one method whose
+# REF target declaration lives in a DIFFERENT (enclosing) method; the edge
+# hangs off the closure's METHOD_REF (the METHOD's AST parent).
+# --------------------------------------------------------------------------- #
+
+def capture_ref_edges(rows: pd.DataFrame) -> pd.DataFrame:
+    """CAPTURE edges over a link group's IDENTIFIER, LOCAL,
+    METHOD_PARAMETER_IN, METHOD and METHOD_REF rows: one per (closure
+    METHOD, captured declaration), from the closure's METHOD_REF. Id
+    columns hold 0 for none, so a declaration outside any method never
+    captures."""
+    kind, mid = rows["kind"], rows["method_id"]
+    uses = rows.loc[(kind == M.IDENTIFIER) & (rows["ref_id"] != 0) & (mid != 0),
+                    ["method_id", "ref_id"]]
+    decls = rows.loc[kind.isin([M.LOCAL, M.METHOD_PARAMETER_IN]) & (mid != 0),
+                     ["id", "method_id"]].set_axis(["ref_id", "decl_mid"], axis=1)
+    captured = uses.merge(decls, on="ref_id")
+    captured = captured.loc[captured["method_id"] != captured["decl_mid"],
+                            ["method_id", "ref_id"]].drop_duplicates()
+    # the closure's METHOD_REF is the inner METHOD's AST parent
+    inner = rows.loc[kind == M.METHOD, ["id", "parent_id"]].set_axis(
+        ["method_id", "mref_id"], axis=1)
+    inner = inner[inner["mref_id"].isin(rows.loc[kind == M.METHOD_REF, "id"])]
+    return CG.edges(captured.merge(inner, on="method_id"), "mref_id", "ref_id",
+                    M.CAPTURE)
+
+
+# the one Spark-side base pass, under the name the benchmark's tracer patches
+run_base = file_local_nodes

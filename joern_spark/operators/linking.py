@@ -12,18 +12,22 @@ The group key is a constant for now: fullnames are one namespace over the
 whole input.
 
 The task's input is one narrow, tagged projection of the parse output
-(``link_input``): METHOD, CALL, TYPE_DECL, METHOD_REF, BINDING, MEMBER and
-NAMESPACE_BLOCK rows, each file's root row, the arguments FieldAccessLinker
-reads (every arg-1 row and the arg-2 FIELD_IDENTIFIERs), the referenced
-type fullnames and the type-recovered JS call sites. Every parse row
+(``link_input``): METHOD, CALL, TYPE_DECL, METHOD_REF, BINDING, MEMBER,
+NAMESPACE_BLOCK, LOCAL and METHOD_PARAMETER_IN rows, each file's root row,
+the arguments FieldAccessLinker reads (every arg-1 row and the arg-2
+FIELD_IDENTIFIERs), the IDENTIFIER uses with a REF target and a method
+(for CAPTURE), the referenced type fullnames (duplicates dropped in the
+task), the type-recovered JS call sites and the JS supertypes
+(``typerecovery.js_inherits_parents``). Every parse row
 appears once, in parse-output order (``pos``). Ids the task cannot hash
 itself (no xxhash in Python) are hashed JVM-side, into those rows (each
 CALL row carries the id a stub for its fullname gets, each type fullname
 its TYPE and TYPE_DECL-stub ids) or where the output is decoded. Id columns
-hold no nulls (``parent_id`` 0 stands for none), since Arrow hands a
-nullable integer column to pandas as float64, which cannot hold a 64-bit
-hash. The task emits tagged rows; ``link_nodes`` and ``link_edges`` decode
-them through one generator each, ``canonical_map`` by a filter:
+hold no nulls (``parent_id``, ``method_id`` and ``ref_id`` 0 stand for
+none), since Arrow hands a nullable integer column to pandas as float64,
+which cannot hold a 64-bit hash. The task emits tagged rows; ``link_nodes``
+and ``link_edges`` decode them through one generator each,
+``canonical_map`` by a filter:
 
 * stubs — ``base.method_stub_nodes``, ``base.type_decl_dimension``;
 * TYPE nodes with their TYPE -REF-> TYPE_DECL edges;
@@ -33,6 +37,9 @@ them through one generator each, ``canonical_map`` by a filter:
 * AST/DECLARES links to fullname-named parents
   (``base.ast_link_and_declares_edges``);
 * field-access REF edges (``base.field_access_ref_edges``);
+* CAPTURE edges (``base.capture_ref_edges``);
+* JS INHERITS_FROM edges, one per resolved supertype row, whose fullnames
+  also join the referenced type fullnames;
 * bindings — ``bindings.binding_relation`` over
   ``callgraph.inheritance_closure``;
 * CALL and METHOD_REF REF edges — ``callgraph.run_callgraph``, with the
@@ -71,6 +78,7 @@ HOT_NAME_FREQ = 100
 # row tags of the task's input and output besides the node kinds
 TYPE_NAME_ROW = "<type name>"
 TYPE_HINT_ROW = "<type hint>"
+JS_PARENT_ROW = "<js parent>"
 EDGE_ROW = "<edge>"
 CANONICAL_ROW = "<canonical>"
 
@@ -200,7 +208,11 @@ def link_task(pdf: pd.DataFrame) -> pd.DataFrame:
     bindings, link edges and canonical map as tagged rows (``OUT_SCHEMA``)."""
     kind = pdf["kind"]
     calls = pdf[kind == M.CALL]
-    fns = pdf[kind == TYPE_NAME_ROW]
+    # a JS parent row is a TYPE_DECL (id) and the fullname of a supertype,
+    # which holds its TYPE id in ref_id
+    parents = pdf[kind == JS_PARENT_ROW]
+    fns = _concat([pdf[kind == TYPE_NAME_ROW], parents.assign(id=parents["ref_id"])])
+    fns = fns[fns["full_name"].fillna("") != ""].drop_duplicates("full_name")
     real = pdf[kind == M.METHOD]
     dim_real = CG.method_dimension(real)
     stubs = B.method_stub_nodes(calls, dim_real)
@@ -217,7 +229,8 @@ def link_task(pdf: pd.DataFrame) -> pd.DataFrame:
         CG.run_callgraph(calls, pdf[kind == M.METHOD_REF], closure, rel, dim,
                          pdf[kind == TYPE_HINT_ROW]), canonical)
     edges = pd.concat([B.ast_link_and_declares_edges(pdf, decl_dim),
-                       B.field_access_ref_edges(pdf), links])
+                       B.field_access_ref_edges(pdf), B.capture_ref_edges(pdf),
+                       CG.edges(parents, "id", "ref_id", M.INHERITS_FROM), links])
     types = fns.merge(decl_dim, left_on="full_name", right_on="fn")
     roots = pdf[pdf["node_idx"] == 0]
     return pd.concat([
@@ -238,44 +251,53 @@ def link_task(pdf: pd.DataFrame) -> pd.DataFrame:
 # Spark side: the task's input projection and the decoders of its output
 # --------------------------------------------------------------------------- #
 
-def link_input(ok: DataFrame, fns: DataFrame,
-               rewrites: DataFrame | None) -> DataFrame:
+def link_input(ok: DataFrame, fns: DataFrame, rewrites: DataFrame | None,
+               parents: DataFrame | None) -> DataFrame:
     """The link task's input rows (see the module doc). ``fns`` is
     ``base.used_type_fullnames``; ``rewrites`` (id, rec_mfn) the JS
-    type-recovery rewrites, or None on JS-free input."""
+    type-recovery rewrites and ``parents`` (id, parent_fn)
+    ``typerecovery.js_inherits_parents``, both None on JS-free input."""
     k, mfn, arg = F.col("kind"), F.col("method_full_name"), F.col("arg_index")
     rows = ok.filter(k.isin(M.METHOD, M.CALL, M.TYPE_DECL, M.BINDING, M.MEMBER,
-                            M.NAMESPACE_BLOCK)
-                     | ((k == M.METHOD_REF) & (mfn != ""))
+                            M.NAMESPACE_BLOCK, M.METHOD_REF, M.LOCAL,
+                            M.METHOD_PARAMETER_IN)
+                     | ((k == M.IDENTIFIER) & F.col("ref_id").isNotNull()
+                        & F.col("method_id").isNotNull())
                      | (F.col("node_idx") == 0)
                      | ((arg == 1) & F.col("parent_id").isNotNull())
                      | ((k == M.FIELD_IDENTIFIER) & (arg == 2)))
-    rows = rows.select("kind", "id", "parent_id", "node_idx", "repo", "lang",
-                       "name", "full_name", "signature", "method_full_name",
-                       "dispatch_type", "nargs", "arg_index", "type_full_name",
-                       "canonical_name", "is_external", "ast_parent_type",
-                       "ast_parent_full_name", "inherits_from",
-                       F.monotonically_increasing_id().alias("pos"))
-    parts = [fns.select(F.lit(TYPE_NAME_ROW).alias("kind"),
-                        B.type_id(F.col("fn")).alias("id"),
-                        F.col("fn").alias("full_name"),
-                        F.xxhash64(F.lit("TYPE_DECL_STUB"), F.col("fn")).alias("stub_id"))]
+    rows = rows.select("kind", "id", "parent_id", "method_id", "ref_id",
+                       "node_idx", "repo", "lang", "name", "full_name",
+                       "signature", "method_full_name", "dispatch_type", "nargs",
+                       "arg_index", "type_full_name", "canonical_name",
+                       "is_external", "ast_parent_type", "ast_parent_full_name",
+                       "inherits_from", F.monotonically_increasing_id().alias("pos"))
+
+    def type_name(tag, fn):  # a tagged type fullname with its TYPE_DECL-stub id
+        return (F.lit(tag).alias("kind"), fn.alias("full_name"),
+                F.xxhash64(F.lit("TYPE_DECL_STUB"), fn).alias("stub_id"))
+
+    fn, pfn = F.col("fn"), F.col("parent_fn")
+    parts = [fns.select(*type_name(TYPE_NAME_ROW, fn), B.type_id(fn).alias("id"))]
     if rewrites is not None:
         rows = TR.apply_rewrites(rows, rewrites)
         parts.append(rewrites.select(F.lit(TYPE_HINT_ROW).alias("kind"), "id"))
+    if parents is not None:
+        parts.append(parents.select(*type_name(JS_PARENT_ROW, pfn), "id",
+                                    B.type_id(pfn).alias("ref_id")))
     rows = rows.withColumn("stub_id", F.when(
         k == M.CALL, F.xxhash64(F.lit("METHOD_STUB"), mfn)))
     return (reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
                    parts, rows)
-            .na.fill(0, ["parent_id", "stub_id", "pos"]))
+            .na.fill(0, ["parent_id", "method_id", "ref_id", "stub_id", "pos"]))
 
 
-def link_tail(ok: DataFrame, fns: DataFrame,
-              rewrites: DataFrame | None) -> DataFrame:
+def link_tail(ok: DataFrame, fns: DataFrame, rewrites: DataFrame | None,
+              parents: DataFrame | None) -> DataFrame:
     """The whole link tail as one grouped pandas task -> tagged rows
     (``OUT_SCHEMA``). The caller checkpoints it once; every decoder below
     reads that checkpoint."""
-    return (link_input(ok, fns, rewrites).withColumn("link_group", F.lit(0))
+    return (link_input(ok, fns, rewrites, parents).withColumn("link_group", F.lit(0))
             .groupBy("link_group").applyInPandas(link_task, OUT_SCHEMA))
 
 

@@ -194,8 +194,8 @@ def derived_edges(nodes: DataFrame) -> DataFrame:
         edge((kind == M.TYPE_DECL) & (F.col("alias_type_full_name") != ""),
              nid, type_id(F.col("alias_type_full_name")), M.ALIAS_OF),
     )
-    # the parsers resolve supertype names, except JavaScript's:
-    # base.run_base links those through the import/name lookup
+    # the parsers resolve supertype names, except JavaScript's: the link
+    # task links those through the import/name lookup
     inherits = F.transform(
         F.coalesce(F.when((kind == M.TYPE_DECL) & (F.col("lang") != "javascript"),
                           F.col("inherits_from")),

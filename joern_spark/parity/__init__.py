@@ -661,7 +661,7 @@ def case_facts(case: dict, rows: list[dict], recover_js, resolve_js_parents
     if case.get("captures") is not None:
         # (closure method name, captured declaration name) — an identifier
         # USE whose REF-target declaration lives in an enclosing method
-        # (LambdaTests.scala:121-155; base.capture_edges is the same rule)
+        # (LambdaTests.scala:121-155; base.capture_ref_edges is the same rule)
         methods = {r["node_idx"]: r for r in rows if r["kind"] == M.METHOD}
         decls = {r["node_idx"]: r for r in rows
                  if r["kind"] in (M.LOCAL, M.METHOD_PARAMETER_IN)}

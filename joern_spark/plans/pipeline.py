@@ -9,15 +9,14 @@ already sits (``operators.base`` says which pass runs where):
 1. parse (AST + fused intraprocedural passes), written once;
 2. JS type recovery and the link tail, each one grouped pandas task. The
    link tail holds stubs, bindings, call graph, canonicalization and the
-   base passes that need a distinct over the whole input or a cross-file
-   lookup (META_DATA, NAMESPACE, FieldAccessLinker); one eager checkpoint
-   runs it;
+   base passes that need a distinct over the whole input or a lookup
+   across rows (META_DATA, NAMESPACE, FieldAccessLinker, CAPTURE, the JS
+   INHERITS_FROM edges); one eager checkpoint runs it;
 3. the sink's relations, each read from those two sources through one
-   generator per source. Nodes are the parse rows, ``base.file_local_nodes``
-   over the parse stage and ``linking.link_nodes`` over the checkpoint:
-   writing them is one Spark job with no shuffle. Edges are
-   ``parse.derived_edges``, ``linking.link_edges`` and the two joins left
-   in ``base.run_base``: CAPTURE and the JavaScript INHERITS_FROM edges.
+   generator per source, with no join, distinct or shuffle: writing each
+   is one Spark job. Nodes are the parse rows, ``base.file_local_nodes``
+   over the parse stage and ``linking.link_nodes`` over the checkpoint;
+   edges are ``parse.derived_edges`` and ``linking.link_edges``.
 
 Every stage is a pure DataFrame→DataFrame function.
 
@@ -37,7 +36,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from joern_spark import model as M
 from joern_spark.operators import base as B
@@ -66,6 +65,12 @@ def _adhoc_scratch_dir() -> str:
     return d
 
 
+# the parse stage's columns, the parse rows with their ids (``with_ids``):
+# reading it back with them saves a schema-inference job
+_STAGE_SCHEMA = T.StructType(M.RAW_NODE_SCHEMA.fields
+                             + [T.StructField(c, T.LongType()) for c in M.NODE_ID_COLS])
+
+
 def _write_stage(df: DataFrame, stage_dir: str,
                  fingerprint: str | None) -> tuple[DataFrame, dict]:
     from pyspark.sql import Observation
@@ -83,7 +88,7 @@ def _write_stage(df: DataFrame, stage_dir: str,
                 "wall_sec": round(time.time() - t0, 3)}
     with open(os.path.join(path, "_manifest.json"), "w") as f:
         json.dump(manifest, f)
-    return df.sparkSession.read.parquet(path), manifest
+    return df.sparkSession.read.schema(_STAGE_SCHEMA).parquet(path), manifest
 
 
 def _resume(spark: SparkSession, stage_dir: str,
@@ -95,7 +100,7 @@ def _resume(spark: SparkSession, stage_dir: str,
             m = json.load(f)
         # a manifest without has_js cannot gate type recovery: re-parse
         if m.get("fingerprint") == fingerprint and "has_js" in m:
-            return spark.read.parquet(path), m
+            return spark.read.schema(_STAGE_SCHEMA).parquet(path), m
     return None
 
 
@@ -158,22 +163,22 @@ def build_cpg(spark: SparkSession, source: DataFrame,
     # ---- stage 2: the link tail, one grouped pandas task ---------------------
     # JS type recovery (XTypeRecovery; one grouped pandas task, checkpointed
     # once): recovered methodFullNames reach the link task, so require()-bound
-    # member calls get stubs + CALL edges (XTypeHintCallLinker analogue).
-    # JS-free input skips type recovery and the JS inheritance resolution.
+    # member calls get stubs + CALL edges (XTypeHintCallLinker analogue). The
+    # JS supertypes resolve through the XInheritanceFullNamePass twin, planned
+    # into the link checkpoint. JS-free input skips both.
     has_js = manifest["has_js"]
-    rewrites = TR.js_mfn_rewrites(ok) if has_js else None
+    rewrites, parents = ((TR.js_mfn_rewrites(ok), TR.js_inherits_parents(ok))
+                         if has_js else (None, None))
     # One eager checkpoint runs the task; its (dimension-sized) output is a
     # leaf that every consumer below reads: stubs, TYPE, BINDING, META_DATA
     # and NAMESPACE nodes, link edges with canonical CALL targets, and the
     # canonical map.
-    link = L.link_tail(ok, B.used_type_fullnames(ok, has_js),
-                       rewrites).localCheckpoint(eager=True)
+    link = L.link_tail(ok, B.used_type_fullnames(ok), rewrites,
+                       parents).localCheckpoint(eager=True)
 
     # ---- stage 3: the sink's relations, one generator per source ------------
-    extra_nodes, base_edges = B.run_base(ok, has_js)
-    all_nodes = ok.unionByName(extra_nodes).unionByName(L.link_nodes(link))
-    edges = (derived_edges(ok).unionByName(base_edges)
-             .unionByName(L.link_edges(link)))
+    all_nodes = ok.unionByName(B.run_base(ok)).unionByName(L.link_nodes(link))
+    edges = derived_edges(ok).unionByName(L.link_edges(link))
 
     timings["link_materialize_sec"] = round(time.time() - t_link, 3)
     return {"nodes": all_nodes, "edges": edges, "errors": errors,
@@ -194,17 +199,16 @@ def partition_metrics(nodes: DataFrame) -> DataFrame:
     content. The reference's analogue is the per-pass diff-graph row counts
     it logs per overlay (X2Cpg.scala:374-388); here they are queryable rows
     next to the data."""
-    per_file = nodes.filter(F.col("node_idx") == 0).select(
-        "repo", "lang", F.xxhash64("repo", "path", "commit", "sha256").alias("fh"))
-    files = per_file.groupBy("repo", "lang").agg(
-        F.count("*").alias("n_files"),
-        F.expr("bit_xor(fh)").alias("sha_rollup"))
-    counts = (nodes.groupBy("repo", "lang").agg(
+    root = F.col("node_idx") == 0
+    # every file, failed ones too, has exactly one root row
+    return nodes.groupBy("repo", "lang").agg(
+        F.count(F.when(root, 1)).alias("n_files"),
+        F.bit_xor(F.when(root, F.xxhash64("repo", "path", "commit", "sha256"))
+                  ).alias("sha_rollup"),
         F.count("*").alias("n_nodes"),
         F.sum(F.when(F.col("kind") == M.METHOD, 1).otherwise(0)).alias("n_methods"),
         F.sum(F.when(F.col("kind") == M.CALL, 1).otherwise(0)).alias("n_calls"),
-        F.sum(F.when(F.col("parse_error") != "", 1).otherwise(0)).alias("n_parse_errors")))
-    return files.join(counts, ["repo", "lang"])
+        F.sum(F.when(F.col("parse_error") != "", 1).otherwise(0)).alias("n_parse_errors"))
 
 
 def source_sha_rollup(source: DataFrame) -> DataFrame:

@@ -195,16 +195,17 @@ _LINK_COLS = ["kind", "id", "name", "full_name", "signature", "method_full_name"
               "dispatch_type", "nargs", "is_external", "ast_parent_type",
               "ast_parent_full_name", "inherits_from", "stub_id", "parent_id",
               "node_idx", "repo", "lang", "arg_index", "type_full_name",
-              "canonical_name"]
+              "canonical_name", "method_id", "ref_id"]
 
 
 def row(kind, id_, name="", full_name="", signature="", mfn="", dispatch="",
         nargs=-1, external=False, ptype="", parent="", inherits=None, stub_id=0,
-        parent_id=0, node_idx=-1, repo="", lang="", arg=-1, tfn="", cname=""):
-    """One ``linking.link_input`` row; ``parent_id`` 0 stands for none."""
+        parent_id=0, node_idx=-1, repo="", lang="", arg=-1, tfn="", cname="",
+        method_id=0, ref_id=0):
+    """One ``linking.link_input`` row; id columns hold 0 for none."""
     return (kind, id_, name, full_name, signature, mfn, dispatch, nargs,
             external, ptype, parent, inherits, stub_id, parent_id, node_idx,
-            repo, lang, arg, tfn, cname)
+            repo, lang, arg, tfn, cname, method_id, ref_id)
 
 
 def _link_task(rows):
@@ -395,3 +396,57 @@ def test_link_task_without_calls_warns_nothing():
         out = _link_task([row(M.METHOD, 11, name="f", full_name="f",
                               signature="int()")])
     assert _out_rows(out, M.METHOD, "src") == []
+
+
+def test_link_task_capture():
+    """CAPTURE from a closure's METHOD_REF to each outer LOCAL and
+    METHOD_PARAMETER_IN its body uses: once per (closure, declaration),
+    never for the closure's own locals or a declaration outside any
+    method."""
+    from joern_spark.operators.linking import EDGE_ROW
+
+    def use(id_, method, decl):
+        return row(M.IDENTIFIER, id_, method_id=method, ref_id=decl)
+
+    out = _link_task([
+        row(M.METHOD, 1, "outer", "outer"),
+        row(M.METHOD_PARAMETER_IN, 2, "p", method_id=1),
+        row(M.LOCAL, 3, "x", method_id=1),
+        # `outer` holds the closure's METHOD_REF, the closure METHOD's parent
+        row(M.METHOD_REF, 10, parent_id=1, method_id=1),
+        row(M.METHOD, 11, "<lambda>0", "<lambda>0", parent_id=10),
+        row(M.LOCAL, 12, "y", method_id=11),
+        use(13, 11, 3), use(14, 11, 3),  # two uses of x: one edge
+        use(15, 11, 2),                  # the outer parameter
+        use(16, 11, 12),                 # the closure's own local
+        # a file-level declaration has no method
+        row(M.LOCAL, 20, "g"),
+        use(21, 11, 20),
+        # a use of x in outer itself
+        use(22, 1, 3),
+    ])
+    assert _out_rows(out, EDGE_ROW, "src", "dst", "label") == [
+        (10, 2, M.CAPTURE), (10, 3, M.CAPTURE)]
+
+
+def test_link_task_js_parents():
+    """A ``<js parent>`` row (a JS TYPE_DECL, a supertype fullname and that
+    type's TYPE id) gives one INHERITS_FROM edge, and its fullname joins
+    the referenced type names: one TYPE node, whose TYPE_DECL is a stub
+    when no TYPE_DECL row declares it."""
+    from joern_spark.operators.linking import EDGE_ROW, JS_PARENT_ROW, TYPE_NAME_ROW
+
+    decl = row(M.TYPE_DECL, 100, "Q", "m.js::program:Q", inherits=["P"])
+    parent = row(JS_PARENT_ROW, 100, full_name="lib.js::program:P", stub_id=601,
+                 ref_id=501)
+    out = _link_task([decl, parent])
+    assert _out_rows(out, EDGE_ROW, "src", "dst", "label") == [
+        (100, 501, M.INHERITS_FROM)]
+    assert _out_rows(out, M.TYPE, "src", "dst", "fn") == [
+        (501, 601, "lib.js::program:P")]
+    assert _out_rows(out, M.TYPE_DECL, "src", "fn") == [(601, "lib.js::program:P")]
+    # a parse row that names the same type adds no second TYPE
+    out = _link_task([decl, parent, row(TYPE_NAME_ROW, 501, full_name="lib.js::program:P",
+                                        stub_id=601)])
+    assert _out_rows(out, M.TYPE, "src", "dst", "fn") == [
+        (501, 601, "lib.js::program:P")]

@@ -92,4 +92,4 @@ def test_parity_scores_issue_few_jobs(distributed):
     """One build, one write and one grouped scoring task: a fixed number of
     jobs, not a plan per relation and a job per closure round."""
     _rows, jobs = distributed
-    assert jobs <= 65, jobs
+    assert jobs <= 40, jobs

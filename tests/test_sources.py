@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from joern_spark import model as M
 
@@ -71,7 +72,10 @@ def test_sink_metrics_cover_parse_failures(spark, tmp_path_factory):
     want = {(r["repo"], r["lang"]): (r["n_files"], r["sha_rollup"])
             for r in source_sha_rollup(src).collect()}
     assert got == want
-    assert ("fixtures/broken", "fortran") in got
+    # the partition's only file failed to parse
+    broken = back["metrics"].filter(F.col("lang") == "fortran").collect()
+    assert [(r["repo"], r["n_files"], r["n_parse_errors"]) for r in broken] == [
+        ("fixtures/broken", 1, 1)]
 
 
 def _source(spark, rows):
@@ -106,23 +110,48 @@ def _write_jobs(spark, out, location, monkeypatch) -> dict[str, int]:
     return {t: len(st.getJobIdsForGroup(g)) for t, g in groups.items()}
 
 
-def test_nodes_write_is_one_job(spark, tmp_path, monkeypatch):
-    """The sink's nodes are the parse rows and two generators, one over the
-    parse stage and one over the link task's checkpoint. No pass needs a
-    distinct or a join there, so writing them is one Spark job for any mix
-    of languages."""
-    from joern_spark.plans.pipeline import build_cpg
-
-    src = _source(spark, [
+def _mixed_source(spark):
+    """A C, a Java and a JavaScript file; the JS classes inherit."""
+    return _source(spark, [
         ("src/a.c", "c", "int helper(int x) { return x + 1; }\n"
                          "int main() { return helper(2); }\n"),
         ("src/B.java", "java", "class A { void f() {} }\n"
                                "class B extends A { void g() { f(); } }\n"),
         ("src/m.js", "javascript", "class P {}\nclass Q extends P {}\n"
                                    "const m = require('m');\nm.run(1);\n")])
-    jobs = _write_jobs(spark, build_cpg(spark, src), str(tmp_path / "cpg"),
-                       monkeypatch)
+
+
+def test_nodes_write_is_one_job(spark, tmp_path, monkeypatch):
+    """The sink's nodes and edges are each the parse rows' and the link
+    task checkpoint's generators. No pass needs a distinct or a join there,
+    so writing either is one Spark job for any mix of languages, and the
+    metrics are one aggregate."""
+    from joern_spark.plans.pipeline import build_cpg
+
+    jobs = _write_jobs(spark, build_cpg(spark, _mixed_source(spark)),
+                       str(tmp_path / "cpg"), monkeypatch)
     assert jobs["nodes"] == 1, jobs
+    assert jobs["edges"] == 1, jobs
+    assert jobs["metrics"] <= 2, jobs
+
+
+def test_build_and_write_job_count(spark, tmp_path):
+    """A whole build and write of the mixed input, JS type recovery and
+    JS supertypes included, under one job group: the parse write, type
+    recovery, the link checkpoint and one job per table (two for the
+    metrics) — 20 jobs on Spark 4.1 with AQE."""
+    from joern_spark.plans.pipeline import build_cpg
+    from joern_spark.sources import write_graph_tables
+
+    sc = spark.sparkContext
+    src = _mixed_source(spark)
+    sc.setJobGroup("test_build_and_write", "build and write")
+    try:
+        write_graph_tables(build_cpg(spark, src), str(tmp_path / "cpg"))
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("test_build_and_write"))
+    assert jobs <= 20, jobs
 
 
 def test_file_local_and_partition_nodes(spark):

@@ -1,6 +1,7 @@
 """spark-submit entrypoint for the CPG construction pipeline: reads a source
 table, builds the graph and writes it as graph tables, then prints one JSON
-line (files, wall seconds, files/sec). Cluster usage:
+line (files, wall seconds, the Spark jobs of the build and its write,
+files/sec). Cluster usage:
 
     python tools/make_pyfiles.py                       # builds dist/joern_spark.zip
     spark-submit \
@@ -60,12 +61,16 @@ def main() -> None:
         partitions=args.repartition)
     n_files = src.count()
 
+    sc = spark.sparkContext
+    sc.setJobGroup("joern_spark_build", "build_cpg + write_graph_tables")
     t0 = time.time()
     out = build_cpg(spark, src, out_dir=args.checkpoint)
     write_graph_tables(out, args.output)
     wall = time.time() - t0
+    sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("joern_spark_build"))
     print(json.dumps({"files": n_files, "wall_sec": round(wall, 2),
-                      "files_per_sec": round(n_files / wall, 2)}))
+                      "spark_jobs": jobs, "files_per_sec": round(n_files / wall, 2)}))
     spark.stop()
 
 
